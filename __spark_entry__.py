@@ -82,14 +82,14 @@ def entry(spark: SparkSession) -> DataFrame:
 def _pages_quality_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sequali_spark.pipeline import quality_pipeline
 
-    from sequali_spark.session import spread_for_python
+    from sequali_spark.session import spread
 
     pages = _pages_from_documents(spark, sf_dir)
     # conditional small-input spread (scan bytes != compute cost; no-op
     # when the scan already decomposes), width sized to ~128 KB of
     # source bytes per task (r9): a fixed cap starved large inputs and
     # an uncapped spread made tiny inputs handshake-bound
-    pages = spread_for_python(pages, bytes_per_task=128 * 1024)
+    pages = spread(pages, bytes_per_task=128 * 1024)
     # prune INSIDE the Arrow stage: Catalyst can't push a projection
     # through mapInPandas, so declare the 5 sunk columns explicitly —
     # shipping the full 30-column metric struct (incl. scrubbed_text)
@@ -115,13 +115,13 @@ def _doc_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sequali_spark.functions.langid import get_model
     import pandas as pd
 
-    from sequali_spark.session import spread_for_python
+    from sequali_spark.session import spread
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     # conditional small-input CPU spread (no-op when the scan already
     # decomposes — never coalesces a big corpus), width sized to
-    # ~128 KB of source bytes per task (r9, see spread_for_python)
-    docs = spread_for_python(docs, bytes_per_task=128 * 1024)
+    # ~128 KB of source bytes per task (r9, see session.spread)
+    docs = spread(docs, bytes_per_task=128 * 1024)
 
     def _batches(it):
         model = get_model()
@@ -149,10 +149,10 @@ def _doc_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sequali_spark.functions.perplexity import get_model
     import pandas as pd
 
-    from sequali_spark.session import spread_for_python
+    from sequali_spark.session import spread
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    docs = spread_for_python(docs, bytes_per_task=128 * 1024)
+    docs = spread(docs, bytes_per_task=128 * 1024)
 
     def _batches(it):
         model = get_model()
@@ -211,10 +211,10 @@ def _doc_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     signal; rows-only — the kernel is Python-side)."""
     import pandas as pd
 
-    from sequali_spark.session import spread_for_python
+    from sequali_spark.session import spread
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    docs = spread_for_python(docs, bytes_per_task=128 * 1024)
+    docs = spread(docs, bytes_per_task=128 * 1024)
 
     def _batches(it):
         from sequali_spark.functions.kernels import compression_ratios
@@ -271,10 +271,10 @@ def _pages_labels_missing_columns(spark: SparkSession, sf_dir: str) -> DataFrame
     the behavior under test)."""
     from sequali_spark.pipeline import quality_pipeline
 
-    from sequali_spark.session import spread_for_python
+    from sequali_spark.session import spread
 
     pages = _pages_from_documents(spark, sf_dir).drop("html", "lang")
-    pages = spread_for_python(pages, bytes_per_task=128 * 1024)
+    pages = spread(pages, bytes_per_task=128 * 1024)
     out_cols = ["url", "lang_pred", "keep", "html_utf8"]
     m = quality_pipeline(spark, pages, repartition=False, output_columns=out_cols)
     return m.select(*out_cols).orderBy("url")

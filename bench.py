@@ -382,35 +382,6 @@ def build_compact_result(
     }
 
 
-def run_old_protocol(sf_dir: str, cpus: int, names: list[str]) -> dict:
-    """The r4/r5 sampling protocol, kept runnable so cross-round
-    comparisons stay separable from methodology changes (ADVICE r6):
-    cold sketch pin (fingerprint reuse disabled), NO untimed warmups,
-    plain best-of-3.  Run per query in a fresh session."""
-    os.environ["SEQUALI_SPARK_DISABLE_PIN_REUSE"] = "1"
-    import __spark_entry__ as entry_mod
-
-    gate = wait_for_quiet()
-    out: dict[str, dict] = {}
-    for name in names:
-        spark = _spark(cpus)
-        queries = entry_mod.queries()
-        samples = []
-        for _ in range(3):
-            t0 = time.time()
-            queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(round(time.time() - t0, 3))
-        spark.stop()
-        out[name] = {"best": min(samples), "samples": samples}
-    return {
-        "protocol": "r4r5_cold_pin_best_of_3_no_warmup",
-        "queries": out,
-        "cpus": cpus,
-        "load_gated": gate["gated"],
-        "load_avg_1m": round(os.getloadavg()[0], 2),
-    }
-
-
 SCALING_LADDER = (2, 8, 32)
 
 
@@ -509,13 +480,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--scaling", action="store_true")
     ap.add_argument("--throughput-only", action="store_true")
-    ap.add_argument(
-        "--old-protocol",
-        nargs="*",
-        metavar="QUERY",
-        help="re-record named queries (default: dedup_minhash_pairs) under "
-        "the r4/r5 protocol: cold pin, no warmups, best-of-3",
-    )
     ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     ap.add_argument("--rows", type=int, default=PIPELINE_BENCH_ROWS)
     ap.add_argument(
@@ -525,9 +489,6 @@ def main() -> None:
 
     if args.throughput_only:
         print(json.dumps(pipeline_throughput(args.cpus, args.rows)))
-    elif args.old_protocol is not None:
-        names = args.old_protocol or ["dedup_minhash_pairs"]
-        print(json.dumps(run_old_protocol(args.sf_dir, args.cpus, names)))
     elif args.scaling:
         print(json.dumps(run_scaling(args.rows)))
     else:

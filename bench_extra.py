@@ -36,11 +36,11 @@ def _timed(label: str, df, spark, n: int = 3) -> dict:
 
 
 def mode_minhash(spark, sf_dir: str) -> None:
-    """Attribute dedup_minhash_pairs time to its sub-stages."""
-    from pyspark.sql import functions as F
-
+    """Attribute dedup_minhash_pairs time to the sketch, the exact
+    collapse and the part downstream of the pinned sketch."""
     from sequali_spark.operators import dedup
     from sequali_spark.operators.textqc import load
+    from sequali_spark.runtime import pins
 
     docs = load(spark, sf_dir, "documents")
 
@@ -55,48 +55,11 @@ def mode_minhash(spark, sf_dir: str) -> None:
     # full query (uses the pin; replicates the headline entry)
     full = dedup.minhash_near_dup_pairs(spark, sf_dir)
     print(json.dumps(_timed("C full warm1", full, spark, n=1)))
-    # now pinned: sub-stages downstream of the pin
-    pinned = dedup._CACHED.get("minhash")
+    # now pinned: scanning the pin alone; J minus D approximates the
+    # candidate + verify work downstream of it
+    pinned = pins.pinned("minhash")
     if pinned is not None:
         print(json.dumps(_timed("D pinned scan", pinned, spark)))
-        bands = pinned.select("doc_id", F.posexplode("bands").alias("band_idx", "band_hash"))
-        print(json.dumps(_timed("E bands explode", bands, spark)))
-        buckets = (
-            bands.groupBy("band_idx", "band_hash")
-            .agg(
-                F.collect_list(
-                    F.struct(
-                        F.xxhash64(F.col("doc_id"), F.col("band_hash")).alias("h"),
-                        F.col("doc_id").alias("id"),
-                    )
-                ).alias("members")
-            )
-            .filter(F.size("members") >= 2)
-        )
-        print(json.dumps(_timed("F buckets agg", buckets, spark)))
-        b = buckets.select(F.expr("transform(array_sort(members), s -> s.id)").alias("ids"))
-        head = "slice(ids, 1, 256)"
-        pairs_head = (
-            f"flatten(transform({head}, (x, i) -> "
-            f"transform(slice({head}, i + 2, size({head})), y -> "
-            f"struct(least(x, y) as doc_a, greatest(x, y) as doc_b))))"
-        )
-        star = (
-            "transform(slice(ids, 257, greatest(size(ids) - 256, 0)), "
-            "x -> struct(least(ids[0], x) as doc_a, greatest(ids[0], x) as doc_b))"
-        )
-        cand = b.select(
-            F.explode(F.expr(f"concat({pairs_head}, {star})")).alias("p")
-        ).select("p.doc_a", "p.doc_b")
-        print(json.dumps(_timed("G cand expand", cand, spark)))
-        cand_d = cand.distinct()
-        print(json.dumps(_timed("H cand distinct", cand_d, spark)))
-        n_cand = cand_d.count()
-        print(json.dumps({"label": "n_candidates", "value": n_cand}))
-        verified = dedup._verify_candidates(cand, pinned, "doc_id", 0.7)
-        print(json.dumps(_timed("I verify+sort", verified, spark)))
-        n_pairs = verified.count()
-        print(json.dumps({"label": "n_pairs", "value": n_pairs}))
     print(json.dumps(_timed("J full warm", full, spark)))
 
 

@@ -381,9 +381,6 @@ def main() -> None:
         stats["paragraph_dedup"] = para_stats
     _mark("stats_collect")
     stats["phase_walls_sec"] = walls
-    from sequali_spark.operators import dedup as _dedup
-
-    stats["dedup_stage_walls_sec"] = dict(_dedup.STAGE_WALLS)
     decisions.unpersist()
     docs.unpersist()
     if args.stats:

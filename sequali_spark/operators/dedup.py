@@ -9,8 +9,6 @@ deterministic (hash-keyed, never order-dependent; SURVEY.md §4).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -19,6 +17,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from sequali_spark.operators.textqc import load
+from sequali_spark.runtime import pins
+from sequali_spark.session import spread
 
 # --- exact dedup (SQL-expressible) -----------------------------------------
 
@@ -212,253 +212,6 @@ def paragraph_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return paragraph_dedup(
         load(spark, sf_dir, "documents"), words_per_para=20
     ).orderBy("doc_id")
-
-
-from sequali_spark.session import spread_for_python as _spread_for_python
-
-# cache registry: each operator family keeps at most ONE persisted
-# intermediate alive; the next invocation releases the previous one so
-# long sessions (bench, notebooks) don't accumulate pinned blocks
-_CACHED: dict[str, DataFrame] = {}
-_CACHED_FP: dict[str, tuple] = {}
-
-# Wall-clock of the EAGER stages inside the dedup chain, keyed by stage
-# name — refreshed per dedup_keepers run (cleared at entry) so jobs can
-# surface a sub-stage breakdown in their stats JSON (the r8 curation
-# scaling-ladder evidence).  Observability only: never read by logic.
-STAGE_WALLS: dict[str, float] = {}
-
-
-def _release_prior_cache(key: str) -> None:
-    prev = _CACHED.pop(key, None)
-    _CACHED_FP.pop(key, None)
-    if prev is not None:
-        try:
-            prev.unpersist()
-        except Exception:
-            pass
-
-
-def _cache_fingerprint(source: DataFrame, *parts) -> tuple | None:
-    """Reuse fingerprint for a pinned sketch: the RAW source frame's
-    concrete file listing (Spark writers stamp every part-file with a
-    fresh job UUID, so an in-place overwrite changes the listing) plus
-    the structural parameters that shape the sketch.  None (= never
-    reuse) when the source isn't file-backed — a createDataFrame or
-    already-cached input has no listing to compare.
-
-    The listing MUST come from the raw pre-sketch frame, not the sketch
-    itself: once a prior pin is alive, CacheManager substitutes it into
-    any new plan that matches by PATH, after which the new sketch's
-    plan (and its inputFiles) reflect the stale cache rather than the
-    overwritten files — and executing such a substituted plan would
-    materialize the new pin FROM the stale one (observed r6).
-
-    The file listing alone is NOT enough (code-review r6): two
-    different queries over the same parquet — ``docs`` vs
-    ``docs.filter(...)`` — list identical files, and sharing a pin
-    between them would silently drop (or resurrect) rows.  The
-    fingerprint therefore also digests the source's CANONICALIZED
-    analyzed plan: canonicalization normalizes expression ids, so the
-    same query re-constructed in a fresh line matches, while any
-    filter/column/join difference changes the digest.  The ANALYZED
-    plan (not the executed one) is read before any action, i.e. before
-    CacheManager substitution can rewrite it, so the r6 staleness trap
-    above does not apply to it.
-
-    Two soundness hardenings (ADVICE r6): (a) the plan's toString
-    truncates each node's field list at spark.sql.debug.maxToStringFields
-    (default 25), so the digest ALSO folds in semanticHash() — a full
-    structural hash of the canonicalized tree with no string rendering
-    in the loop; two plans must collide on both to share a pin.  (b)
-    the listing carries per-file (path, length, modificationTime), not
-    names alone, so an in-place overwrite by a writer that keeps the
-    same filenames (a non-Spark writer, or object-store copy-over)
-    changes the fingerprint."""
-    try:
-        files = sorted(source.inputFiles())
-        if not files:
-            return None
-        import hashlib
-
-        qe = source._jdf.queryExecution()
-        canon = qe.analyzed().canonicalized()
-        plan_digest = (
-            hashlib.blake2b(
-                canon.toString().encode("utf-8", "replace"), digest_size=16
-            ).hexdigest(),
-            int(canon.semanticHash()),
-        )
-        stats = _batched_file_stats(source.sparkSession, files)
-    except Exception:
-        return None
-    return (tuple(stats), plan_digest, *parts)
-
-
-def _batched_file_stats(spark: SparkSession, files: list[str]) -> list[tuple]:
-    """(path, length, mtime_ms) for every file with O(#directories)
-    driver round-trips, not O(#files) (ADVICE r7: per-file py4j
-    getFileStatus on a thousand-part corpus — or an object store where
-    each status is a remote HEAD — can cost more than the ~0.9 s re-pin
-    the fingerprint exists to avoid, and it runs on every pin attempt).
-
-    Local paths (the only kind in-sandbox) stat via os.stat — zero JVM
-    traffic.  Remote filesystems do ONE FileSystem.listStatus per
-    parent directory (object-store LIST pages ~1000 keys per RPC),
-    marshalled back in a single Arrays.toString round-trip and parsed
-    from FileStatus.toString (``path=..; length=..;
-    modification_time=..`` — stable across Hadoop 2/3); any file the
-    parse misses falls back to a direct per-file stat.  Consistency
-    only matters WITHIN this helper (fingerprints are compared to
-    fingerprints), so the os.stat/Java mtime rounding difference is
-    irrelevant: a given path always goes down the same branch."""
-    from urllib.parse import unquote, urlparse
-
-    local, remote = [], []
-    for f in files:
-        u = urlparse(f)
-        if u.scheme in ("", "file"):
-            local.append((f, unquote(u.path)))
-        else:
-            remote.append(f)
-    by_file: dict[str, tuple[int, int]] = {}
-    for f, p in local:
-        st = os.stat(p)
-        by_file[f] = (int(st.st_size), int(st.st_mtime * 1000))
-    if remote:
-        import re
-
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        by_parent: dict[str, list[str]] = {}
-        for f in remote:
-            by_parent.setdefault(f.rsplit("/", 1)[0], []).append(f)
-        pat = re.compile(
-            r"path=([^;]+);.*?length=(\d+);.*?modification_time=(\d+)", re.S
-        )
-        for parent, members in by_parent.items():
-            pp = jvm.org.apache.hadoop.fs.Path(parent)
-            fs = pp.getFileSystem(hconf)
-            listing = jvm.java.util.Arrays.toString(fs.listStatus(pp))
-            # match by basename: Path.toString normalizes the URI
-            # (file:///x prints file:/x) so full-URI keys don't align
-            found = {
-                m.group(1).rsplit("/", 1)[-1]: (int(m.group(2)), int(m.group(3)))
-                for m in pat.finditer(listing)
-            }
-            for f in members:
-                base = f.rsplit("/", 1)[-1]
-                if base in found:
-                    by_file[f] = found[base]
-                else:
-                    p = jvm.org.apache.hadoop.fs.Path(f)
-                    st = p.getFileSystem(hconf).getFileStatus(p)
-                    by_file[f] = (int(st.getLen()), int(st.getModificationTime()))
-    return [(f, *by_file[f]) for f in files]
-
-
-def _persist_pinned(
-    key: str, df: DataFrame, fingerprint: tuple | None = None
-) -> DataFrame:
-    """Persist + EAGERLY materialize a sketch frame under the cache
-    registry.  The eager count() is load-bearing, not a warmup: the
-    downstream verify stage reads the frame from broadcast-exchange
-    futures that Spark launches CONCURRENTLY with the main job — on a
-    cold cache they all race and each recomputes the full Python sketch
-    stage (measured r5: 4 duplicate 32-task runs, ~4x the sketch
-    core-seconds).  Pinning the cache first makes every downstream read
-    a cache hit.  (The production dedup job goes further and
-    checkpoints the frame to parquet — jobs/run_dedup.py.)
-
-    If ``fingerprint`` (see _cache_fingerprint: source file listing +
-    structural params) matches the one recorded at the previous pin,
-    the previously pinned frame is returned as-is: re-constructing the
-    same query (a bench loop, a notebook cell re-run) must not release
-    + re-persist + re-run the Python sketch stage for byte-identical
-    data (measured r6: the re-pin was ~0.9 s of the 3 s
-    dedup_minhash_pairs sample, all of it recomputing identical
-    signatures).  The decision deliberately never inspects the incoming
-    frame's plan — see _cache_fingerprint for why plan-level checks
-    (sameResult / inputFiles on the SKETCH) are unsound while a prior
-    pin is alive.  ``fingerprint=None`` always refreshes (the pre-r6
-    behavior; SEQUALI_SPARK_DISABLE_PIN_REUSE=1 forces it globally —
-    the old-protocol bench knob, see BENCH/BASELINE.md r7)."""
-    if os.environ.get("SEQUALI_SPARK_DISABLE_PIN_REUSE"):
-        fingerprint = None
-    if (
-        fingerprint is not None
-        and key in _CACHED
-        and _CACHED_FP.get(key) == fingerprint
-    ):
-        prev = _CACHED[key]
-        # the registry outlives Spark sessions (module global): a pin
-        # from a stopped/replaced session must refresh, not be handed
-        # back to die on first use (code-review r6).  Liveness = the
-        # pinned frame's session is the one the incoming frame runs on
-        # and its SparkContext is not stopped; any py4j failure counts
-        # as dead.
-        try:
-            same_session = prev.sparkSession._jsparkSession.equals(
-                df.sparkSession._jsparkSession
-            )
-            alive = same_session and not prev.sparkSession._jsc.sc().isStopped()
-        except Exception:
-            alive = False
-        if alive:
-            return prev
-    _release_prior_cache(key)
-    # materialize via a noop sink, not count(): count() plans a partial
-    # + final aggregation (an extra exchange and AQE query stage); the
-    # noop write computes and caches every partition in ONE stage.
-    #
-    # The materialization runs with AQE's byte-based coalescing
-    # (parallelismFirst=false) SCOPED to this one write: the cached
-    # block layout is fixed by this first execution, and the default
-    # parallelism-first policy freezes a tiny sketch into
-    # shuffle.partitions near-empty blocks — every downstream consumer
-    # (bands explode, each broadcast build) then pays a per-block fetch
-    # cost 32x over (measured r6: ~20 ms/block; a 5 KB 32-block cache
-    # made each verify broadcast build ~600 ms).  Byte-sized blocks give
-    # the same frame in ceil(bytes / advisory) blocks — at corpus scale
-    # the two policies agree, this only changes the small-input floor.
-    # (The r5 global parallelismFirst=false revert was about SHARED
-    # memory pressure across concurrent heavy stages — a one-off
-    # materialization of an already-reduced sketch is not that case.)
-    sess = df.sparkSession
-    scoped = {
-        # byte-based coalescing for the cached layout (see above)
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
-        # cached plans compile NON-adaptively by default — without this
-        # AQE never sees the cached plan's shuffles and the coalescing
-        # policy above is a no-op (the cache freezes at
-        # shuffle.partitions blocks regardless)
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
-    }
-    prev = {k: sess.conf.get(k, None) for k in scoped}
-    for k, v in scoped.items():
-        sess.conf.set(k, v)
-    try:
-        df = df.persist()
-        _CACHED[key] = df
-        # materialize FIRST, record the fingerprint ONLY on success
-        # (ADVICE r6): a fingerprint pointing at a never-materialized
-        # pin would send the next identical call down the reuse path
-        # and hand every downstream consumer an unpinned frame — the
-        # exact duplicate-stage pathology the eager write prevents.
-        import time as _time
-
-        _t0 = _time.time()
-        df.write.format("noop").mode("overwrite").save()
-        STAGE_WALLS[f"pin_{key}"] = round(_time.time() - _t0, 2)
-        if fingerprint is not None:
-            _CACHED_FP[key] = fingerprint
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                sess.conf.unset(k)
-            else:
-                sess.conf.set(k, v)
-    return df
 
 
 def _with_digest(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -756,9 +509,9 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id", text_col: str = 
     # bound-free while the 50k-doc sf1.0 corpus sketches on every core.
     # At production scale row-group splits exceed cores and the spread
     # never applies.
-    return _spread_for_python(
-        prepared, bytes_per_task=64 * 1024
-    ).mapInPandas(_batches, schema=schema)
+    return spread(prepared, bytes_per_task=64 * 1024).mapInPandas(
+        _batches, schema=schema
+    )
 
 
 def collapse_exact_reps(sketch: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -825,9 +578,7 @@ def exact_rep_labeled_sigs(
     plus one)."""
     sigs = minhash_signatures(docs, id_col=id_col, text_col=text_col)
     digests = _with_digest(docs, id_col, text_col).select(id_col, "digest")
-    _release_prior_cache("rep_digests")
-    digests = digests.persist()
-    _CACHED["rep_digests"] = digests
+    digests = pins.hold("rep_digests", digests)
     reps = digests.groupBy("digest").agg(F.min(id_col).alias("rep"))
     rep_map = digests.join(reps.hint("shuffle_hash"), "digest").select(
         id_col, "rep"
@@ -901,11 +652,11 @@ def minhash_pairs_for(
         sigs = sigs.join(
             reps.hint("shuffle_hash"), id_col, "left_semi"
         ).drop("digest")
-    # fingerprint from the RAW docs frame (see _cache_fingerprint) plus
+    # fingerprint from the RAW docs frame (see pins.fingerprint) plus
     # every structural parameter that shapes the pinned sketch; threshold
     # and bucket/ring knobs apply downstream of the pin and are excluded
     # on purpose so a threshold sweep over one corpus hits the pin
-    fp = _cache_fingerprint(docs, "minhash", id_col, text_col, collapse_exact)
+    fp = pins.pin_key(docs, "minhash", id_col, text_col, collapse_exact)
     return minhash_pairs_from_sigs(
         sigs,
         id_col=id_col,
@@ -989,15 +740,15 @@ def _ring_edges(
     # and the unpersist below releases it; the cap itself protects the
     # BROADCAST, which is the actual failure mode.
     max_overcap = 2_000_000  # ~50 MB broadcast at ~24 B/row
-    # registry-pinned via _persist_pinned (NOT a hand-rolled persist):
-    # the registry means the NEXT ring call releases this one — the
-    # returned frame is lazy, so there is no in-function point where
-    # unpersisting on success is safe — and _persist_pinned's scoped
-    # byte-based-coalescing confs keep this tiny frame out of
-    # shuffle.partitions near-empty cached blocks (the measured
-    # ~20 ms/block broadcast-build penalty, see _persist_pinned)
+    # pinned via pins.pin (NOT a hand-rolled persist): the registry
+    # means the NEXT ring call releases this one — the returned frame is
+    # lazy, so there is no in-function point where unpersisting on
+    # success is safe — and pin's scoped byte-based-coalescing confs
+    # keep this tiny frame out of shuffle.partitions near-empty cached
+    # blocks (the measured ~20 ms/block broadcast-build penalty, see
+    # pins.pin)
     try:
-        over_cap = _persist_pinned("ring_overcap", over_cap)
+        over_cap = pins.pin("ring_overcap", over_cap)
         if over_cap.count() > max_overcap:
             raise ValueError(
                 f"more than {max_overcap} band buckets exceed ring_cap="
@@ -1006,7 +757,7 @@ def _ring_edges(
                 "duplicates first or raise ring_cap"
             )
     except ValueError:
-        _release_prior_cache("ring_overcap")
+        pins.release("ring_overcap")
         raise
     counted = exploded.join(F.broadcast(over_cap), key_cols, "left")
     # different literal seed than the ordering hash: salt and order must
@@ -1092,7 +843,7 @@ def minhash_pairs_from_sigs(
     pin_cols = [id_col, "signature", "bands"] + (
         ["packed"] if "packed" in sigs.columns else []
     )
-    sigs = _persist_pinned(
+    sigs = pins.pin(
         "minhash",
         sigs.select(*pin_cols),
         fingerprint=_pin_fingerprint,
@@ -1364,12 +1115,12 @@ def simhash_near_dup_pairs(
     # collapse_exact_reps aggregation over the ~50 B/doc fingerprint
     # frame — the text column never shuffles
     prepared = _with_digest(d, "doc_id", "text")
-    fps = _persist_pinned(
+    fps = pins.pin(
         "simhash",
         collapse_exact_reps(
-            _spread_for_python(prepared).mapInPandas(_batches, schema=schema)
+            spread(prepared).mapInPandas(_batches, schema=schema)
         ).filter(F.col("simhash") != 0),  # degenerate: empty/tiny docs
-        fingerprint=_cache_fingerprint(d, "simhash"),
+        fingerprint=pins.pin_key(d, "simhash"),
     )
     n_blocks = max_hamming + 1
     bounds = [round(i * 64 / n_blocks) for i in range(n_blocks + 1)]
@@ -1549,7 +1300,6 @@ def connected_components(
     bool} — the rounds-to-convergence evidence an at-scale run records
     (rounds = graph diameter of the dup clusters).
     """
-    import time as _time
     import warnings
     # Materialize the INPUT once before the union below embeds it twice.
     # ``pairs`` is typically the expensive LSH-verify chain; the
@@ -1560,7 +1310,7 @@ def connected_components(
     # below it each ran 2-4x, ~2x the whole decision pipeline's shuffle
     # (12.4 GB where ~6 GB is inherent).  One eager noop-sink pass pins
     # the (small, verified-pairs-only) frame; both union branches then
-    # read the cache.  Same discipline as _persist_pinned.
+    # read the cache.  Same discipline as pins.pin.
     pairs = pairs.select("doc_a", "doc_b").persist()
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
@@ -1576,10 +1326,7 @@ def connected_components(
     # writes used to precede the try and an OOM there leaked them for
     # the session's lifetime)
     try:
-        _t0 = _time.time()
         pairs.write.format("noop").mode("overwrite").save()
-        STAGE_WALLS["cc_pairs_materialize"] = round(_time.time() - _t0, 2)
-        _t0 = _time.time()
         labels = (
             edges.select(F.col("src").alias("doc_id"))
             .distinct()
@@ -1622,8 +1369,6 @@ def connected_components(
             labels = updated.drop("_changed")
             if changed == 0:
                 break
-        STAGE_WALLS["cc_rounds"] = round(_time.time() - _t0, 2)
-        STAGE_WALLS["cc_nrounds"] = rounds
         if stats is not None:
             stats["rounds"] = rounds
             stats["converged"] = changed == 0
@@ -1667,10 +1412,7 @@ def dedup_keepers(
     (jobs/run_curation.py) share one scan across operators."""
     if docs is None:
         docs = load(spark, sf_dir, "documents")
-    STAGE_WALLS.clear()
-    _release_prior_cache("keepers")
-    labeled = exact_rep_labeled_sigs(docs).persist()
-    _CACHED["keepers"] = labeled
+    labeled = pins.hold("keepers", exact_rep_labeled_sigs(docs))
     return keepers_from_labeled_sigs(labeled, threshold=threshold)
 
 
@@ -1766,7 +1508,7 @@ def winnow_postings(
                 }
             )
 
-    return _spread_for_python(df.select(id_col, text_col)).mapInPandas(
+    return spread(df.select(id_col, text_col)).mapInPandas(
         _batches, schema=schema
     )
 

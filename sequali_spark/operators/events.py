@@ -56,7 +56,7 @@ def hourly_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-hour: events, distinct users, exact value sum in integer
     cents — the A17 time-slot report (distinct users ≙ distinct
     channels)."""
-    from sequali_spark.session import spread_for_compute
+    from sequali_spark.session import spread
 
     # r9 (three changes, value-identical, mirror-swept):
     # 1. Spread: the events table is one parquet row group, so the whole
@@ -72,7 +72,7 @@ def hourly_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     #    remainder) component sums in plain codegen longs, floor(x*100)
     #    recomposed with integer arithmetic — exact across both levels
     #    because component sums of exact integers are exact.
-    e = spread_for_compute(load(spark, sf_dir, "events"), key="event_id")
+    e = spread(load(spark, sf_dir, "events"), key="event_id")
     per_user = (
         _with_value_split(e, "date_trunc('hour', ts) as hour", "user_id")
         .groupBy("hour", "user_id")
@@ -102,9 +102,9 @@ def event_type_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r9: same three changes as hourly_report (spread + two-level
     # aggregation instead of the countDistinct Expand + long-split
     # value sum); value-identical, mirror-swept
-    from sequali_spark.session import spread_for_compute
+    from sequali_spark.session import spread
 
-    e = spread_for_compute(load(spark, sf_dir, "events"), key="event_id")
+    e = spread(load(spark, sf_dir, "events"), key="event_id")
     per_user = (
         _with_value_split(e, "event_type", "user_id")
         .groupBy("event_type", "user_id")

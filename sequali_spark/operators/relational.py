@@ -45,7 +45,7 @@ def _cents12(dec_sum: F.Column) -> F.Column:
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-style pricing summary; exact decimal sums (map-side
     partial agg + final agg, AQE-coalesced)."""
-    from sequali_spark.session import spread_for_compute
+    from sequali_spark.session import spread
 
     li = load(spark, sf_dir, "lineitem")
     # r9 (two changes, both measured at sf1.0 — 1.065 -> 0.756 s, value-
@@ -55,7 +55,7 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     #    sf1.0), so the partial aggregation ran 6-wide on 32 cores.
     #    Project to the consumed columns FIRST so the spread exchange
     #    ships only them, hash-spread on the high-cardinality order key
-    #    (no-op once row groups >= cores; session.spread_for_compute).
+    #    (no-op once row groups >= cores; session.spread).
     # 2. Long-split exact sums: the decimal(28,6)/(37,12) sum buffers
     #    fall off Spark's compact-long fast path, and the per-row
     #    decimal adds dominated the stage.  Each value is converted ONCE
@@ -92,7 +92,7 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        spread_for_compute(sel, key="l_orderkey")
+        spread(sel, key="l_orderkey")
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.sum("qu").alias("squ"), F.sum("qr").alias("sqr"),

@@ -42,7 +42,7 @@ def brute_force_topk_for(e: DataFrame, n_queries: int = 10, k: int = 5) -> DataF
     product, per-query row_number — the baseline every ANN variant is
     measured against.  At scale: queries are always the broadcast side;
     the corpus side streams, no shuffle until the tiny top-k agg."""
-    from sequali_spark.session import spread_for_compute
+    from sequali_spark.session import spread
 
     queries = e.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
@@ -50,7 +50,7 @@ def brute_force_topk_for(e: DataFrame, n_queries: int = 10, k: int = 5) -> DataF
     # r9: the corpus side streams through a BroadcastNestedLoopJoin and
     # pays the interpreted per-pair dot product — spread the (one-row-
     # group) scan so that work is cluster-wide, queries stay broadcast
-    corpus = spread_for_compute(e, key="vec_id")
+    corpus = spread(e, key="vec_id")
     pairs = corpus.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
     return _rerank_topk(pairs, k)
 
@@ -197,16 +197,14 @@ def embedding_near_dup_pairs(
     b = e.select("vec_id", "embedding").mapInPandas(
         _bucketize_kernel(planes), schema="vec_id long, bucket long"
     )
-    # registry-persist the slim (vec_id, bucket) kernel output (r8
-    # review): it feeds the over-cap counts AND both legs of the
-    # self-join through eb — unpersisted, the Python bucketize kernel
-    # re-runs over the full embeddings table once per subtree (the
-    # exchanges differ, so ReuseExchange cannot merge them)
-    from sequali_spark.operators.dedup import _CACHED, _release_prior_cache
+    # hold the slim (vec_id, bucket) kernel output (r8 review): it feeds
+    # the over-cap counts AND both legs of the self-join through eb —
+    # unpersisted, the Python bucketize kernel re-runs over the full
+    # embeddings table once per subtree (the exchanges differ, so
+    # ReuseExchange cannot merge them)
+    from sequali_spark.runtime import pins
 
-    _release_prior_cache("emb_buckets")
-    b = b.persist()
-    _CACHED["emb_buckets"] = b
+    b = pins.hold("emb_buckets", b)
     eb = e.join(b, "vec_id").select("vec_id", "embedding", "bucket")
     if max_bucket:
         # over-cap buckets via map-side-combining groupBy + anti-join,

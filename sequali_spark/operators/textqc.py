@@ -53,11 +53,11 @@ def char_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r9: char-class counts via translate (see _count_chars) and the
     single-row-group scan spread across the cluster before the battery
-    runs (see session.spread_for_compute) — the projection is the cost,
+    runs (see session.spread) — the projection is the cost,
     not the scan bytes."""
-    from sequali_spark.session import spread_for_compute
+    from sequali_spark.session import spread
 
-    d = spread_for_compute(load(spark, sf_dir, "documents"), key="doc_id")
+    d = spread(load(spark, sf_dir, "documents"), key="doc_id")
     n = F.length("text")
     return (
         d.filter(n > 0)
@@ -74,9 +74,9 @@ def char_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def word_stats_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokens + mean word length via split arithmetic (P12/A13 analogue)."""
-    from sequali_spark.session import spread_for_compute
+    from sequali_spark.session import spread
 
-    d = spread_for_compute(load(spark, sf_dir, "documents"), key="doc_id")
+    d = spread(load(spark, sf_dir, "documents"), key="doc_id")
     n = F.length("text")
     spaces = _count_chars(" ")
     n_words = spaces + 1
@@ -142,9 +142,9 @@ def substring_scan(spark: SparkSession, sf_dir: str, probe: str = "data") -> Dat
     """Exact substring search: first occurrence + total count per doc —
     the AdapterCounter A6 analogue (first-match semantics = instr;
     reference _qcmodule.c:2643-2672 records first occurrence only)."""
-    from sequali_spark.session import spread_for_compute
+    from sequali_spark.session import spread
 
-    d = spread_for_compute(load(spark, sf_dir, "documents"), key="doc_id")
+    d = spread(load(spark, sf_dir, "documents"), key="doc_id")
     first_pos = F.instr(F.col("text"), probe)
     # literal replace (not regexp_replace): probes may contain regex
     # metacharacters; the DuckDB oracle's replace() is literal too
@@ -188,9 +188,9 @@ def quality_score(
     collapsed to one deterministic integer score (keep iff all gates pass),
     the SQL twin of the pipeline's keep column.  ``docs`` lets a caller
     (jobs/run_curation.py) share one scan across operators."""
-    from sequali_spark.session import spread_for_compute
+    from sequali_spark.session import spread
 
-    d = docs if docs is not None else spread_for_compute(
+    d = docs if docs is not None else spread(
         load(spark, sf_dir, "documents"), key="doc_id"
     )
     n = F.length("text")
@@ -219,9 +219,9 @@ def overrep_shingles_sql(
     doc — OverrepresentedSequences A8/A9 in pure relational form:
     sequence() -> transform() -> array_distinct -> explode -> groupBy.
     """
-    from sequali_spark.session import spread_for_compute
+    from sequali_spark.session import spread
 
-    d = spread_for_compute(load(spark, sf_dir, "documents"), key="doc_id")
+    d = spread(load(spark, sf_dir, "documents"), key="doc_id")
     idx = F.sequence(F.lit(1), F.greatest(F.length("text") - (k - 1), F.lit(0)), F.lit(k))
     shingles = F.array_distinct(
         F.filter(
@@ -246,9 +246,9 @@ def position_char_profile(spark: SparkSession, sf_dir: str, max_pos: int = 100, 
     _qcmodule.c:1786-1803: count[pos][class] over the read), realized as
     explode(position) -> groupBy(bucket): Catalyst's partial+final agg
     plays the reference's uint16-staging/uint64-flush two-level scheme."""
-    from sequali_spark.session import spread_for_compute
+    from sequali_spark.session import spread
 
-    d = spread_for_compute(load(spark, sf_dir, "documents"), key="doc_id")
+    d = spread(load(spark, sf_dir, "documents"), key="doc_id")
     # empty text would make sequence(1, 0) step DOWNWARD to [1, 0] and
     # emit phantom positions — filter first (the oracle mirrors this)
     d = d.filter(F.length("text") > 0)
@@ -363,9 +363,9 @@ def alpha_ratio_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus histogram of per-doc alpha ratio (2%-wide buckets) — the
     GC-content histogram transplant (A4, reference _qcmodule.c:2045-2058:
     hist[round(100*gc)] += 1)."""
-    from sequali_spark.session import spread_for_compute
+    from sequali_spark.session import spread
 
-    d = spread_for_compute(load(spark, sf_dir, "documents"), key="doc_id")
+    d = spread(load(spark, sf_dir, "documents"), key="doc_id")
     n = F.length("text")
     alpha_bps = F.floor(F.lit(10000) * _count_chars(_ALPHA_LC) / n).cast("long")
     bucket = F.floor(alpha_bps / 200).cast("long")
@@ -440,9 +440,9 @@ def token_count_bpeish(spark: SparkSession, sf_dir: str) -> DataFrame:
     (letter runs | digit runs | single non-alnum) counted JVM-side —
     the standard pre-tokenizer shape, giving a corpus token budget
     estimate per source."""
-    from sequali_spark.session import spread_for_compute
+    from sequali_spark.session import spread
 
-    d = spread_for_compute(load(spark, sf_dir, "documents"), key="doc_id")
+    d = spread(load(spark, sf_dir, "documents"), key="doc_id")
     toks = F.size(F.regexp_extract_all("text", F.lit("[a-z]+|[0-9]+|[^a-z0-9 ]"), 0))
     ws_toks = _count_chars(" ") + 1
     return (
@@ -563,9 +563,9 @@ def source_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     basis points — the training-mixture curation step downstream of
     quality filtering.  Integer arithmetic end-to-end so both engines
     hash identically."""
-    from sequali_spark.session import spread_for_compute
+    from sequali_spark.session import spread
 
-    d = spread_for_compute(
+    d = spread(
         load(spark, sf_dir, "documents"), key="doc_id"
     ).filter(F.col("text").isNotNull())
     n = F.length("text")
@@ -688,9 +688,9 @@ def ppl_surprisal_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar total attached via a broadcast 1-row cross join.  Bit sums
     stay in int64: tok_bits <= 63, so sum < 63 * doc_tokens — exact for
     any doc under ~1.4e17 tokens."""
-    from sequali_spark.session import spread_for_compute
+    from sequali_spark.session import spread
 
-    d = spread_for_compute(load(spark, sf_dir, "documents"), key="doc_id")
+    d = spread(load(spark, sf_dir, "documents"), key="doc_id")
     toks = d.filter(F.length("text") > 0).select(
         "doc_id", "source", F.explode(F.split("text", " ", -1)).alias("tok")
     )
@@ -749,10 +749,10 @@ def benchmark_decontaminate(
     winnow-fingerprint equi-join (dedup.winnow_overlap_pairs): any
     shared passage of length >= w+k-1 guarantees a shared fingerprint,
     turning decontamination into a hash join."""
-    from sequali_spark.session import spread_for_compute
+    from sequali_spark.session import spread
 
     hits = decontamination_hits(
-        spread_for_compute(load(spark, sf_dir, "documents"), key="doc_id"),
+        spread(load(spark, sf_dir, "documents"), key="doc_id"),
         n_probes=n_probes,
         probe_len=probe_len,
         min_chars=min_chars,
@@ -969,9 +969,9 @@ def gopher_line_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM-side: one split per axis feeds higher-order array filters, so
     the plan is a single WholeStageCodegen projection over the scan —
     no shuffle, no UDF, trivially linear at 100 TB."""
-    from sequali_spark.session import spread_for_compute
+    from sequali_spark.session import spread
 
-    d = spread_for_compute(load(spark, sf_dir, "documents"), key="doc_id")
+    d = spread(load(spark, sf_dir, "documents"), key="doc_id")
     n = F.length("text")
     lines = F.split("text", "\n")
     words = F.split("text", " ")
@@ -1015,9 +1015,9 @@ def dup_line_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates keyed by doc_id(+line), so the plan is skew-safe at any
     corpus size (a pathological single-doc mega-line set still spreads
     across tasks by line hash before the per-doc rollup)."""
-    from sequali_spark.session import spread_for_compute
+    from sequali_spark.session import spread
 
-    d = spread_for_compute(load(spark, sf_dir, "documents"), key="doc_id")
+    d = spread(load(spark, sf_dir, "documents"), key="doc_id")
     lines = (
         d.filter(F.length("text") > 0)
         .select("doc_id", F.explode(F.split("text", "\n")).alias("line"))
@@ -1052,9 +1052,9 @@ def top_bigram_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combining hash aggregates keyed (doc_id, gram) -> doc_id.
     No window, no UDF; a boilerplate mega-doc spreads across tasks by
     gram hash before the per-doc rollup."""
-    from sequali_spark.session import spread_for_compute
+    from sequali_spark.session import spread
 
-    d = spread_for_compute(load(spark, sf_dir, "documents"), key="doc_id")
+    d = spread(load(spark, sf_dir, "documents"), key="doc_id")
     words = F.split("text", " ")
     n_w = F.size(words)
     # sequence(0, -1) would generate a DESCENDING range, so docs with a
@@ -1096,9 +1096,9 @@ def dup_ngram_mass(spark: SparkSession, sf_dir: str, n: int = 5) -> DataFrame:
     once / total gram mass.  Same plan shape as top_bigram_mass: grams
     built JVM-side, exploded, two map-side-combining hash aggregates —
     no window, no UDF, skew-safe by gram hash."""
-    from sequali_spark.session import spread_for_compute
+    from sequali_spark.session import spread
 
-    d = spread_for_compute(load(spark, sf_dir, "documents"), key="doc_id")
+    d = spread(load(spark, sf_dir, "documents"), key="doc_id")
     words = F.split("text", " ")
     n_w = F.size(words)
     base = (

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sequali_spark.runtime import pins
+
 
 def fs_exists(spark: SparkSession, path: str) -> bool:
     """Existence check through the Hadoop FileSystem API (driver-local
@@ -43,51 +45,21 @@ def content_fingerprint(df: DataFrame, *cols: str) -> str:
 
 
 def file_fingerprint(df: DataFrame, *cols: str) -> str:
-    """Input fingerprint WITHOUT a data scan: blake2b over the sorted
-    (path, length, mtime) listing of the frame's backing files, plus
-    the column names whose change must invalidate.
-
-    Sound for parquet/ORC inputs because their part-files are immutable
-    — any legitimate rewrite (Spark overwrite, compaction, upsert via a
-    table format) produces different file names or at minimum different
-    (length, mtime); the same trust model as the sketch-pin fingerprint
-    (operators/dedup._batched_file_stats, hardened r6/r7).  False
-    invalidation (byte-identical content rewritten in place) costs a
-    recompute, never a wrong reuse.  Falls back to content_fingerprint
-    when the frame is not file-backed (createDataFrame, cached views) —
-    there is no listing to trust, so the scan is the honest price.
-
-    ORDERING TRAP: call this BEFORE df.persist().  Registering a cache
-    substitutes an InMemoryRelation into every plan that matches the
-    cached one, after which inputFiles() returns [] and this function
-    silently takes the content-scan fallback (correct, but it re-adds
-    the serial scan this exists to remove).
+    """Input fingerprint WITHOUT a data scan: pins.fingerprint over the
+    frame's backing-file listing plus the column names whose change must
+    invalidate (see pins.fingerprint for the trust model and the
+    ORDERING TRAP: call this BEFORE df.persist()).  Falls back to
+    content_fingerprint when the frame is not file-backed
+    (createDataFrame, cached views) or a part-file cannot be stat'ed —
+    there is no listing to trust, so the scan is the honest price, and
+    a file deleted between listing and stat must not kill the job
+    before it does any work.
 
     Motivation (r8 curation-ladder breakdown): the content fingerprint
     was a full id+text scan that ran SERIALLY before any parallel
     stage — 5.8-7.3 s at 500k rows regardless of core count, pure
     Amdahl tail in the scaling ladder."""
-    import hashlib
-
-    files = sorted(df.inputFiles())
-    if not files:
-        return content_fingerprint(df, *cols)
-    from sequali_spark.operators.dedup import _batched_file_stats
-
-    try:
-        stats = _batched_file_stats(df.sparkSession, files)
-    except Exception:
-        # a part-file deleted/replaced between inputFiles() and the
-        # stat (concurrent compaction, retention cleaner) must not
-        # kill the job before it does any work — degrade to the scan,
-        # the same posture as the sketch-pin fingerprint
-        # (operators/dedup._cache_fingerprint)
-        return content_fingerprint(df, *cols)
-    h = hashlib.blake2b(digest_size=16)
-    for f, length, mtime in stats:
-        h.update(f"{f}|{length}|{mtime};".encode())
-    h.update("|".join(cols).encode())
-    return f"files:{len(files)}:{h.hexdigest()}"
+    return pins.fingerprint(df, *cols) or content_fingerprint(df, *cols)
 
 
 def stage_is_reusable(

@@ -114,19 +114,37 @@ def get_spark(
     return spark
 
 
-def spread_for_python(df, cap: int | None = None, bytes_per_task: int | None = None):
-    """CPU-spread guard for Python (mapInPandas) stages: scan bytes !=
-    compute cost, so a small-but-CPU-heavy input can arrive as a single
-    scan split (sf0.1 documents is ONE 584 KB split) and starve the
-    Arrow stage down to one core.  Repartition to min(cap, session
-    parallelism) ONLY when the scan under-decomposes — at production
-    scale row-group splits exceed cores and this is a no-op, so the
-    payload column never shuffles on the scale path.  ``cap`` bounds the
-    spread for stages whose fresh Python workers pay a model-load cost
-    (each new worker imports + initializes the model; on a small input
-    that setup dominates).  (Same discipline as the 4 MB
-    maxPartitionBytes knob for the label pipeline: partition by compute,
-    not bytes, when the stage is UDF-bound.)"""
+def spread(df, key: str | None = None, bytes_per_task: int | None = None):
+    """CPU-spread guard for compute-heavy stages above a scan — Python
+    (mapInPandas) stages and expression-heavy JVM stages (regex/char
+    batteries, decimal aggregation, array dot products) alike: scan
+    bytes != compute cost, so a small-but-CPU-heavy input can arrive as
+    a single scan split (sf0.1 documents is ONE 584 KB split) and starve
+    the stage down to one core.
+
+    Why it exists (r9, measured): the driver's tables are written as ONE
+    parquet row group per file, and a row group is the unit of scan
+    splitting — ``maxPartitionBytes`` cannot cut below it, so every
+    scan-rooted stage ran on a single core regardless of cluster size
+    (doc_char_ratios spent 3.7 s of single-threaded regex at sf1.0 on
+    local[32]).  Repartitioning costs one exchange of the input rows
+    (~16 MB for the documents table) and buys full-cluster parallelism
+    for the expensive stage above it.
+
+    Scale behavior: fires ONLY when the scan under-decomposes (splits <
+    target width).  At production scale row-group counts exceed cores
+    and this is a no-op — the payload never shuffles on the scale path.
+
+    ``key``: hash-partition on a high-cardinality column instead of
+    round-robin.  Round-robin repartition first LOCALLY SORTS its input
+    (spark.sql.execution.sortBeforeRepartition, on by default so task
+    retries are deterministic) — on the single-task scan this guard
+    exists to fix, that sort is itself serial; hashing a unique key
+    needs no sort and spreads evenly.
+
+    ``bytes_per_task``: size the width to ~that many input bytes per
+    task, for Python stages whose tasks each pay an Arrow handshake;
+    without it the width is the session parallelism."""
     if df.isStreaming:  # .rdd is illegal on a streaming frame; micro-
         return df       # batch sizing is the trigger's job, not ours
     target = df.sparkSession.sparkContext.defaultParallelism
@@ -140,44 +158,11 @@ def spread_for_python(df, cap: int | None = None, bytes_per_task: int | None = N
         # the source files, so size the task count to ~bytes_per_task
         # of input each, clamped to session parallelism.  Unknown-size
         # sources (generated frames) estimate huge and clamp to
-        # parallelism, which is the right default for them.
+        # parallelism, which is the right default for them.  The
+        # estimate is a private API, pinned by
+        # tests/test_plans_multimodal.py::test_plan_size_estimate_api.
         est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
         target = min(target, max(1, est // bytes_per_task))
-    if cap is not None:
-        target = min(cap, target)
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
-
-
-def spread_for_compute(df, key: str | None = None):
-    """CPU-spread guard for expression-heavy JVM stages (regex/char
-    batteries, decimal aggregation, array dot products) — the twin of
-    ``spread_for_python`` for pure-JVM compute.
-
-    Why it exists (r9, measured): the driver's tables are written as ONE
-    parquet row group per file, and a row group is the unit of scan
-    splitting — ``maxPartitionBytes`` cannot cut below it, so every
-    scan-rooted stage ran on a single core regardless of cluster size
-    (doc_char_ratios spent 3.7 s of single-threaded regex at sf1.0 on
-    local[32]).  Repartitioning costs one exchange of the input rows
-    (~16 MB for the documents table) and buys full-cluster parallelism
-    for the expensive projection/partial-aggregation above it.
-
-    Scale behavior: fires ONLY when the scan under-decomposes (splits <
-    session parallelism).  At production scale row-group counts exceed
-    cores and this is a no-op — the payload never shuffles on the scale
-    path (same discipline as spread_for_python).
-
-    ``key``: hash-partition on a high-cardinality column instead of
-    round-robin.  Round-robin repartition first LOCALLY SORTS its input
-    (spark.sql.execution.sortBeforeRepartition, on by default so task
-    retries are deterministic) — on the single-task scan this guard
-    exists to fix, that sort is itself serial; hashing a unique key
-    needs no sort and spreads evenly."""
-    if df.isStreaming:
-        return df
-    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     if key is not None:

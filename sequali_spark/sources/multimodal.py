@@ -454,9 +454,9 @@ def decode_features(
                 }
             )
 
-    from sequali_spark.session import spread_for_python
+    from sequali_spark.session import spread
 
-    return spread_for_python(media.select("media_id", "kind", "payload")).mapInPandas(
+    return spread(media.select("media_id", "kind", "payload")).mapInPandas(
         _batches, schema=schema
     )
 

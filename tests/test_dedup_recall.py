@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sequali_spark.operators import dedup
+from sequali_spark.runtime import pins
 from tests.test_pipeline import pages_df
 
 
@@ -1061,12 +1062,12 @@ def test_pinned_sketch_reuse_and_refresh(spark, tmp_path):
     ).parquet(p)
     docs = spark.read.parquet(p)
     dedup.minhash_pairs_for(docs, threshold=0.9, collapse_exact=True).collect()
-    pinned1 = dedup._CACHED["minhash"]
+    pinned1 = pins.pinned("minhash")
     # same input, reconstructed query -> the SAME pinned frame object
     dedup.minhash_pairs_for(
         spark.read.parquet(p), threshold=0.9, collapse_exact=True
     ).collect()
-    assert dedup._CACHED["minhash"] is pinned1
+    assert pins.pinned("minhash") is pinned1
     # overwrite in place with DIFFERENT content: two exact dup groups
     rows2 = [(i, f"duplicate text group {i % 2}") for i in range(50)]
     spark.createDataFrame(rows2, "doc_id long, text string").write.mode(
@@ -1075,10 +1076,10 @@ def test_pinned_sketch_reuse_and_refresh(spark, tmp_path):
     dedup.minhash_pairs_for(
         spark.read.parquet(p), threshold=0.9, collapse_exact=True
     ).collect()
-    assert dedup._CACHED["minhash"] is not pinned1
+    assert pins.pinned("minhash") is not pinned1
     # the refreshed sketch reflects the new content: 50 docs collapse
     # to 2 exact reps (one per dup group)
-    assert dedup._CACHED["minhash"].count() == 2
+    assert pins.pinned("minhash").count() == 2
 
 
 def test_verify_without_packed_column(spark, pages_small):
@@ -1136,9 +1137,9 @@ def test_pinned_sketch_distinguishes_filtered_source(spark, tmp_path):
     spark.createDataFrame(rows, "doc_id long, text string").write.parquet(p)
     full = spark.read.parquet(p)
     dedup.minhash_pairs_for(full, threshold=0.9, collapse_exact=True).collect()
-    pinned_full = dedup._CACHED["minhash"]
+    pinned_full = pins.pinned("minhash")
     n_full = pinned_full.count()
     filtered = spark.read.parquet(p).filter("doc_id < 20")
     dedup.minhash_pairs_for(filtered, threshold=0.9, collapse_exact=True).collect()
-    assert dedup._CACHED["minhash"] is not pinned_full
-    assert dedup._CACHED["minhash"].count() < n_full
+    assert pins.pinned("minhash") is not pinned_full
+    assert pins.pinned("minhash").count() < n_full

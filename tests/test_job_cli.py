@@ -120,9 +120,9 @@ def test_curation_job_cli(spark, sf_dir, tmp_path):
     assert proc2.returncode == 0, proc2.stderr[-2000:]
     stats2 = json.load(open(stats2_path))
     assert stats2["resumed_from_checkpoint"] is True
-    # compare the SEMANTIC stats; the wall-clock observability fields
-    # (phase_walls_sec, dedup_stage_walls_sec) differ by construction
-    skip = {"resumed_from_checkpoint", "phase_walls_sec", "dedup_stage_walls_sec"}
+    # compare the SEMANTIC stats; the wall-clock observability field
+    # (phase_walls_sec) differs by construction
+    skip = {"resumed_from_checkpoint", "phase_walls_sec"}
     assert {k: v for k, v in stats2.items() if k not in skip} == {
         k: v for k, v in stats.items() if k not in skip
     }
@@ -643,7 +643,7 @@ def test_curation_cli_winnow_decon_path_matches_broadcast(spark, tmp_path):
         )
         assert proc.returncode == 0, proc.stderr[-2000:]
         stats[path_mode] = json.load(open(stats_path))
-        for k in ("resumed_from_checkpoint", "phase_walls_sec", "dedup_stage_walls_sec"):
+        for k in ("resumed_from_checkpoint", "phase_walls_sec"):
             stats[path_mode].pop(k, None)
     assert stats["broadcast"] == stats["winnow"]
     assert stats["winnow"]["dropped"].get("contaminated") == 2

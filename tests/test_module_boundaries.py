@@ -1,0 +1,92 @@
+"""No module reaches into another module's private names.
+
+Scans the program sources (``sequali_spark/``, ``jobs/`` and
+``__spark_entry__.py``) with ``ast`` and flags every
+``from sequali_spark.<mod> import _name`` and every ``mod._name`` where
+``mod`` is an imported ``sequali_spark`` module.  Shared state and
+helpers get a public name in the module that owns them (see
+sequali_spark/runtime/pins.py for the persisted-frame registry).
+"""
+
+from __future__ import annotations
+
+import ast
+import os
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PACKAGE = "sequali_spark"
+
+
+def _sources() -> list[str]:
+    out = [os.path.join(REPO, "__spark_entry__.py")]
+    for top in (PACKAGE, "jobs"):
+        for d, _, files in os.walk(os.path.join(REPO, top)):
+            out += [os.path.join(d, f) for f in sorted(files) if f.endswith(".py")]
+    return out
+
+
+def _module_name(path: str) -> str:
+    rel = os.path.relpath(path, REPO)[: -len(".py")].replace(os.sep, ".")
+    return rel[: -len(".__init__")] if rel.endswith(".__init__") else rel
+
+
+def _is_module(dotted: str) -> bool:
+    base = os.path.join(REPO, *dotted.split("."))
+    return os.path.isfile(base + ".py") or os.path.isdir(base)
+
+
+def _is_private(name: str) -> bool:
+    return name.startswith("_") and not (name.startswith("__") and name.endswith("__"))
+
+
+def _resolve(node: ast.ImportFrom, current: str, is_pkg: bool) -> str:
+    if not node.level:
+        return node.module or ""
+    parts = current.split(".")
+    base = parts[: len(parts) - node.level + (1 if is_pkg else 0)]
+    return ".".join(base + ([node.module] if node.module else []))
+
+
+def _dotted(node: ast.expr) -> str | None:
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        head = _dotted(node.value)
+        return None if head is None else f"{head}.{node.attr}"
+    return None
+
+
+def violations() -> list[str]:
+    hits = []
+    for path in _sources():
+        current = _module_name(path)
+        is_pkg = path.endswith("__init__.py")
+        tree = ast.parse(open(path, encoding="utf-8").read(), path)
+        rel = os.path.relpath(path, REPO)
+        # local name (or full dotted path) -> imported sequali_spark module
+        modules: dict[str, str] = {}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.name.split(".")[0] == PACKAGE:
+                        modules[a.asname or a.name] = a.name
+            elif isinstance(node, ast.ImportFrom):
+                src = _resolve(node, current, is_pkg)
+                if src.split(".")[0] != PACKAGE:
+                    continue
+                for a in node.names:
+                    full = f"{src}.{a.name}"
+                    if _is_module(full):
+                        modules[a.asname or a.name] = full
+                    elif _is_private(a.name) and src != current:
+                        hits.append(f"{rel}:{node.lineno} {a.name}")
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and _is_private(node.attr):
+                owner = modules.get(_dotted(node.value) or "")
+                if owner is not None and owner != current:
+                    hits.append(f"{rel}:{node.lineno} {node.attr}")
+    return sorted(hits)
+
+
+def test_no_module_imports_another_modules_private_names():
+    assert violations() == []

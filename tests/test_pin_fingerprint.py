@@ -7,7 +7,7 @@ from __future__ import annotations
 import os
 import time
 
-from sequali_spark.operators.dedup import _cache_fingerprint
+from sequali_spark.runtime.pins import pin_key
 
 
 def _write(spark, path, rows):
@@ -19,8 +19,8 @@ def _write(spark, path, rows):
 def test_same_query_rebuilt_matches(spark, tmp_path):
     p = str(tmp_path / "docs")
     _write(spark, p, [(1, "a"), (2, "b")])
-    fp1 = _cache_fingerprint(spark.read.parquet(p), 64, 16)
-    fp2 = _cache_fingerprint(spark.read.parquet(p), 64, 16)
+    fp1 = pin_key(spark.read.parquet(p), 64, 16)
+    fp2 = pin_key(spark.read.parquet(p), 64, 16)
     assert fp1 is not None and fp1 == fp2
 
 
@@ -28,8 +28,8 @@ def test_different_filter_differs(spark, tmp_path):
     p = str(tmp_path / "docs")
     _write(spark, p, [(1, "a"), (2, "b")])
     base = spark.read.parquet(p)
-    fp_all = _cache_fingerprint(base, 64)
-    fp_filtered = _cache_fingerprint(base.filter("doc_id > 1"), 64)
+    fp_all = pin_key(base, 64)
+    fp_filtered = pin_key(base.filter("doc_id > 1"), 64)
     assert fp_all is not None and fp_filtered is not None
     assert fp_all != fp_filtered
 
@@ -38,7 +38,7 @@ def test_structural_params_differ(spark, tmp_path):
     p = str(tmp_path / "docs")
     _write(spark, p, [(1, "a")])
     df = spark.read.parquet(p)
-    assert _cache_fingerprint(df, 64) != _cache_fingerprint(df, 128)
+    assert pin_key(df, 64) != pin_key(df, 128)
 
 
 def test_same_filename_overwrite_differs(spark, tmp_path):
@@ -48,7 +48,7 @@ def test_same_filename_overwrite_differs(spark, tmp_path):
     p = str(tmp_path / "docs")
     _write(spark, p, [(1, "a"), (2, "b")])
     base = spark.read.parquet(p)
-    fp1 = _cache_fingerprint(base, 64)
+    fp1 = pin_key(base, 64)
     # rewrite to a scratch dir, then copy bytes over IN PLACE keeping
     # the original part-file name (simulates object-store copy-over)
     scratch = str(tmp_path / "scratch")
@@ -65,11 +65,32 @@ def test_same_filename_overwrite_differs(spark, tmp_path):
         d.write(data)
     # re-fingerprint the SAME long-lived frame: its plan and file
     # NAMES are unchanged — only the fresh per-file stats differ
-    fp2 = _cache_fingerprint(base, 64)
+    fp2 = pin_key(base, 64)
     assert fp1 is not None and fp2 is not None
     assert fp1 != fp2
 
 
 def test_non_file_backed_never_reuses(spark):
     df = spark.createDataFrame([(1, "a")], schema="doc_id long, text string")
-    assert _cache_fingerprint(df, 64) is None
+    assert pin_key(df, 64) is None
+
+
+def test_hold_is_lazy_and_releases_previous(spark):
+    """pins.hold persists WITHOUT a job (its call sites feed several
+    subtrees of one plan and must not gain a materialization job), and
+    holding a key again releases the frame it held before."""
+    from sequali_spark.runtime import pins
+
+    sc = spark.sparkContext
+    sc.setJobGroup("pins-hold", "pins.hold must run no job")
+    try:
+        first = pins.hold("test_hold", spark.range(10))
+        second = pins.hold("test_hold", spark.range(20))
+        assert list(sc.statusTracker().getJobIdsForGroup("pins-hold")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert not first.is_cached
+    assert second.is_cached and pins.pinned("test_hold") is second
+    pins.release("test_hold")
+    assert not second.is_cached and pins.pinned("test_hold") is None

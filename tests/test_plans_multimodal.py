@@ -387,22 +387,53 @@ def test_media_exact_dedup(spark, media_df):
 
 
 def test_spread_for_python_is_conditional(spark):
-    """spread_for_python must fix scan under-decomposition WITHOUT ever
+    """spread must fix scan under-decomposition WITHOUT ever
     coalescing an already-decomposed input (the at-scale hazard: an
     unconditional repartition(8) would funnel a many-split corpus onto
     8 tasks)."""
-    from sequali_spark.session import spread_for_python
+    from sequali_spark.session import spread
 
     par = spark.sparkContext.defaultParallelism
     one = spark.range(100).coalesce(1)
-    assert spread_for_python(one).rdd.getNumPartitions() == par
-    assert spread_for_python(one, cap=4).rdd.getNumPartitions() == min(4, par)
+    assert spread(one).rdd.getNumPartitions() == par
+    assert spread(one, key="id").rdd.getNumPartitions() == par
     many = spark.range(1000).repartition(par * 2)
-    assert spread_for_python(many).rdd.getNumPartitions() == par * 2
-    assert spread_for_python(many, cap=4).rdd.getNumPartitions() == par * 2
+    assert spread(many).rdd.getNumPartitions() == par * 2
     # streaming frames pass through untouched (.rdd would raise)
     stream = spark.readStream.format("rate").load()
-    assert spread_for_python(stream) is stream
+    assert spread(stream) is stream
+
+
+def test_plan_size_estimate_api(spark, tmp_path):
+    """spread's size-aware width reads the optimizer's size estimate
+    through a PRIVATE Spark API,
+    ``_jdf.queryExecution().optimizedPlan().stats().sizeInBytes()``.
+    Pin both the call and what it returns for a parquet scan (the sum of
+    the data files' bytes), so a Spark upgrade that moves or changes it
+    fails here instead of silently re-sizing every spread Python
+    stage."""
+    import os
+
+    from sequali_spark.session import spread
+
+    p = str(tmp_path / "t")
+    spark.range(2000).selectExpr("id", "repeat('x', 200) as s").coalesce(
+        1
+    ).write.parquet(p)
+    df = spark.read.parquet(p)
+    est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    on_disk = sum(
+        os.path.getsize(os.path.join(p, f))
+        for f in os.listdir(p)
+        if f.endswith(".parquet")
+    )
+    assert est == on_disk > 0
+    par = spark.sparkContext.defaultParallelism
+    assert df.rdd.getNumPartitions() == 1
+    for bytes_per_task in (est, est // 2, 1):
+        want = min(par, max(1, est // bytes_per_task))
+        got = spread(df, bytes_per_task=bytes_per_task).rdd.getNumPartitions()
+        assert got == want, (bytes_per_task, got, want)
 
 
 def test_multiprobe_lsh_broadcasts_probe_side(spark, sf_dir):

@@ -5,8 +5,7 @@ The long-split rewrite (OPTIMIZATION_r09.md "Exact long-split money
 sums") converts each value once per row via the SAME decimal(18,6)
 cast the reference formulation used, then sums plain long components —
 so it is value-identical by construction (gated by the DuckDB mirror in
-test_entry_parity and collect-compare MATCH in
-scripts/r9_match_relational.py).  These tests pin the OPTIMIZATION
+test_entry_parity).  These tests pin the OPTIMIZATION
 itself: if a refactor reintroduces a decimal sum buffer into one of the
 rewritten aggregates, the plan falls off Spark's compact-long fast path
 and the regression is silent at toy scale — the plan shape is the only
