@@ -19,7 +19,10 @@ import hashlib
 import json
 from pathlib import Path
 
+import numpy as np
+
 GOLDEN = Path(__file__).parent / "golden" / "labels_500_seed42.json"
+METRICS_GOLDEN = Path(__file__).parent / "golden" / "metrics_500_seed42.json"
 
 
 def test_oracle_matches_committed_golden():
@@ -52,3 +55,27 @@ def test_oracle_matches_committed_golden():
     rep = oracle_report(m)
     for key, want in golden["report"].items():
         assert rep[key] == want, f"report[{key}] drifted"
+
+
+def test_metric_columns_match_committed_golden():
+    """Every numeric metric column, bit for bit.  The labels golden only
+    sees a metric through a threshold, so a last-bit drift in a ratio or
+    mean (e.g. alpha_word_frac, mean_word_len) would pass it unnoticed;
+    one blake2b digest per float64/int64 column (rows sorted by url,
+    little-endian bytes) catches it."""
+    from sequali_spark.fixtures import generate_pages
+    from sequali_spark.oracle import oracle_metrics
+
+    golden = json.loads(METRICS_GOLDEN.read_text())
+    gen = golden["generator"]
+    m = oracle_metrics(generate_pages(gen["rows"], seed=gen["seed"])).sort_values("url")
+
+    got = {}
+    for col in m.columns:
+        dt = m[col].dtype
+        if dt in (np.float64, np.int64):
+            raw = m[col].to_numpy(dtype=dt.newbyteorder("<")).tobytes()
+            got[col] = hashlib.blake2b(raw, digest_size=16).hexdigest()
+    assert sorted(got) == sorted(golden["columns"]), "numeric metric columns changed"
+    drifted = [c for c in got if got[c] != golden["columns"][c]]
+    assert not drifted, f"metric columns drifted: {drifted}"
