@@ -22,7 +22,9 @@ re-specification of sequali's ``seq_index % sample_every`` early-skip
 from __future__ import annotations
 
 import hashlib
+import re
 import zlib
+from typing import NamedTuple, Sequence
 
 import numpy as np
 import pandas as pd
@@ -32,26 +34,28 @@ import pandas as pd
 # NUCLEOTIDE_TO_INDEX[128] (reference: _qcmodule.c:1741-1766).  Classes:
 #   0 alpha (a-zA-Z)  1 digit  2 space  3 punct/symbol (other ASCII printable)
 #   4 control (ASCII < 0x20 except \t\n\r which count as space)  5 non-ASCII
+# It is a bytes.translate table, and A-Z map to the extra id N_CLASSES so
+# one translated copy yields both the class counts and the upper-case
+# count (char_class_counts still counts them as alpha).
 N_CLASSES = 6
 CLASS_ALPHA, CLASS_DIGIT, CLASS_SPACE, CLASS_PUNCT, CLASS_CTRL, CLASS_NONASCII = range(6)
 
-_CLASS_TABLE = np.full(256, CLASS_PUNCT, dtype=np.uint8)
+_table = bytearray([CLASS_PUNCT]) * 256
 for _c in range(ord("a"), ord("z") + 1):
-    _CLASS_TABLE[_c] = CLASS_ALPHA
+    _table[_c] = CLASS_ALPHA
 for _c in range(ord("A"), ord("Z") + 1):
-    _CLASS_TABLE[_c] = CLASS_ALPHA
+    _table[_c] = N_CLASSES
 for _c in range(ord("0"), ord("9") + 1):
-    _CLASS_TABLE[_c] = CLASS_DIGIT
+    _table[_c] = CLASS_DIGIT
 for _c in b" \t\n\r":
-    _CLASS_TABLE[_c] = CLASS_SPACE
+    _table[_c] = CLASS_SPACE
 for _c in range(0x20):
     if _c not in b"\t\n\r":
-        _CLASS_TABLE[_c] = CLASS_CTRL
-_CLASS_TABLE[0x7F] = CLASS_CTRL
-_CLASS_TABLE[0x80:] = CLASS_NONASCII
-
-_UPPER_MASK = np.zeros(256, dtype=bool)
-_UPPER_MASK[ord("A") : ord("Z") + 1] = True
+        _table[_c] = CLASS_CTRL
+_table[0x7F] = CLASS_CTRL
+_table[0x80:] = bytes([CLASS_NONASCII]) * 0x80
+_CLASS_TABLE = bytes(_table)
+_COUNTED_IDS = [bytes([k]) for k in range(CLASS_ALPHA + 1, N_CLASSES + 1)]
 
 
 def _concat_bytes(texts: list[bytes]) -> tuple[np.ndarray, np.ndarray]:
@@ -87,22 +91,22 @@ def segment_sums(values: np.ndarray, offsets: np.ndarray, out_dtype=np.int64) ->
 def char_class_counts(texts: list[bytes]) -> np.ndarray:
     """(n_docs, N_CLASSES+1) matrix: per-doc byte-class counts + upper count.
 
-    One pass over a single concatenated buffer with segment sums —
-    the NumPy equivalent of sequali's unrolled per-base count loop
-    (reference: _qcmodule.c:2004-2031).
+    Per doc, one ``bytes.translate`` through ``_CLASS_TABLE`` maps every
+    byte to its class id (A-Z to the extra id N_CLASSES) and one
+    ``bytes.count`` per id counts it — C-speed passes with no
+    batch-sized temporaries, the equivalent of sequali's unrolled
+    per-base count loop (reference: _qcmodule.c:2004-2031).  Alpha (A-Z
+    included), the most frequent class and so the slowest to count, is
+    the doc length minus the other classes.  Empty docs give a zero row.
     """
     n = len(texts)
-    out = np.zeros((n, N_CLASSES + 1), dtype=np.int64)
-    if n == 0:
-        return out
-    buf, offsets = _concat_bytes(texts)
-    if len(buf) == 0:
-        return out
-    classes = _CLASS_TABLE[buf]
-    upper = _UPPER_MASK[buf]
-    for k in range(N_CLASSES):
-        out[:, k] = segment_sums((classes == k).view(np.int8), offsets)
-    out[:, N_CLASSES] = segment_sums(upper.view(np.int8), offsets)
+    rows = []
+    for t in texts:
+        tr = t.translate(_CLASS_TABLE)
+        rows.append([len(t)] + [tr.count(k) for k in _COUNTED_IDS])
+    out = np.array(rows, dtype=np.int64).reshape(n, N_CLASSES + 1)
+    # column CLASS_ALPHA holds the doc length until here
+    out[:, CLASS_ALPHA] -= out[:, CLASS_ALPHA + 1 : N_CLASSES].sum(axis=1)
     return out
 
 
@@ -226,18 +230,35 @@ def tokenize(text: str) -> list[str]:
 
 _TOK_CACHE: dict[str, int] = {}
 _TOK_CACHE_CAP = 1 << 20
+_ALPHA_RE = re.compile("[A-Za-z]")
+# same answer on the utf-8 bytes: UTF-8 never puts an ASCII byte inside
+# a multi-byte character
+_ALPHA_BYTES_RE = re.compile(rb"[A-Za-z]")
 
 
-def hash_tokens(toks: list[str], assume_no_nul: bool = False) -> np.ndarray:
-    """crc32 per token (uint64 array) — deterministic across processes,
-    C-speed.  Shared by the repetition metrics and the perplexity LM so
-    one tokenization+hash pass serves both.
+class TokenVocab(NamedTuple):
+    """A token list factorized to its distinct tokens.  ``codes`` maps
+    each token to its unique; the other arrays hold one value per
+    unique."""
 
-    Factorize-then-hash-uniques: pd.factorize collapses the batch to its
-    vocabulary (C hash table, one pass), crc32 runs once per UNIQUE
-    token (memoized across batches), and a single fancy-index gather
-    fans the hashes back out.  The per-token Python dict loop this
-    replaced was the #1 kernel hot spot (~30% of compute_metrics).
+    codes: np.ndarray  # intp, one per token
+    hashes: np.ndarray  # uint64 crc32 of the utf-8 bytes
+    alpha: np.ndarray  # bool: contains an ASCII letter
+    lengths: np.ndarray  # int64 length in characters
+
+    def gather(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """Per-token (hashes, alpha, lengths): one gather each."""
+        return self.hashes[self.codes], self.alpha[self.codes], self.lengths[self.codes]
+
+
+def _factorize_hashed(
+    toks: Sequence[str], assume_no_nul: bool
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(codes, uniques, per-unique crc32) of a token list.
+
+    pd.factorize collapses the batch to its vocabulary (C hash table,
+    one pass) and crc32 runs once per unique token, memoized across
+    batches in ``_TOK_CACHE`` (capped per insert).
 
     By default factorization runs over the utf-8 BYTES (needed for crc32
     anyway): pandas' str fast path uses NUL-terminated C-string hashing
@@ -246,21 +267,16 @@ def hash_tokens(toks: list[str], assume_no_nul: bool = False) -> np.ndarray:
     route through the PyObject hashtable, which is NUL-safe.
     ``assume_no_nul=True`` (callers that memchr-scanned the batch, e.g.
     compute_metrics) factorizes the strs directly and only encodes the
-    uniques — ~10% faster on the hot path."""
-    n = len(toks)
-    if n == 0:
-        return np.empty(0, dtype=np.uint64)
-    import pandas as pd
-
-    cache = _TOK_CACHE  # str keys (fast path) and bytes keys never collide
+    uniques — ~10% faster on the hot path; the uniques are then strs."""
     if assume_no_nul:
         codes, uniques = pd.factorize(np.asarray(toks, dtype=object), sort=False)
     else:
-        enc = np.empty(n, dtype=object)
+        enc = np.empty(len(toks), dtype=object)
         for i, t in enumerate(toks):
             enc[i] = t.encode("utf-8")
         codes, uniques = pd.factorize(enc, sort=False)
-    uh = np.empty(len(uniques), dtype=np.uint64)
+    hashes = np.empty(len(uniques), dtype=np.uint64)
+    cache = _TOK_CACHE  # str keys (fast path) and bytes keys never collide
     for j, u in enumerate(uniques):
         h = cache.get(u)
         if h is None:
@@ -270,8 +286,35 @@ def hash_tokens(toks: list[str], assume_no_nul: bool = False) -> np.ndarray:
             # corpus), so it must hold within a single batch too
             if len(cache) < _TOK_CACHE_CAP:
                 cache[u] = h
-        uh[j] = h
-    return uh[codes]
+        hashes[j] = h
+    return codes, uniques, hashes
+
+
+def token_vocab(toks: Sequence[str], assume_no_nul: bool = False) -> TokenVocab:
+    """Factorize a token list once and compute every per-token feature
+    the metric battery needs on the UNIQUE tokens only (a 10k-page batch
+    has ~1.8M tokens but ~9k distinct ones): the crc32 hash, the
+    ASCII-letter test and the length in characters.
+    :meth:`TokenVocab.gather` fans them back out per token.
+    ``assume_no_nul`` as in :func:`_factorize_hashed`."""
+    codes, uniques, hashes = _factorize_hashed(toks, assume_no_nul)
+    m = len(uniques)
+    if assume_no_nul:
+        alpha = np.fromiter((_ALPHA_RE.search(u) is not None for u in uniques), bool, m)
+        lengths = np.fromiter(map(len, uniques), np.int64, m)
+    else:
+        alpha = np.fromiter((_ALPHA_BYTES_RE.search(u) is not None for u in uniques), bool, m)
+        lengths = np.fromiter((len(u.decode("utf-8")) for u in uniques), np.int64, m)
+    return TokenVocab(codes, hashes, alpha, lengths)
+
+
+def hash_tokens(toks: list[str], assume_no_nul: bool = False) -> np.ndarray:
+    """crc32 per token (uint64 array) — deterministic across processes,
+    C-speed: the vocabulary's hashes (:func:`_factorize_hashed`)
+    gathered per token.  Shared by the perplexity LM's standalone
+    scoring paths; compute_metrics takes them from :func:`token_vocab`."""
+    codes, _, hashes = _factorize_hashed(toks, assume_no_nul)
+    return hashes[codes]
 
 
 def flatten_tokens(texts: list[str]) -> tuple[list[str], np.ndarray, np.ndarray]:
@@ -336,25 +379,26 @@ def top_bigram_fraction(
 
 
 def word_stats(texts: list[str]) -> pd.DataFrame:
-    """Per-doc token metrics (convenience wrapper: one tokenize+hash
-    pass, then :func:`word_stats_from_tokens`)."""
+    """Per-doc token metrics (convenience wrapper: one tokenize pass and
+    one token vocabulary, then :func:`word_stats_from_tokens`)."""
     flat, lengths, offsets = flatten_tokens(texts)
-    return word_stats_from_tokens(texts, flat, lengths, offsets, hash_tokens(flat))
+    hashes, _, tok_lens = token_vocab(flat).gather()
+    return word_stats_from_tokens(texts, tok_lens, lengths, offsets, hashes)
 
 
 def word_stats_from_tokens(
     texts: list[str],
-    flat: list[str],
+    tok_lens: np.ndarray,
     lengths: np.ndarray,
     offsets: np.ndarray,
     hashes: np.ndarray,
 ) -> pd.DataFrame:
     """Per-doc token metrics: n_words, mean_word_len, top-bigram fraction,
     duplicate-line fraction (by chars) — the repetition battery, analogue of
-    sequali's overrepresented/duplication per-read views.  Token stream
-    precomputed once per batch and shared with the perplexity scorer."""
+    sequali's overrepresented/duplication per-read views.  The token
+    stream (per-token lengths and hashes, per-doc counts and offsets) is
+    computed once per batch and shared with the perplexity scorer."""
     n = len(texts)
-    tok_lens = np.fromiter(map(len, flat), np.int64, len(flat))
     safe_len = np.maximum(lengths, 1)
     sums = segment_sums(tok_lens, offsets)
     mean_wlen = np.where(lengths > 0, sums / safe_len, 0.0)

@@ -128,10 +128,14 @@ METRIC_SCHEMA_DDL = (
 def compute_metrics(pdf: pd.DataFrame, needed: set[str] | None = None) -> pd.DataFrame:
     """Batch of pages (url, warc_ts, html, text, lang) -> metric frame.
 
-    Vectorized throughout: char classes via one concatenated-buffer pass
-    (kernels.char_class_counts), scrubbing via compiled-regex pandas ops,
-    models via NumPy.  No per-row Python in the Spark hot path beyond
-    bounded per-doc NumPy loops (the same work sequali does per read).
+    One pass of batch kernels, the same work sequali does per read:
+    char classes via one ``bytes.translate`` and a few ``bytes.count``
+    per doc (kernels.char_class_counts); every per-token feature (hash,
+    letter test, length) computed once per batch VOCABULARY
+    (kernels.token_vocab) and gathered back per token; literal counts
+    via ``str.count`` and line counts via two multiline regexes per doc;
+    scrubbing via a literal pre-screen plus compiled regexes on the few
+    docs it flags (scrub.scrub_batch); models via NumPy.
 
     ``needed`` (the output projection, when the caller prunes columns)
     lets the expensive columns that feed NO keep/drop rule —
@@ -152,46 +156,47 @@ def compute_metrics(pdf: pd.DataFrame, needed: set[str] | None = None) -> pd.Dat
     n_bytes = cls_counts.sum(axis=1) - cls_counts[:, kernels.N_CLASSES]
     denom = np.maximum(n_bytes, 1).astype(np.float64)
 
-    # ONE tokenize+hash pass feeds repetition metrics AND perplexity.
-    # Per-doc NUL scan (memchr speed) licenses hash_tokens' str-factorize
-    # fast path for clean docs' tokens; the rare NUL-bearing docs take
-    # the byte-safe path and the results are stitched back in order —
-    # one junk doc must not demote the whole batch.
+    # ONE tokenize pass and ONE vocabulary per batch feed the repetition
+    # metrics, the Gopher letter-word test AND perplexity.  Per-doc NUL
+    # scan (memchr speed) licenses token_vocab's str-factorize fast path
+    # for clean docs' tokens; the rare NUL-bearing docs take the
+    # byte-safe path in a second vocabulary — one junk doc must not
+    # demote the whole batch.
     texts_list = list(texts)
     flat, tok_lengths, tok_offsets = kernels.flatten_tokens(texts_list)
     nul_docs = np.fromiter((b"\x00" in rb for rb in raw_bytes), bool, n)
     if not nul_docs.any():
-        tok_hashes = kernels.hash_tokens(flat, assume_no_nul=True)
+        vocab = kernels.token_vocab(flat, assume_no_nul=True)
     else:
+        # two vocabularies, merged by offsetting the NUL side's codes
         tok_mask = np.repeat(nul_docs, tok_lengths)
         flat_arr = np.asarray(flat, dtype=object)
-        tok_hashes = np.empty(len(flat), dtype=np.uint64)
-        tok_hashes[~tok_mask] = kernels.hash_tokens(
-            list(flat_arr[~tok_mask]), assume_no_nul=True
+        clean = kernels.token_vocab(flat_arr[~tok_mask], assume_no_nul=True)
+        dirty = kernels.token_vocab(flat_arr[tok_mask])
+        codes = np.empty(len(flat), dtype=np.intp)
+        codes[~tok_mask] = clean.codes
+        codes[tok_mask] = dirty.codes + len(clean.hashes)
+        vocab = kernels.TokenVocab(
+            codes, *(np.concatenate(pair) for pair in zip(clean[1:], dirty[1:]))
         )
-        tok_hashes[tok_mask] = kernels.hash_tokens(list(flat_arr[tok_mask]))
-    ws = kernels.word_stats_from_tokens(texts_list, flat, tok_lengths, tok_offsets, tok_hashes)
+    tok_hashes, tok_alpha, tok_lens = vocab.gather()
+    ws = kernels.word_stats_from_tokens(
+        texts_list, tok_lens, tok_lengths, tok_offsets, tok_hashes
+    )
     run = kernels.max_char_run(raw_bytes)
 
-    # Gopher structure signals (Rae et al. 2021 §A1.1) — all vectorized:
-    # multiline regexes count qualifying lines in one C pass per doc;
-    # the letter-bearing-word test reuses the shared token stream.
-    n_lines = texts.str.count("\n").to_numpy(dtype=np.float64) + 1.0
+    # Gopher structure signals (Rae et al. 2021 §A1.1): the multiline
+    # regexes count qualifying lines in one C pass per doc, the literal
+    # counts are plain str.count passes (same non-overlapping matches as
+    # the regex), and the letter-bearing-word test reuses the vocabulary.
+    n_lines = np.fromiter((t.count("\n") for t in texts_list), np.float64, n) + 1.0
     bullet_lines = texts.str.count(r"(?m)^(?:- |\* |•)").to_numpy(dtype=np.float64)
     ellipsis_lines = texts.str.count(r"(?m)(?:\.\.\.|…)$").to_numpy(dtype=np.float64)
-    alpha_toks = (
-        pd.Series(flat, dtype=object)
-        .str.contains("[A-Za-z]", regex=True)
-        .to_numpy(dtype=np.int64)
-        if flat
-        else np.zeros(0, dtype=np.int64)
-    )
-    alpha_counts = kernels.segment_sums(alpha_toks, tok_offsets)
+    alpha_counts = kernels.segment_sums(tok_alpha, tok_offsets)
     word_denom = np.maximum(tok_lengths, 1).astype(np.float64)
     alpha_word_frac = np.where(tok_lengths > 0, alpha_counts / word_denom, 1.0)
-    symbol_counts = (
-        texts.str.count("#").to_numpy(dtype=np.float64)
-        + texts.str.count(r"\.\.\.").to_numpy(dtype=np.float64)
+    symbol_counts = np.fromiter(
+        (t.count("#") + t.count("...") for t in texts_list), np.float64, n
     )
     symbol_word_ratio = symbol_counts / word_denom
 

@@ -151,6 +151,66 @@ def test_hash_tokens_fast_path_matches_when_nul_free(toks):
     assert got.shape == exp.shape and (got == exp).all()
 
 
+# tokens skewed toward NUL and case-folding code points (U+212A KELVIN
+# SIGN, U+0130, sharp s) next to plain ASCII letters and digits
+_vocab_tokens = st.lists(
+    st.text(
+        alphabet=st.one_of(
+            st.sampled_from(list("\x00\u212a\u0130\u00dfAz1 \u00e9")), st.characters()
+        ),
+        max_size=12,
+    ),
+    max_size=150,
+)
+
+
+@given(_vocab_tokens)
+@settings(max_examples=50, deadline=None)
+def test_token_vocab_gather_matches_per_token(toks):
+    """The per-unique features fanned back out through ``codes`` equal
+    the per-token definitions, on the bytes path (any tokens) and on
+    the str fast path (NUL-free tokens only)."""
+    import re
+    import zlib
+
+    for batch, assume_no_nul in ((toks, False), ([t for t in toks if "\x00" not in t], True)):
+        hashes, alpha, lens = kernels.token_vocab(batch, assume_no_nul=assume_no_nul).gather()
+        assert list(hashes) == [zlib.crc32(t.encode("utf-8")) for t in batch]
+        assert list(alpha) == [bool(re.search("[A-Za-z]", t)) for t in batch]
+        assert list(lens) == [len(t) for t in batch]
+
+
+def _naive_class_row(b: bytes) -> list[int]:
+    row = [0] * (kernels.N_CLASSES + 1)
+    for x in b:
+        if ord("a") <= x <= ord("z") or ord("A") <= x <= ord("Z"):
+            row[kernels.CLASS_ALPHA] += 1
+        elif ord("0") <= x <= ord("9"):
+            row[kernels.CLASS_DIGIT] += 1
+        elif x in b" \t\n\r":
+            row[kernels.CLASS_SPACE] += 1
+        elif x < 0x20 or x == 0x7F:
+            row[kernels.CLASS_CTRL] += 1
+        elif x >= 0x80:
+            row[kernels.CLASS_NONASCII] += 1
+        else:
+            row[kernels.CLASS_PUNCT] += 1
+        if ord("A") <= x <= ord("Z"):
+            row[kernels.N_CLASSES] += 1
+    return row
+
+
+@given(st.lists(st.binary(max_size=200), max_size=12))
+@settings(max_examples=50, deadline=None)
+def test_char_class_counts_matches_naive(docs):
+    """Exact per-byte definition of the class matrix, with an empty doc
+    between every pair of docs (and at the end)."""
+    docs = [d for doc in docs for d in (doc, b"")]
+    got = kernels.char_class_counts(docs)
+    assert got.shape == (len(docs), kernels.N_CLASSES + 1)
+    assert got.tolist() == [_naive_class_row(d) for d in docs]
+
+
 @given(
     st.integers(min_value=1, max_value=40),
     st.integers(min_value=1, max_value=40),

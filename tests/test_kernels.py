@@ -119,6 +119,30 @@ def test_token_cache_cap_holds_within_one_batch(monkeypatch):
     assert out[42] == zlib.crc32(b"tok42")
 
 
+def test_battery_words_are_lowercased_tokens():
+    """Battery words are ``kernels.tokenize`` tokens, i.e. LOWERCASED
+    before the letter test: U+212A KELVIN SIGN lowercases to ASCII 'k'
+    (a letter-bearing word), and U+0130 lowercases to two code points
+    (length 2).  The batch mixes the NUL (bytes) path and the clean
+    (str) path, so both vocabularies are pinned to the same values."""
+    from sequali_spark.functions.metrics import compute_metrics
+
+    texts = ["\u212a 12 34", "\u0130 12", "a\x00 12 \x00", "ok fine", ""]
+    pdf = pd.DataFrame(
+        {
+            "url": [f"u{i}" for i in range(len(texts))],
+            "warc_ts": pd.to_datetime(["2024-01-01"] * len(texts)),
+            "html": [None] * len(texts),
+            "text": texts,
+            "lang": ["en"] * len(texts),
+        }
+    )
+    m = compute_metrics(pdf)
+    assert list(m["alpha_word_frac"]) == [1 / 3, 0.5, 1 / 3, 1.0, 1.0]
+    assert list(m["n_words"]) == [3, 2, 3, 2, 0]
+    assert list(m["mean_word_len"]) == [5 / 3, 2.0, 5 / 3, 3.0, 0.0]
+
+
 def test_pruned_metrics_keep_decision_identical():
     """Computation pruning must never change keep/drop: PRUNABLE_COLUMNS
     is asserted disjoint from RULE_INPUT_COLUMNS at import, and this
