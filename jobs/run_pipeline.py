@@ -24,8 +24,8 @@ Modes:
              columns the table carries
 
 Everything model-side (langid weights, LM counts, scrub patterns) is
-derived deterministically at import or shipped inside the zip — no
-network access on executors.
+shipped inside the zip and read through importlib.resources — no
+network access and no training on executors.
 """
 
 from __future__ import annotations

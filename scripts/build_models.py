@@ -3,10 +3,11 @@
 
 langid profile matrix and perplexity LM count tables are pure functions
 of the seeded training corpora (sequali_spark.fixtures); baking them to
-.npz means executors load arrays instead of re-training on first batch
-(the analogue of sequali shipping score_to_error_rate.h and its
-contaminant FASTA in-package).  Re-run after changing vocabularies,
-hash functions, or training seeds; tests assert artifact freshness.
+.npz means executors only load arrays — the package has no training
+path at run time (the analogue of sequali shipping
+score_to_error_rate.h and its contaminant FASTA in-package).  Re-run
+after changing vocabularies, hash functions, or training seeds; tests
+assert artifact freshness.
 """
 
 from __future__ import annotations

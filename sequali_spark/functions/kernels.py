@@ -231,9 +231,6 @@ def tokenize(text: str) -> list[str]:
 _TOK_CACHE: dict[str, int] = {}
 _TOK_CACHE_CAP = 1 << 20
 _ALPHA_RE = re.compile("[A-Za-z]")
-# same answer on the utf-8 bytes: UTF-8 never puts an ASCII byte inside
-# a multi-byte character
-_ALPHA_BYTES_RE = re.compile(rb"[A-Za-z]")
 
 
 class TokenVocab(NamedTuple):
@@ -251,70 +248,52 @@ class TokenVocab(NamedTuple):
         return self.hashes[self.codes], self.alpha[self.codes], self.lengths[self.codes]
 
 
-def _factorize_hashed(
-    toks: Sequence[str], assume_no_nul: bool
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(codes, uniques, per-unique crc32) of a token list.
+def token_vocab(toks: Sequence[str]) -> TokenVocab:
+    """Factorize a token list once and compute every per-token feature
+    the metric battery needs on the UNIQUE tokens only (a 10k-page batch
+    has ~1.8M tokens but ~9k distinct ones): the crc32 of the utf-8
+    bytes, the ASCII-letter test and the length in characters.
+    :meth:`TokenVocab.gather` fans them back out per token.
 
-    pd.factorize collapses the batch to its vocabulary (C hash table,
-    one pass) and crc32 runs once per unique token, memoized across
-    batches in ``_TOK_CACHE`` (capped per insert).
-
-    By default factorization runs over the utf-8 BYTES (needed for crc32
-    anyway): pandas' str fast path uses NUL-terminated C-string hashing
-    and conflates '\\x00'-bearing tokens with their prefixes (found by
-    hypothesis: factorize(['', '\\x00']) -> one unique); bytes objects
-    route through the PyObject hashtable, which is NUL-safe.
-    ``assume_no_nul=True`` (callers that memchr-scanned the batch, e.g.
-    compute_metrics) factorizes the strs directly and only encodes the
-    uniques — ~10% faster on the hot path; the uniques are then strs."""
-    if assume_no_nul:
-        codes, uniques = pd.factorize(np.asarray(toks, dtype=object), sort=False)
-    else:
-        enc = np.empty(len(toks), dtype=object)
-        for i, t in enumerate(toks):
-            enc[i] = t.encode("utf-8")
-        codes, uniques = pd.factorize(enc, sort=False)
-    hashes = np.empty(len(uniques), dtype=np.uint64)
-    cache = _TOK_CACHE  # str keys (fast path) and bytes keys never collide
-    for j, u in enumerate(uniques):
+    The vocabulary is a dict keyed by the str tokens: Python's str hash
+    and equality are NUL-safe, so one path serves every batch (pandas'
+    str factorize is not — it conflates ``'\\x00'``-bearing tokens with
+    their prefixes).  crc32 is memoized across batches in
+    ``_TOK_CACHE``, capped per insert."""
+    # uniques in first-seen order, numbered in place; the per-token
+    # codes are then one C-level dict lookup each (no Python frame)
+    index = dict.fromkeys(toks)
+    m = len(index)
+    hashes = np.empty(m, dtype=np.uint64)
+    cache = _TOK_CACHE
+    for j, u in enumerate(index):
+        index[u] = j
         h = cache.get(u)
         if h is None:
-            h = zlib.crc32(u.encode("utf-8") if assume_no_nul else u)
+            h = zlib.crc32(u.encode("utf-8"))
             # per-insert capacity check: the cap bounds worker memory on
             # unbounded vocabularies (one oracle call can see the whole
             # corpus), so it must hold within a single batch too
             if len(cache) < _TOK_CACHE_CAP:
                 cache[u] = h
         hashes[j] = h
-    return codes, uniques, hashes
-
-
-def token_vocab(toks: Sequence[str], assume_no_nul: bool = False) -> TokenVocab:
-    """Factorize a token list once and compute every per-token feature
-    the metric battery needs on the UNIQUE tokens only (a 10k-page batch
-    has ~1.8M tokens but ~9k distinct ones): the crc32 hash, the
-    ASCII-letter test and the length in characters.
-    :meth:`TokenVocab.gather` fans them back out per token.
-    ``assume_no_nul`` as in :func:`_factorize_hashed`."""
-    codes, uniques, hashes = _factorize_hashed(toks, assume_no_nul)
-    m = len(uniques)
-    if assume_no_nul:
-        alpha = np.fromiter((_ALPHA_RE.search(u) is not None for u in uniques), bool, m)
-        lengths = np.fromiter(map(len, uniques), np.int64, m)
-    else:
-        alpha = np.fromiter((_ALPHA_BYTES_RE.search(u) is not None for u in uniques), bool, m)
-        lengths = np.fromiter((len(u.decode("utf-8")) for u in uniques), np.int64, m)
+    codes = np.fromiter(map(index.__getitem__, toks), np.intp, len(toks))
+    alpha = np.fromiter((_ALPHA_RE.search(u) is not None for u in index), bool, m)
+    lengths = np.fromiter(map(len, index), np.int64, m)
     return TokenVocab(codes, hashes, alpha, lengths)
 
 
-def hash_tokens(toks: list[str], assume_no_nul: bool = False) -> np.ndarray:
+def hash_tokens(toks: Sequence[str], assume_no_nul: bool = False) -> np.ndarray:
     """crc32 per token (uint64 array) — deterministic across processes,
-    C-speed: the vocabulary's hashes (:func:`_factorize_hashed`)
-    gathered per token.  Shared by the perplexity LM's standalone
-    scoring paths; compute_metrics takes them from :func:`token_vocab`."""
-    codes, _, hashes = _factorize_hashed(toks, assume_no_nul)
-    return hashes[codes]
+    C-speed: the vocabulary's hashes (:func:`token_vocab`) gathered per
+    token.  Shared by the perplexity LM's standalone scoring paths;
+    compute_metrics takes them from :func:`token_vocab`.
+
+    ``assume_no_nul`` is ignored (the vocabulary is NUL-safe on every
+    input); it is kept only because the perfbench kernel harness passes
+    it by keyword."""
+    v = token_vocab(toks)
+    return v.hashes[v.codes]
 
 
 def flatten_tokens(texts: list[str]) -> tuple[list[str], np.ndarray, np.ndarray]:

@@ -6,14 +6,18 @@ of its header) generalized to a linear classifier over hashed char
 trigrams, the standard fastText/langid.py architecture re-implemented
 from public knowledge only.
 
-The model is *derived deterministically at import time* from the seeded
-fixture vocabularies (sequali_spark.fixtures.LANG_VOCAB) — the analogue
-of sequali shipping its contaminant FASTA databases in-package.  No
-network, no external artifacts; identical weights in every process, so
-the oracle and every Spark executor score identically.
+The model is *derived deterministically* from the seeded fixture
+vocabularies (sequali_spark.fixtures.LANG_VOCAB) by
+scripts/build_models.py and shipped in-package as
+``resources/models/langid.npz`` — the analogue of sequali shipping its
+contaminant FASTA databases in-package.  No network, no training on a
+worker; identical weights in every process, so the oracle and every
+Spark executor score identically.
 """
 
 from __future__ import annotations
+
+from importlib import resources
 
 import numpy as np
 
@@ -123,26 +127,20 @@ class LangIdModel:
 
 
 _MODEL: LangIdModel | None = None
-_ARTIFACT = None  # resolved lazily
 
 
 def get_model() -> LangIdModel:
-    """Module-level singleton: load the baked .npz artifact when present
-    (executor fast path, cf. scripts/build_models.py), else train from
-    the seeded fixture vocabularies (identical result)."""
+    """Module-level singleton loaded from the baked
+    ``resources/models/langid.npz`` (scripts/build_models.py) through
+    importlib.resources, so it resolves from a checkout and from the
+    ``--py-files`` zip alike."""
     global _MODEL
     if _MODEL is None:
-        from pathlib import Path
-
-        art = Path(__file__).resolve().parent.parent / "resources" / "models" / "langid.npz"
-        if art.exists():
-            data = np.load(art, allow_pickle=True)
-            m = LangIdModel.__new__(LangIdModel)
+        art = resources.files("sequali_spark").joinpath("resources", "models", "langid.npz")
+        m = LangIdModel.__new__(LangIdModel)
+        # NpzFile reads lazily: take the arrays while the file is open
+        with art.open("rb") as f, np.load(f, allow_pickle=True) as data:
             m.langs = [str(x) for x in data["langs"]]
             m.weights = data["weights"]
-            _MODEL = m
-        else:
-            from sequali_spark.fixtures import lang_training_texts
-
-            _MODEL = LangIdModel(lang_training_texts())
+        _MODEL = m
     return _MODEL

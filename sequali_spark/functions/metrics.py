@@ -132,7 +132,8 @@ def compute_metrics(pdf: pd.DataFrame, needed: set[str] | None = None) -> pd.Dat
     char classes via one ``bytes.translate`` and a few ``bytes.count``
     per doc (kernels.char_class_counts); every per-token feature (hash,
     letter test, length) computed once per batch VOCABULARY
-    (kernels.token_vocab) and gathered back per token; literal counts
+    (kernels.token_vocab — one NUL-safe path for every batch) and
+    gathered back per token; literal counts
     via ``str.count`` and line counts via two multiline regexes per doc;
     scrubbing via a literal pre-screen plus compiled regexes on the few
     docs it flags (scrub.scrub_batch); models via NumPy.
@@ -157,29 +158,10 @@ def compute_metrics(pdf: pd.DataFrame, needed: set[str] | None = None) -> pd.Dat
     denom = np.maximum(n_bytes, 1).astype(np.float64)
 
     # ONE tokenize pass and ONE vocabulary per batch feed the repetition
-    # metrics, the Gopher letter-word test AND perplexity.  Per-doc NUL
-    # scan (memchr speed) licenses token_vocab's str-factorize fast path
-    # for clean docs' tokens; the rare NUL-bearing docs take the
-    # byte-safe path in a second vocabulary — one junk doc must not
-    # demote the whole batch.
+    # metrics, the Gopher letter-word test AND perplexity.
     texts_list = list(texts)
     flat, tok_lengths, tok_offsets = kernels.flatten_tokens(texts_list)
-    nul_docs = np.fromiter((b"\x00" in rb for rb in raw_bytes), bool, n)
-    if not nul_docs.any():
-        vocab = kernels.token_vocab(flat, assume_no_nul=True)
-    else:
-        # two vocabularies, merged by offsetting the NUL side's codes
-        tok_mask = np.repeat(nul_docs, tok_lengths)
-        flat_arr = np.asarray(flat, dtype=object)
-        clean = kernels.token_vocab(flat_arr[~tok_mask], assume_no_nul=True)
-        dirty = kernels.token_vocab(flat_arr[tok_mask])
-        codes = np.empty(len(flat), dtype=np.intp)
-        codes[~tok_mask] = clean.codes
-        codes[tok_mask] = dirty.codes + len(clean.hashes)
-        vocab = kernels.TokenVocab(
-            codes, *(np.concatenate(pair) for pair in zip(clean[1:], dirty[1:]))
-        )
-    tok_hashes, tok_alpha, tok_lens = vocab.gather()
+    tok_hashes, tok_alpha, tok_lens = kernels.token_vocab(flat).gather()
     ws = kernels.word_stats_from_tokens(
         texts_list, tok_lens, tok_lengths, tok_offsets, tok_hashes
     )

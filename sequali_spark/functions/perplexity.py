@@ -17,11 +17,15 @@ Implementation notes (the performance shape mirrors the reference's
   * per-doc log-prob sums via np.add.reduceat over the flattened
     token stream (one kernel pass per batch, like add_record_array).
 
-Deterministic: counts come from the seeded fixture corpus at import
-time; every executor and the oracle score identically.
+Deterministic: the count tables are trained on the seeded fixture
+corpus by scripts/build_models.py and shipped in-package as
+``resources/models/ngram_lm.npz``; every executor and the oracle load
+the same arrays and score identically.
 """
 
 from __future__ import annotations
+
+from importlib import resources
 
 import numpy as np
 
@@ -116,23 +120,18 @@ _MODEL: NgramLM | None = None
 
 
 def get_model() -> NgramLM:
-    """Singleton: baked .npz artifact when present (executor fast path,
-    cf. scripts/build_models.py), else train from the seeded corpus."""
+    """Singleton loaded from the baked ``resources/models/ngram_lm.npz``
+    (scripts/build_models.py) through importlib.resources, so it
+    resolves from a checkout and from the ``--py-files`` zip alike."""
     global _MODEL
     if _MODEL is None:
-        from pathlib import Path
-
-        art = Path(__file__).resolve().parent.parent / "resources" / "models" / "ngram_lm.npz"
-        if art.exists():
-            data = np.load(art)
-            m = NgramLM.__new__(NgramLM)
+        art = resources.files("sequali_spark").joinpath("resources", "models", "ngram_lm.npz")
+        m = NgramLM.__new__(NgramLM)
+        # NpzFile reads lazily: take the arrays while the file is open
+        with art.open("rb") as f, np.load(f) as data:
             m.uni = data["uni"]
             m.bi = data["bi"]
             m.total = int(data["total"][0])
-            m._empty_ppl = float(m.total + ADD_K * LM_DIM) / ADD_K
-            _MODEL = m
-        else:
-            from sequali_spark.fixtures import lm_training_texts
-
-            _MODEL = NgramLM(lm_training_texts())
+        m._empty_ppl = float(m.total + ADD_K * LM_DIM) / ADD_K
+        _MODEL = m
     return _MODEL

@@ -16,12 +16,10 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
-from pathlib import Path
+from importlib import resources
 
 import numpy as np
 import pandas as pd
-
-DEFAULT_PATTERNS_TSV = Path(__file__).resolve().parent.parent / "resources" / "patterns.tsv"
 
 
 @dataclass(frozen=True)
@@ -32,11 +30,14 @@ class ScrubPattern:
     replacement: str
 
 
-def load_patterns(path: Path | None = None) -> list[ScrubPattern]:
-    """TSV columns: name, category, regex, replacement ('#' = comment)."""
-    path = path or DEFAULT_PATTERNS_TSV
+def load_patterns() -> list[ScrubPattern]:
+    """The shipped ``resources/patterns.tsv``, read through
+    importlib.resources so it resolves from a checkout and from the
+    ``--py-files`` zip alike.  TSV columns: name, category, regex,
+    replacement ('#' = comment)."""
+    tsv = resources.files("sequali_spark").joinpath("resources", "patterns.tsv")
     out: list[ScrubPattern] = []
-    for line in path.read_text(encoding="utf-8").splitlines():
+    for line in tsv.read_text(encoding="utf-8").splitlines():
         if not line.strip() or line.startswith("#"):
             continue
         name, category, pattern, replacement = line.split("\t")
@@ -78,8 +79,11 @@ def _patterns_are_default() -> bool:
 
 def _maybe_dirty(t: str, has_digits: bool) -> bool:
     """O(len) literal pre-screen: every pattern in the default battery
-    requires a digit, an '@', or a toxicity literal — docs with none can
-    skip the regex battery entirely."""
+    requires an ASCII digit, an '@', or a toxicity literal — docs with
+    none can skip the regex battery entirely.  The shipped patterns
+    spell digits ``[0-9]``, never ``\\d`` (which also matches every
+    Unicode decimal digit), so the ASCII digit count the char
+    classifier supplies makes the screen exact."""
     if has_digits or "@" in t:
         return True
     return any(w in t for w in TOX_LITERALS)

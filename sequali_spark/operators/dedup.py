@@ -1272,7 +1272,6 @@ def ngram_jaccard_pairs(
 def connected_components(
     pairs: DataFrame,
     max_iter: int = 15,
-    strict: bool = True,
     stats: dict | None = None,
 ) -> DataFrame:
     """Connected components over near-dup pairs — the iterative
@@ -1292,15 +1291,12 @@ def connected_components(
 
     Non-convergence is never silent: if labels are still changing after
     ``max_iter`` rounds the result would split long chains into wrong
-    clusters — ``strict=True`` (default) raises; ``strict=False`` logs a
-    warning and returns the partial labels (callers that tolerate
-    over-segmentation, e.g. best-effort reporting, opt in explicitly).
+    clusters, so it raises.
 
     ``stats``, when passed, is filled with {"rounds": r, "converged":
     bool} — the rounds-to-convergence evidence an at-scale run records
     (rounds = graph diameter of the dup clusters).
     """
-    import warnings
     # Materialize the INPUT once before the union below embeds it twice.
     # ``pairs`` is typically the expensive LSH-verify chain; the
     # symmetrized edge union contains that subtree in BOTH branches, and
@@ -1373,15 +1369,12 @@ def connected_components(
             stats["rounds"] = rounds
             stats["converged"] = changed == 0
         if changed != 0:
-            msg = (
+            raise RuntimeError(
                 f"connected_components did not converge in {max_iter} rounds "
                 f"({changed} labels still changing) — component labels would "
                 "be over-segmented; raise max_iter (rounds needed = graph "
                 "diameter)"
             )
-            if strict:
-                raise RuntimeError(msg)
-            warnings.warn(msg, RuntimeWarning, stacklevel=2)
         return labels.orderBy("doc_id")
     finally:
         edges.unpersist()

@@ -15,25 +15,6 @@ from pyspark.sql import functions as F
 from sequali_spark.operators.textqc import load
 
 
-def _value_sum_cents() -> F.Column:
-    """Exact value sum emitted as BIGINT cents: sum in decimal (exact,
-    no float drift), then floor(x*100) into the integer domain.  The
-    reference's discipline is integer output domains everywhere (phred
-    ints, counts — report_modules.py emits ints/fractions-of-ints);
-    DECIMAL output columns are banned from driver-facing queries because
-    engine bindings disagree on how to surface them (pandas coerces
-    DECIMAL->float64), while BIGINT is unambiguous.  The intermediate
-    cast to decimal(30,6) keeps the *100 inside decimal range on both
-    engines (a 38-precision input would spill the multiply).
-
-    r9: retained as the REFERENCE formulation — the query paths now use
-    _with_value_split's exact integer component sums, which are
-    numerically identical (verified by collect-compare and the DuckDB
-    mirror) and stay on codegen long arithmetic."""
-    dec_sum = F.sum(F.col("value").cast("decimal(18,6)")).cast("decimal(30,6)")
-    return F.floor(dec_sum * 100).cast("long")
-
-
 def _with_value_split(e: DataFrame, *cols: str) -> DataFrame:
     """Project ``cols`` plus the exact micro-unit (unit, remainder)
     split of ``value`` — the long-split building block shared by the

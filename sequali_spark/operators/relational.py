@@ -20,10 +20,6 @@ from pyspark.sql import functions as F
 from sequali_spark.operators.textqc import load
 
 
-def _dec(col: str) -> F.Column:
-    return F.col(col).cast("decimal(18,6)")
-
-
 def _cents(dec_sum: F.Column) -> F.Column:
     """Exact decimal aggregate -> BIGINT cents.  The cast to
     decimal(30,s) before *100 keeps the multiply inside decimal range on
@@ -35,11 +31,6 @@ def _cents(dec_sum: F.Column) -> F.Column:
     component sums from pricing_summary, which are numerically identical
     (collect-compare + DuckDB mirror) and stay on codegen longs."""
     return F.floor(dec_sum.cast("decimal(30,6)") * 100).cast("long")
-
-
-def _cents12(dec_sum: F.Column) -> F.Column:
-    """Same, for scale-12 product sums (price * (1-discount))."""
-    return F.floor(dec_sum.cast("decimal(30,12)") * 100).cast("long")
 
 
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:

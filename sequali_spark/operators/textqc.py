@@ -834,11 +834,7 @@ def decontamination_hits(
     return docs.join(F.broadcast(probes), cond)
 
 
-def decontamination_hits_winnow(
-    docs: DataFrame,
-    probes: DataFrame,
-    max_postings: int | None = None,
-) -> DataFrame:
+def decontamination_hits_winnow(docs: DataFrame, probes: DataFrame) -> DataFrame:
     """The LARGE-probe-set decontamination path: same contract as
     decontamination_hits with an external probes table — (doc_id,
     probe_doc, probe) for every document containing a probe — but built
@@ -856,14 +852,7 @@ def decontamination_hits_winnow(
     verify makes the result EXACTLY equal to the broadcast path
     (equivalence pinned by tests/test_textqc_decon.py).  Shorter
     probes void the guarantee — rejected up front rather than
-    silently under-reporting contamination.
-
-    ``max_postings`` (optional): drop fingerprints held by more than
-    this many DOCUMENTS before the join — the stop-fingerprint skew
-    guard for corpora with ubiquitous boilerplate.  Off by default
-    because it can introduce false negatives for probes whose ONLY
-    shared fingerprint is a popular one; prefer exact unless the
-    posting histogram (a cheap groupBy count) shows hot keys."""
+    silently under-reporting contamination."""
     from sequali_spark.functions.kernels import WINNOW_K, WINNOW_W
     from sequali_spark.operators.dedup import winnow_postings
 
@@ -880,23 +869,6 @@ def decontamination_hits_winnow(
         )
     doc_posts = winnow_postings(docs)
     probe_posts = winnow_postings(probes, id_col="probe_doc", text_col="probe")
-    if max_postings is not None:
-        # hot-fingerprint sizes via groupBy (map-side partial agg: one
-        # row per fingerprint ever shuffles) + a broadcast ANTI-join —
-        # NOT a count-over-window, which would shuffle and materialize
-        # each fingerprint's full posting list on a single task: the
-        # exact hot-key concentration this parameter exists to mitigate
-        # (ADVICE r5; same pattern as _ring_edges' over_cap guard).
-        # The broadcast side holds only fingerprints ABOVE the cap —
-        # tiny by the same argument: ubiquitous-boilerplate keys are
-        # the pathology, not the population.
-        hot = (
-            doc_posts.groupBy("fp")
-            .agg(F.count("*").alias("_n"))
-            .filter(F.col("_n") > max_postings)
-            .select("fp")
-        )
-        doc_posts = doc_posts.join(F.broadcast(hot), "fp", "left_anti")
     cand = doc_posts.join(probe_posts, "fp").select("doc_id", "probe_doc").distinct()
     # exact verify per unique candidate pair: contains() with the text
     # re-attached — candidates are rare, so the wide text column is

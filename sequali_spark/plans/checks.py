@@ -17,10 +17,6 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
-
-
 def count_python_stages(df: DataFrame) -> int:
     """Number of Arrow/Python eval nodes that would EXECUTE — the
     one-pass discipline (SURVEY.md §7.4): the metric battery must be

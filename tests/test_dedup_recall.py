@@ -401,12 +401,12 @@ def test_keeper_election_skewed_neardup_component(spark, skewed_neardup_dir):
 
 def test_connected_components_nonconvergence_is_loud(spark):
     """A 21-node path graph needs 20 propagation rounds; at max_iter=5
-    strict mode raises instead of returning split clusters."""
+    it raises instead of returning split clusters."""
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(20)], schema="doc_a long, doc_b long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(chain, max_iter=5, strict=True)
+        dedup.connected_components(chain, max_iter=5)
     labels = {
         r["doc_id"]: r["component"]
         for r in dedup.connected_components(chain, max_iter=25).collect()

@@ -21,6 +21,77 @@ def test_package_zip():
     assert "sequali_spark/resources/patterns.tsv" in names  # models ship in-zip
 
 
+# Run twice by test_package_zip_runs_outside_the_repo: as a script with
+# only the zip importable, and in-process from the checkout.  It builds
+# a batch of inputs the generator never produces and digests the
+# compute_metrics frame (repr of a float is exact, so the digest is
+# bit-level).
+_ZIP_PROBE = """
+import hashlib, json, sys
+
+import pandas as pd
+
+
+def batch():
+    texts = ["a\\x00b c\\x00", "\\u212a elvin ok", "", None,
+             "my ssn is 123-45-6789 ok", "what a frakking mess"]
+    n = len(texts)
+    return pd.DataFrame({
+        "url": [f"https://x.test/{i}" for i in range(n)],
+        "warc_ts": pd.to_datetime(["2024-01-01"] * n),
+        "html": [None] * n,
+        "text": texts,
+        "lang": ["en"] * n,
+    })
+
+
+def digest(frame):
+    h = hashlib.blake2b()
+    for col in frame.columns:
+        h.update(col.encode() + repr(frame[col].tolist()).encode())
+    return h.hexdigest()
+
+
+if __name__ == "__main__":
+    import sequali_spark
+    from sequali_spark.functions.metrics import compute_metrics
+
+    print(json.dumps({
+        "file": sequali_spark.__file__,
+        "digest": digest(compute_metrics(batch())),
+        "fixtures_imported": "sequali_spark.fixtures" in sys.modules,
+    }))
+"""
+
+
+def test_package_zip_runs_outside_the_repo(tmp_path):
+    """The documented deployment: the zip alone on PYTHONPATH, run from
+    outside the checkout.  The models and scrub patterns load from
+    inside the zip (nothing is retrained from fixtures) and the metric
+    frame is bit-identical to the in-process one."""
+    import runpy
+
+    subprocess.run(["sh", "scripts/package.sh"], cwd=REPO, check=True, capture_output=True)
+    zip_path = os.path.join(REPO, "dist", "sequali_spark.zip")
+    probe = tmp_path / "probe.py"
+    probe.write_text(_ZIP_PROBE)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["PYTHONPATH"] = zip_path
+    proc = subprocess.run(
+        [sys.executable, str(probe)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert got["file"].startswith(zip_path + os.sep), got["file"]
+    assert not got["fixtures_imported"]
+
+    from sequali_spark.functions.metrics import compute_metrics
+
+    ns = runpy.run_path(str(probe), run_name="probe")
+    assert got["digest"] == ns["digest"](compute_metrics(ns["batch"]()))
+
+
 def test_batch_job_cli(spark, pages_tiny, tmp_path):
     src = str(tmp_path / "pages")
     from tests.test_pipeline import pages_df

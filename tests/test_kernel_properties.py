@@ -137,20 +137,6 @@ def test_simhash_majority_definition(ts):
         assert got == exp & 0x7FFFFFFFFFFFFFFF
 
 
-@given(st.lists(st.text(max_size=30), min_size=0, max_size=100))
-@settings(max_examples=50, deadline=None)
-def test_hash_tokens_fast_path_matches_when_nul_free(toks):
-    """assume_no_nul is only valid on NUL-free batches — assert it
-    matches crc32 there (the safe default is covered separately)."""
-    import zlib
-    import numpy as np
-
-    nul_free = [t for t in toks if "\x00" not in t]
-    got = kernels.hash_tokens(nul_free, assume_no_nul=True)
-    exp = np.array([zlib.crc32(t.encode("utf-8")) for t in nul_free], dtype=np.uint64)
-    assert got.shape == exp.shape and (got == exp).all()
-
-
 # tokens skewed toward NUL and case-folding code points (U+212A KELVIN
 # SIGN, U+0130, sharp s) next to plain ASCII letters and digits
 _vocab_tokens = st.lists(
@@ -168,16 +154,22 @@ _vocab_tokens = st.lists(
 @settings(max_examples=50, deadline=None)
 def test_token_vocab_gather_matches_per_token(toks):
     """The per-unique features fanned back out through ``codes`` equal
-    the per-token definitions, on the bytes path (any tokens) and on
-    the str fast path (NUL-free tokens only)."""
+    the per-token definitions."""
     import re
     import zlib
 
-    for batch, assume_no_nul in ((toks, False), ([t for t in toks if "\x00" not in t], True)):
-        hashes, alpha, lens = kernels.token_vocab(batch, assume_no_nul=assume_no_nul).gather()
-        assert list(hashes) == [zlib.crc32(t.encode("utf-8")) for t in batch]
-        assert list(alpha) == [bool(re.search("[A-Za-z]", t)) for t in batch]
-        assert list(lens) == [len(t) for t in batch]
+    hashes, alpha, lens = kernels.token_vocab(toks).gather()
+    assert list(hashes) == [zlib.crc32(t.encode("utf-8")) for t in toks]
+    assert list(alpha) == [bool(re.search("[A-Za-z]", t)) for t in toks]
+    assert list(lens) == [len(t) for t in toks]
+
+
+def test_token_vocab_keeps_nul_tokens_distinct():
+    """NUL-bearing tokens are distinct from their NUL-free prefixes
+    (pandas' str factorize would fold '' and '\\x00' into one unique)."""
+    v = kernels.token_vocab(["", "\x00", "a\x00", "a", "\x00"])
+    assert len(v.hashes) == 4
+    assert list(v.codes) == [0, 1, 2, 3, 1]
 
 
 def _naive_class_row(b: bytes) -> list[int]:

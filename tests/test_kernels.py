@@ -119,28 +119,78 @@ def test_token_cache_cap_holds_within_one_batch(monkeypatch):
     assert out[42] == zlib.crc32(b"tok42")
 
 
+def _pages(texts: list[str | None]) -> pd.DataFrame:
+    """A compute_metrics input batch with the given texts."""
+    n = len(texts)
+    return pd.DataFrame(
+        {
+            "url": [f"u{i}" for i in range(n)],
+            "warc_ts": pd.to_datetime(["2024-01-01"] * n),
+            "html": [None] * n,
+            "text": texts,
+            "lang": ["en"] * n,
+        }
+    )
+
+
 def test_battery_words_are_lowercased_tokens():
     """Battery words are ``kernels.tokenize`` tokens, i.e. LOWERCASED
     before the letter test: U+212A KELVIN SIGN lowercases to ASCII 'k'
     (a letter-bearing word), and U+0130 lowercases to two code points
-    (length 2).  The batch mixes the NUL (bytes) path and the clean
-    (str) path, so both vocabularies are pinned to the same values."""
+    (length 2).  A NUL-bearing doc shares the batch vocabulary with
+    the clean ones and gets the same per-token values."""
     from sequali_spark.functions.metrics import compute_metrics
 
     texts = ["\u212a 12 34", "\u0130 12", "a\x00 12 \x00", "ok fine", ""]
-    pdf = pd.DataFrame(
-        {
-            "url": [f"u{i}" for i in range(len(texts))],
-            "warc_ts": pd.to_datetime(["2024-01-01"] * len(texts)),
-            "html": [None] * len(texts),
-            "text": texts,
-            "lang": ["en"] * len(texts),
-        }
-    )
-    m = compute_metrics(pdf)
+    m = compute_metrics(_pages(texts))
     assert list(m["alpha_word_frac"]) == [1 / 3, 0.5, 1 / 3, 1.0, 1.0]
     assert list(m["n_words"]) == [3, 2, 3, 2, 0]
     assert list(m["mean_word_len"]) == [5 / 3, 2.0, 5 / 3, 3.0, 0.0]
+
+
+def test_scrub_prescreen_exact_on_non_ascii_digits():
+    """The literal pre-screen sees only ASCII digit counts, so the
+    shipped patterns spell digits ``[0-9]``: an Arabic-Indic SSN is
+    never scrubbed, whether or not an unrelated ASCII digit elsewhere
+    in the doc opens the screen, and scrub_batch gives the same result
+    with and without the screen."""
+    from sequali_spark.functions import scrub
+    from sequali_spark.functions.metrics import compute_metrics
+
+    texts = [
+        "my ssn is \u0663\u0663\u0663-\u0663\u0663-\u0663\u0663\u0663\u0663 ok",
+        "my ssn is \u0663\u0663\u0663-\u0663\u0663-\u0663\u0663\u0663\u0663 ok, room 7",
+        "my ssn is 123-45-6789 ok",
+        "call me at 555-123-4567 today",
+    ]
+    m = compute_metrics(_pages(texts))
+    assert list(m["pii_hits"]) == [0, 0, 1, 1]
+    assert list(m["scrubbed_text"]) == [
+        None, None, b"my ssn is <SSN> ok", b"call me at <PHONE> today"
+    ]
+    s = pd.Series(texts)
+    digits = kernels.char_class_counts([t.encode("utf-8") for t in texts])
+    screened, screened_hits = scrub.scrub_batch(s, digit_counts=digits[:, kernels.CLASS_DIGIT])
+    full, full_hits = scrub.scrub_batch(s)
+    assert list(screened) == list(full)
+    pd.testing.assert_frame_equal(screened_hits, full_hits)
+
+
+def test_scrub_prescreen_literals_match_shipped_patterns():
+    """The pre-screen copies facts about the shipped battery: its
+    pattern names, the tox_grawlix alternation, and ASCII-only digit
+    classes.  An edit to patterns.tsv that breaks any of them must fail
+    here, not silently under-scrub."""
+    import re
+
+    from sequali_spark.functions import scrub
+
+    pats = {p.name: p.regex.pattern for p in scrub.get_patterns()}
+    assert set(pats) == scrub._DEFAULT_NAMES
+    alt = re.fullmatch(r"\\b\(\?:([^()]*)\)\\b", pats["tox_grawlix"])
+    assert alt is not None, pats["tox_grawlix"]
+    assert alt.group(1).split("|") == scrub.TOX_LITERALS
+    assert not any("\\d" in p for p in pats.values())
 
 
 def test_pruned_metrics_keep_decision_identical():
