@@ -4,6 +4,7 @@ The NanoStats/time-series lineage (reference: report_modules.py:1951-2045
 buckets reads into time slots with per-slot aggregates and distinct
 channels) expressed as tumbling-window groupBys, window-function
 cumulatives (A20's cumsum pattern), and gap-based sessionization.
+Exact value sums (integer cents) run through ``money``.
 """
 
 from __future__ import annotations
@@ -12,25 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from sequali_spark.operators import money
 from sequali_spark.operators.textqc import load
-
-
-def _with_value_split(e: DataFrame, *cols: str) -> DataFrame:
-    """Project ``cols`` plus the exact micro-unit (unit, remainder)
-    split of ``value`` — the long-split building block shared by the
-    value-summing queries (derivation at hourly_report): v6 is the
-    identical decimal(18,6) cast the old decimal path used, converted
-    once per row to an exact integer; the component sums are plain
-    codegen long sums and floor(sum*100) is recomposed as
-    su*100 + sr div 10000."""
-    names = [c.rsplit(" as ", 1)[-1].strip() for c in cols]
-    return e.selectExpr(
-        *cols, "cast(cast(value as decimal(18,6)) * 1000000 as long) as v6"
-    ).selectExpr(
-        *names,
-        "(v6 - pmod(v6, 1000000)) div 1000000 as vu",
-        "pmod(v6, 1000000) as vr",
-    )
 
 
 def hourly_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -48,33 +32,20 @@ def hourly_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     #    users = count of non-null user rows.  Exactly countDistinct's
     #    semantics (NULL users are not counted; rows still count toward
     #    `events` via the summed per-user counts).
-    # 3. Long-split exact value sum (see relational.pricing_summary):
-    #    micro-units via the identical decimal(18,6) cast, (unit,
-    #    remainder) component sums in plain codegen longs, floor(x*100)
-    #    recomposed with integer arithmetic — exact across both levels
-    #    because component sums of exact integers are exact.
+    # 3. Long-split exact value sum (money), exact across both levels.
     e = spread(load(spark, sf_dir, "events"), key="event_id")
-    per_user = (
-        _with_value_split(e, "date_trunc('hour', ts) as hour", "user_id")
-        .groupBy("hour", "user_id")
-        .agg(
-            F.count("*").alias("cnt"),
-            F.sum("vu").alias("svu"),
-            F.sum("vr").alias("svr"),
-        )
+    sel = money.split(e, ["date_trunc('hour', ts) as hour", "user_id"], value="value")
+    per_user = sel.groupBy("hour", "user_id").agg(
+        F.count("*").alias("cnt"), *money.sums(sel, "value")
     )
     return (
         per_user.groupBy("hour")
         .agg(
             F.sum("cnt").alias("events"),
             F.count("user_id").alias("distinct_users"),
-            F.sum("svu").alias("su"),
-            F.sum("svr").alias("sr"),
+            *money.sums(sel, "value"),
         )
-        .selectExpr(
-            "hour", "events", "distinct_users",
-            "su * 100 + sr div 10000 as value_sum_cents",
-        )
+        .select("hour", "events", "distinct_users", money.cents(sel, "value").alias("value_sum_cents"))
         .orderBy("hour")
     )
 
@@ -86,27 +57,18 @@ def event_type_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sequali_spark.session import spread
 
     e = spread(load(spark, sf_dir, "events"), key="event_id")
-    per_user = (
-        _with_value_split(e, "event_type", "user_id")
-        .groupBy("event_type", "user_id")
-        .agg(
-            F.count("*").alias("cnt"),
-            F.sum("vu").alias("svu"),
-            F.sum("vr").alias("svr"),
-        )
+    sel = money.split(e, ["event_type", "user_id"], value="value")
+    per_user = sel.groupBy("event_type", "user_id").agg(
+        F.count("*").alias("cnt"), *money.sums(sel, "value")
     )
     return (
         per_user.groupBy("event_type")
         .agg(
             F.sum("cnt").alias("events"),
             F.count("user_id").alias("distinct_users"),
-            F.sum("svu").alias("su"),
-            F.sum("svr").alias("sr"),
+            *money.sums(sel, "value"),
         )
-        .selectExpr(
-            "event_type", "events", "distinct_users",
-            "su * 100 + sr div 10000 as value_sum_cents",
-        )
+        .select("event_type", "events", "distinct_users", money.cents(sel, "value").alias("value_sum_cents"))
         .orderBy("event_type")
     )
 
@@ -158,22 +120,15 @@ def top_users_by_value(spark: SparkSession, sf_dir: str, top_n: int = 25) -> Dat
     pattern).  Ordering is on the emitted cents column so both engines
     rank by the identical integer key (floor ties broken by user_id the
     same way on both sides)."""
-    # r9: long-split value sum (see hourly_report); no distinct here so
-    # a single two-phase groupBy suffices.  NOT spread: the 15k-group
-    # map-side partial agg is cheap and the spread exchange measured as
-    # a net tax (ABAB 0.59/0.60 s unspread-r8 vs 0.72/0.74 s spread)
-    e = load(spark, sf_dir, "events")
+    # r9: long-split value sum (money); no distinct here so a single
+    # two-phase groupBy suffices.  NOT spread: the 15k-group map-side
+    # partial agg is cheap and the spread exchange measured as a net
+    # tax (ABAB 0.59/0.60 s unspread-r8 vs 0.72/0.74 s spread)
+    sel = money.split(load(spark, sf_dir, "events"), ["user_id"], value="value")
     return (
-        _with_value_split(e, "user_id")
-        .groupBy("user_id")
-        .agg(
-            F.sum("vu").alias("su"),
-            F.sum("vr").alias("sr"),
-            F.count("*").alias("events"),
-        )
-        .selectExpr(
-            "user_id", "su * 100 + sr div 10000 as value_sum_cents", "events"
-        )
+        sel.groupBy("user_id")
+        .agg(*money.sums(sel, "value"), F.count("*").alias("events"))
+        .select("user_id", money.cents(sel, "value").alias("value_sum_cents"), "events")
         .orderBy(F.desc("value_sum_cents"), "user_id")
         .limit(top_n)
     )

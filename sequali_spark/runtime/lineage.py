@@ -85,8 +85,9 @@ def run_resumable(
 
     ``force_units`` re-runs specific units even if lineage marks them
     done — the reprocess path when a unit's INPUT changed (late-arriving
-    crawl data, fixed extraction).  Dynamic partition overwrite makes
-    the re-run a MERGE-by-replacement: the unit's output partition is
+    crawl data, fixed extraction).  Dynamic partition overwrite (an
+    option on this write, never the session's mode) makes the re-run a
+    MERGE-by-replacement: the unit's output partition is
     replaced exactly, never appended, so downstream readers see one
     consistent copy (on Iceberg this is `overwritePartitions`; parquet
     dynamic overwrite is the sandbox equivalent).
@@ -94,7 +95,6 @@ def run_resumable(
     from sequali_spark.pipeline import quality_pipeline
 
     run_id = uuid.uuid4().hex
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     all_units = [
         str(r["unit"])
@@ -128,6 +128,7 @@ def run_resumable(
         )
         (
             observed.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("day")
             .parquet(out_dir)
         )

@@ -41,15 +41,21 @@ class TableIO:
 
     def write_partitioned(self, df: DataFrame, ref: str, partition_col: str) -> None:
         """Idempotent per-partition write: Iceberg MERGE/overwrite-by-
-        filter; parquet dynamic partition overwrite."""
+        filter; parquet dynamic partition overwrite, set on this write
+        only (a session-wide mode would leak into every later
+        partitioned overwrite)."""
         if self.fmt == "iceberg":
             (
                 df.writeTo(ref)
                 .overwritePartitions()
             )
             return
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        df.write.mode("overwrite").partitionBy(partition_col).parquet(ref)
+        (
+            df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(partition_col)
+            .parquet(ref)
+        )
 
     def merge_upsert_sql(self, target_ref: str, source_view: str, key_col: str) -> str:
         """The exact row-level MERGE the label pipeline issues on

@@ -196,6 +196,51 @@ def test_table_io_merge_upsert_rejects_duplicate_source_keys(spark, tmp_path):
     assert spark.read.parquet(ref).count() == 1
 
 
+def test_partitioned_writes_leave_session_overwrite_mode_alone(spark, pages_tiny, tmp_path):
+    """Dynamic partition overwrite is a per-write option.  If
+    ``write_partitioned`` or ``run_resumable`` switched the SESSION to
+    dynamic mode, a later full overwrite of a partitioned path — here
+    an IVF-PQ index rebuilt with 4 cells over a 16-cell one — would keep
+    the 12 stale cells the new frame lacks."""
+    import numpy as np
+
+    from sequali_spark.operators import similarity as sim
+    from sequali_spark.runtime import lineage
+    from tests.test_pipeline import pages_df
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    mode = spark.conf.get(key)
+    rng = np.random.RandomState(7)
+    vecs = rng.randn(500, sim.EMB_DIM)
+    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
+    e = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        schema="vec_id long, embedding array<float>",
+    )
+    index = str(tmp_path / "ivfpq_index")
+
+    def write_index(n_cells):
+        cents = sim.kmeans_centroids(e, n_centroids=n_cells, n_iter=2)
+        books = sim.pq_train_residual(e, cents, n_sample=500, n_iter=2)
+        sim.write_ivfpq_index(sim.ivfpq_encode(e, cents, books), index)
+
+    write_index(16)
+    tables.TableIO(spark, "parquet").write_partitioned(
+        spark.createDataFrame([(1, "a")], schema="k int, p string"), str(tmp_path / "t"), "p"
+    )
+    assert spark.conf.get(key) == mode
+    write_index(4)
+    back = sim.read_ivfpq_index(spark, index)
+    assert back.count() == 500
+    assert back.select("centroid").distinct().count() == 4
+
+    lineage.run_resumable(
+        spark, pages_df(spark, pages_tiny), str(tmp_path / "labels"),
+        str(tmp_path / "lineage"), max_units=1,
+    )
+    assert spark.conf.get(key) == mode
+
+
 # --- multimodal --------------------------------------------------------------
 
 @pytest.fixture()

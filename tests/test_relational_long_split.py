@@ -1,11 +1,12 @@
-"""r9: the relational money sums run on codegen longs, not decimal
-buffers.
+"""The relational and events money sums run on codegen longs, not
+decimal buffers.
 
-The long-split rewrite (OPTIMIZATION_r09.md "Exact long-split money
-sums") converts each value once per row via the SAME decimal(18,6)
-cast the reference formulation used, then sums plain long components —
-so it is value-identical by construction (gated by the DuckDB mirror in
-test_entry_parity).  These tests pin the OPTIMIZATION
+The long split (``operators/money.py``; OPTIMIZATION_r09.md "Exact
+long-split money sums") converts each value once per row via the SAME
+decimal(18,6) cast the reference formulation used, then sums plain long
+components — so it is value-identical by construction (gated by the
+DuckDB mirror in test_entry_parity, and against ``decimal.Decimal`` in
+test_money).  These tests pin the OPTIMIZATION
 itself: if a refactor reintroduces a decimal sum buffer into one of the
 rewritten aggregates, the plan falls off Spark's compact-long fast path
 and the regression is silent at toy scale — the plan shape is the only
@@ -17,12 +18,10 @@ import re
 
 import pytest
 
-from sequali_spark.operators import relational
+from sequali_spark.operators import events, relational
 from sequali_spark.plans import checks
 
-# Queries whose aggregation layer was rewritten to long-split component
-# sums.  pricing_summary/top_unshipped/rollup were rewritten mid-round,
-# region/part_type/value_band at round end.
+# Every query that sums money through operators/money.py.
 LONG_SPLIT = {
     "pricing_summary": lambda spark, sf: relational.pricing_summary(spark, sf),
     "top_unshipped": lambda spark, sf: relational.top_unshipped_orders(spark, sf),
@@ -30,6 +29,9 @@ LONG_SPLIT = {
     "region_revenue": lambda spark, sf: relational.region_revenue(spark, sf),
     "part_type_share": lambda spark, sf: relational.part_type_revenue_share(spark, sf),
     "value_band_join": lambda spark, sf: relational.value_band_join(spark, sf),
+    "events_hourly_report": lambda spark, sf: events.hourly_report(spark, sf),
+    "events_type_totals": lambda spark, sf: events.event_type_totals(spark, sf),
+    "events_top_users": lambda spark, sf: events.top_users_by_value(spark, sf),
 }
 
 
