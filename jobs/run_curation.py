@@ -16,19 +16,21 @@ Drop precedence (each doc gets ONE drop_reason, checked in this order):
                  re-elected among members that survive the OTHER passes
                  (see curate) so a cluster whose min-id member fails the
                  gates still keeps a clean representative
-  contaminated   contains a benchmark probe (decontamination_hits)
+  contaminated   contains a benchmark probe; the job picks the
+                 broadcast theta-join or, once the --probes table
+                 exceeds the broadcast guard, the winnowed equi-join
+                 (see _decon_hits) — both give the same decisions
 
 Stats JSON reconciles exactly: kept + dropped_* == input docs.
 
 Resume story: the expensive stage (the per-doc decision table — gates,
 dedup sketch+components, decontamination) is CHECKPOINTED to
-<output>_decisions alongside a one-row manifest of the producing
-invocation (input path + parameters); a re-invocation after a crash
-reuses the checkpoint ONLY when the manifest matches (a changed
---min-gates/--input recomputes instead of silently curating with stale
-decisions), and only re-runs the cheap output join (--force always
-recomputes).  Existence checks go through the Hadoop FileSystem API so
-resume works on hdfs://s3a:// outputs, not just the local FS.  The gate
+<output>_decisions by runtime.checkpoint.stage, alongside a one-row
+manifest of the producing invocation (input path + parameters); a
+re-invocation after a crash reuses the checkpoint ONLY when the
+manifest matches (a changed --min-gates/--input recomputes instead of
+silently curating with stale decisions), and only re-runs the cheap
+output join (--force always recomputes).  The gate
 battery is per-doc and could also run under runtime.lineage day-units,
 but keeper selection and decontamination are corpus-GLOBAL joins — they
 cannot be computed per-unit without changing semantics, so the honest
@@ -45,32 +47,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _decon_hits(docs: DataFrame, probes: DataFrame | None, path: str) -> DataFrame:
-    """Route decontamination by probe-set size (VERDICT r5 Next-round
-    #5: the broadcast guard's raise used to just point users at the
-    winnow path; now the job routes there itself).
+def _decon_hits(docs: DataFrame, probes: DataFrame | None) -> DataFrame:
+    """Route decontamination by probe-table size: the broadcast
+    contains() theta-join for benchmark-scale probe sets (KB-MB), the
+    winnowed-fingerprint equi-join once the table exceeds
+    MAX_BROADCAST_PROBES (past which the broadcast path raises) — ONE
+    bounded limit+count job decides.
 
-    - ``broadcast``: contains() theta-join — right for benchmark-scale
-      probe sets (KB-MB); raises past MAX_BROADCAST_PROBES.
-    - ``winnow``: winnowed-fingerprint equi-join — the same contract
-      for arbitrarily large probe tables (requires every probe >=
-      w+k-1 = 23 chars, the shared-fingerprint guarantee threshold).
-    - ``auto`` (default): broadcast until the probe table exceeds the
-      broadcast guard, winnow beyond it — ONE bounded limit+count job
-      decides.
-
-    Both paths produce IDENTICAL hits for guarantee-length probes
-    (equivalence pinned by tests/test_textqc_decon.py), which is why
-    the resume manifest does not fingerprint the route: the decision
-    table is path-independent."""
+    Both routes produce IDENTICAL hits for guarantee-length probes
+    (>= w+k-1 = 23 chars; equivalence pinned by
+    tests/test_textqc_decon.py), which is why the resume manifest does
+    not fingerprint the route: the decision table is route-independent."""
     from sequali_spark.operators import textqc
 
-    if probes is None or path == "broadcast":
-        return textqc.decontamination_hits(docs, probes=probes)
-    if path == "winnow":
-        return textqc.decontamination_hits_winnow(docs, probes)
-    if path != "auto":
-        raise ValueError(f"unknown decon path {path!r}")
+    if probes is None:
+        return textqc.decontamination_hits(docs)
     cap = textqc.MAX_BROADCAST_PROBES
     if probes.limit(cap + 1).count() > cap:
         return textqc.decontamination_hits_winnow(docs, probes)
@@ -84,7 +75,6 @@ def curate(
     min_gates: int = 4,
     probes: DataFrame | None = None,
     docs: DataFrame | None = None,
-    decon_path: str = "auto",
 ) -> DataFrame:
     """documents + per-doc drop decision: (doc_id, source, n_chars,
     keep, drop_reason).  All three passes (gate battery, dedup sketch,
@@ -112,7 +102,7 @@ def curate(
         "doc_id", "gates_passed"
     )
     contaminated = (
-        _decon_hits(docs, probes, decon_path)
+        _decon_hits(docs, probes)
         .select("doc_id")
         .distinct()
         .withColumn("_is_contaminated", F.lit(True))
@@ -242,15 +232,10 @@ def main() -> None:
         "(counted separately in stats — the decision table and its "
         "checkpoint are NOT affected by this flag)",
     )
-    ap.add_argument(
-        "--decon-path", choices=["auto", "broadcast", "winnow"], default="auto",
-        help="decontamination plan: broadcast contains() theta-join, winnowed-"
-        "fingerprint equi-join, or auto (winnow once the probe table exceeds "
-        "the broadcast guard); both produce identical decisions",
-    )
     args = ap.parse_args()
 
     from sequali_spark.operators import textqc
+    from sequali_spark.runtime import checkpoint
     from sequali_spark.session import get_spark
 
     t_main0 = time.time()
@@ -286,27 +271,11 @@ def main() -> None:
     # the 6-7 s serial pre-stage pass).
     docs = textqc.load(spark, args.input, "documents")
 
-    dec_path = args.output.rstrip("/") + "_decisions"
-    man_path = dec_path + "_manifest"
-    # a checkpoint is reusable ONLY if it was produced by the same
-    # input + parameters: silently reusing decisions computed with a
-    # different --min-gates/--input would curate with stale semantics
-    from sequali_spark.runtime.checkpoint import (
-        invalidate_stage_manifest,
-        stage_is_reusable,
-        write_stage_manifest,
-    )
-
     manifest_rows = _manifest(args, probes, docs)
     docs = docs.persist()
     _mark("fingerprint_scan")  # file-listing stat, no data scan
-    resumed = (not args.force) and stage_is_reusable(
-        spark, dec_path, man_path, manifest_rows, MANIFEST_SCHEMA
-    )
-    if not resumed:
-        # delete-manifest-first: a crash mid-recompute must never leave
-        # the previous manifest matching freshly-overwritten decisions
-        invalidate_stage_manifest(spark, man_path)
+
+    def build() -> DataFrame:
         decisions_df = curate(
             spark,
             args.input,
@@ -314,15 +283,26 @@ def main() -> None:
             min_gates=args.min_gates,
             probes=probes,
             docs=docs,
-            decon_path=args.decon_path,
         )
         # the eager portion of curate(): sketch-pin materialization,
         # LSH candidate stage, CC rounds, keeper pins
         _mark("curate_eager_tail")
-        decisions_df.write.mode("overwrite").parquet(dec_path)
+        return decisions_df
+
+    # a checkpoint is reusable ONLY if it was produced by the same
+    # input + parameters: silently reusing decisions computed with a
+    # different --min-gates/--input would curate with stale semantics
+    decisions, resumed = checkpoint.stage(
+        spark,
+        args.output.rstrip("/") + "_decisions",
+        manifest_rows,
+        MANIFEST_SCHEMA,
+        build,
+        force=args.force,
+    )
+    if not resumed:
         _mark("decisions_write")
-        write_stage_manifest(spark, man_path, manifest_rows, MANIFEST_SCHEMA)
-    decisions = spark.read.parquet(dec_path).persist()
+    decisions = decisions.persist()
 
     curated = docs.join(
         decisions.filter("keep").select("doc_id"), "doc_id"

@@ -12,9 +12,10 @@ corpus text.
 Stage layout (the resume story):
 
   stage 1  SIGNATURES (expensive — the only pass over the text):
-           exact-dup digest + 64-perm minhash + band keys per doc,
-           written to <output>_sigs with a one-row manifest of the
-           producing invocation.  The manifest fingerprints the INPUT
+           exact-dup digest + 64-perm minhash + band keys + bit planes
+           per doc, written to <output>_sigs by runtime.checkpoint.stage
+           with a one-row manifest of the producing invocation (sketch
+           shape included).  The manifest fingerprints the INPUT
            by its backing file listing (path, length, mtime — parquet
            part-files are immutable, so any in-place rewrite of ids OR
            text changes the listing; zero data scanned) and forces a
@@ -41,7 +42,8 @@ import json
 from pyspark.sql import functions as F
 
 SIGS_MANIFEST_SCHEMA = (
-    "input string, n_minhash int, lsh_bands int, n_docs long, content_fp string"
+    "input string, n_minhash int, lsh_bands int, pack_planes int, n_docs long, "
+    "content_fp string"
 )
 
 
@@ -59,40 +61,31 @@ def main() -> None:
     args = ap.parse_args()
 
     from sequali_spark.operators import dedup
-    from sequali_spark.runtime.checkpoint import (
-        file_fingerprint,
-        invalidate_stage_manifest,
-        stage_is_reusable,
-        write_stage_manifest,
-    )
+    from sequali_spark.runtime import checkpoint
     from sequali_spark.session import get_spark
 
     spark = get_spark(app_name="sequali_dedup")
     docs = spark.read.parquet(f"{args.input}/documents.parquet")
 
-    sigs_path = args.output.rstrip("/") + "_sigs"
-    man_path = sigs_path + "_manifest"
     # fingerprint the backing file listing (path, length, mtime): an
     # in-place refresh that keeps ids but changes text rewrites parquet
     # part-files, so the listing invalidates (r8: replaced the full
     # id+text content scan — a serial pre-stage pass; see
     # runtime.checkpoint.file_fingerprint).  The row count for stats
     # comes from parquet footer metadata, not a data scan.
-    fp = file_fingerprint(docs, "doc_id", "text")
+    fp = checkpoint.file_fingerprint(docs, "doc_id", "text")
     n_docs = docs.count()
-    manifest_rows = [(args.input, dedup.N_MINHASH, dedup.LSH_BANDS, n_docs, fp)]
-    resumed_sigs = (not args.force) and stage_is_reusable(
-        spark, sigs_path, man_path, manifest_rows, SIGS_MANIFEST_SCHEMA
+    manifest_rows = [
+        (args.input, dedup.N_MINHASH, dedup.LSH_BANDS, dedup.N_PACK_PLANES, n_docs, fp)
+    ]
+    labeled, resumed_sigs = checkpoint.stage(
+        spark,
+        args.output.rstrip("/") + "_sigs",
+        manifest_rows,
+        SIGS_MANIFEST_SCHEMA,
+        lambda: dedup.exact_rep_labeled_sigs(docs.select("doc_id", "text")),
+        force=args.force,
     )
-    if not resumed_sigs:
-        # delete-manifest-first: a crash mid-recompute must never leave
-        # the previous manifest matching freshly-overwritten data
-        invalidate_stage_manifest(spark, man_path)
-        dedup.exact_rep_labeled_sigs(docs.select("doc_id", "text")).write.mode(
-            "overwrite"
-        ).parquet(sigs_path)
-        write_stage_manifest(spark, man_path, manifest_rows, SIGS_MANIFEST_SCHEMA)
-    labeled = spark.read.parquet(sigs_path)
 
     cc_stats: dict = {}
     if args.mode == "keepers":

@@ -20,8 +20,10 @@ Modes:
   report     re-render the JSON report from a SAVED labels table, no
              recompute (the reference's `sequali-report saved.json`
              path, K4): --input is a labels parquet dir, --report the
-             destination; aggregates soft-degrade to whatever metric
-             columns the table carries
+             destination.  Batch --report and this mode share one
+             builder, aggregates.corpus_report, so a table saved with
+             every metric column re-renders the batch report; a pruned
+             table renders the blocks its columns support
 
 Everything model-side (langid weights, LM counts, scrub patterns) is
 shipped inside the zip and read through importlib.resources — no
@@ -32,8 +34,6 @@ from __future__ import annotations
 
 import argparse
 import json
-
-from pyspark.sql import functions as F
 
 
 def main() -> None:
@@ -49,6 +49,7 @@ def main() -> None:
     ap.add_argument("--partitions", type=int, default=None)
     args = ap.parse_args()
 
+    from sequali_spark.operators.aggregates import corpus_report
     from sequali_spark.session import get_spark
 
     spark = get_spark(app_name=f"sequali_pipeline_{args.mode}")
@@ -64,26 +65,7 @@ def main() -> None:
     if args.mode == "report":
         if not args.report:
             raise SystemExit("--mode report requires --report <dest.json>")
-        from sequali_spark.operators import aggregates as agg
-
-        labels = spark.read.parquet(args.input)
-        cols = set(labels.columns)
-        counter_aggs = [F.count("*").alias("docs_seen")]
-        if "keep" in cols:
-            counter_aggs.append(F.sum(F.col("keep").cast("long")).alias("docs_kept"))
-        report: dict = {"counters": labels.agg(*counter_aggs).first().asDict()}
-        if "drop_reasons" in cols:
-            report["rule_hits"] = {
-                r["rule"]: r["hits"] for r in agg.rule_hit_counts(labels).collect()
-            }
-        if "lang_pred" in cols:
-            report["lang_hist"] = {
-                r["lang"]: r["docs"] for r in agg.lang_histogram(labels).collect()
-            }
-        if "fingerprint" in cols:
-            report["duplication"] = [
-                r.asDict() for r in agg.duplication_histogram(labels).collect()
-            ]
+        report = corpus_report(spark.read.parquet(args.input))
         with open(args.report, "w") as f:
             json.dump(report, f, indent=0, sort_keys=True)
         print(json.dumps({"re_rendered": True, "blocks": sorted(report)}))
@@ -107,29 +89,8 @@ def main() -> None:
     metrics.write.mode("overwrite").parquet(args.output)
 
     if args.report:
-        from sequali_spark.operators import aggregates as agg
-
-        report = {
-            "counters": metrics.agg(
-                F.count("*").alias("docs_seen"),
-                F.sum(F.col("keep").cast("long")).alias("docs_kept"),
-            ).first().asDict(),
-            "rule_hits": {r["rule"]: r["hits"] for r in agg.rule_hit_counts(metrics).collect()},
-            "lang_hist": {r["lang"]: r["docs"] for r in agg.lang_histogram(metrics).collect()},
-            "duplication": [r.asDict() for r in agg.duplication_histogram(metrics).collect()],
-            "overrepresented": [
-                r.asDict() for r in agg.overrepresented_shingles(metrics).collect()
-            ],
-            # length statistics block — the reference report's
-            # SequenceLengthDistribution analogue (exact N50/N90 by
-            # cumulative walk, report_modules.py:574-636)
-            "length_stats": agg.n50_analogue(metrics).first().asDict(),
-            "per_host": [
-                r.asDict() for r in agg.per_host_report(metrics).limit(20).collect()
-            ],
-        }
         with open(args.report, "w") as f:
-            json.dump(report, f, indent=0, sort_keys=True)
+            json.dump(corpus_report(metrics), f, indent=0, sort_keys=True)
     metrics.unpersist()
 
 

@@ -303,6 +303,39 @@ def n50_analogue(metric_df: DataFrame) -> DataFrame:
     return out
 
 
+def corpus_report(metric_df: DataFrame) -> dict:
+    """The JSON corpus report — sequali's one finalize step
+    (report_modules.py), which ``sequali-report`` re-renders from the
+    saved file.  The batch job's ``--report`` and ``--mode report`` over
+    a saved labels table both call this.  A block is emitted iff the
+    frame carries every column it reads, so a table saved with a pruned
+    column set renders the blocks it supports; ``counters`` always."""
+    cols = set(metric_df.columns)
+
+    def rows(df: DataFrame) -> list[dict]:
+        return [r.asDict() for r in df.collect()]
+
+    counters = [F.count("*").alias("docs_seen")]
+    if "keep" in cols:
+        counters.append(F.sum(F.col("keep").cast("long")).alias("docs_kept"))
+    report = {"counters": metric_df.agg(*counters).first().asDict()}
+    if "drop_reasons" in cols:
+        report["rule_hits"] = {r["rule"]: r["hits"] for r in rows(rule_hit_counts(metric_df))}
+    if "lang_pred" in cols:
+        report["lang_hist"] = {r["lang"]: r["docs"] for r in rows(lang_histogram(metric_df))}
+    if "fingerprint" in cols:
+        report["duplication"] = rows(duplication_histogram(metric_df))
+    if "shingles" in cols:
+        report["overrepresented"] = rows(overrepresented_shingles(metric_df))
+    if "n_chars" in cols:
+        # the SequenceLengthDistribution analogue (exact N50/N90 by
+        # cumulative walk, report_modules.py:574-636)
+        report["length_stats"] = n50_analogue(metric_df).first().asDict()
+    if {"url", "keep", "perplexity", "n_chars"} <= cols:
+        report["per_host"] = rows(per_host_report(metric_df).limit(20))
+    return report
+
+
 def per_host_distinct_urls_salted(metric_df: DataFrame, n_salts: int = 16) -> DataFrame:
     """Exact distinct-url count per host via salted two-stage
     aggregation — the skew-safe pattern for COUNT(DISTINCT) on a Zipf

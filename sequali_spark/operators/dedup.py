@@ -540,7 +540,7 @@ def exact_rep_labeled_sigs(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """Signature frame with exact-dedup labels: (id, rep, digest,
-    signature, bands) where rep = min id among byte-identical texts.
+    signature, bands, packed) where rep = min id among byte-identical texts.
 
     The digest is computed in the same Arrow pass as the sketches — the
     text column never shuffles: sketching a duplicate is wasted
@@ -798,7 +798,8 @@ def minhash_pairs_from_sigs(
     _pin_fingerprint: tuple | None = None,
 ) -> DataFrame:
     """Band bucket-join + signature verify over a prepared signature
-    frame (see minhash_pairs_for for the plan rationale).
+    frame — (id, signature, bands, packed) as minhash_signatures emits
+    it (see minhash_pairs_for for the plan rationale).
 
     ``edge_mode`` picks the candidate topology per band bucket:
 
@@ -837,15 +838,9 @@ def minhash_pairs_from_sigs(
     """
     if edge_mode not in ("pairs", "ring"):
         raise ValueError(f"unknown edge_mode {edge_mode!r}")
-    # "packed" is optional so signature frames checkpointed by earlier
-    # versions (jobs/run_dedup.py resume) stay consumable — they just
-    # skip the packed prefilter
-    pin_cols = [id_col, "signature", "bands"] + (
-        ["packed"] if "packed" in sigs.columns else []
-    )
     sigs = pins.pin(
         "minhash",
-        sigs.select(*pin_cols),
+        sigs.select(id_col, "signature", "bands", "packed"),
         fingerprint=_pin_fingerprint,
     )
     bands = sigs.select(
@@ -961,7 +956,7 @@ def _verify_candidates(
     min_match = next(
         (c for c in range(N_MINHASH + 1) if c / float(N_MINHASH) >= threshold), None
     )
-    if PACKED_PREFILTER and min_match and "packed" in sigs.columns:
+    if PACKED_PREFILTER and min_match:
         # screen AFTER the distinct: the raw band-collision pair stream
         # is a multiple of the unique-pair count (same pair re-emitted
         # per colliding band), so screening it first was measured ~1.7x
@@ -1413,7 +1408,7 @@ def keepers_from_labeled_sigs(
     labeled: DataFrame, threshold: float = 0.8, cc_stats: dict | None = None
 ) -> DataFrame:
     """The keeper-election tail over a prepared labeled-signature frame
-    (doc_id, rep, digest, signature, bands) — split out so
+    (doc_id, rep, digest, signature, bands, packed) — split out so
     jobs/run_dedup.py can resume from a CHECKPOINTED signature table
     (the expensive text-scanning stage) without re-sketching the
     corpus.  See dedup_keepers for semantics."""

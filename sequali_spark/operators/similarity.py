@@ -584,10 +584,32 @@ def ivfpq_encode(
     # coarse term (code-review r5)
 
 
+def _write_cells(codes: DataFrame, path: str, mode: str) -> None:
+    """Write (or append) a codes frame as the on-disk inverted list,
+    one ``centroid=`` directory per coarse cell.
+
+    Layout discipline (measured at 1M vectors, BENCH/ATSCALE.md):
+    - repartition so each coarse cell lands in one file instead of
+      one-per-writing-task (256 cells x 32 tasks = 8k small files whose
+      footers were ~20% of the index bytes);
+    - sort by vec_id within the cell so the id column delta-packs;
+    - parquet v2 encodings: DELTA_LENGTH_BYTE_ARRAY stores the codes'
+      constant 16-byte length once per page instead of a 4-byte prefix
+      per value, DELTA_BINARY_PACKED shrinks the sorted ids.
+    Together: 37.4 -> ~17 B/vector on disk at M=16."""
+    (
+        codes.repartition("centroid")
+        .sortWithinPartitions("centroid", "vec_id")
+        .write.mode(mode)
+        .option("parquet.writer.version", "v2")
+        .partitionBy("centroid")
+        .parquet(path)
+    )
+
+
 def write_ivfpq_index(
     codes: DataFrame,
     path: str,
-    files_per_cell: int = 1,
     quantizers: tuple[np.ndarray, np.ndarray] | None = None,
     baseline_top1_sim: float | None = None,
 ) -> None:
@@ -611,31 +633,7 @@ def write_ivfpq_index(
             "write_ivfpq_index expects a frame from ivfpq_encode (the "
             "codes column carries the residual flag as metadata)"
         )
-    # Layout discipline (measured at 1M vectors, BENCH/ATSCALE.md):
-    # - repartition so each coarse cell lands in ``files_per_cell``
-    #   files instead of one-per-writing-task (256 cells x 32 tasks =
-    #   8k small files whose footers were ~20% of the index bytes);
-    # - sort by vec_id within the cell so the id column delta-packs;
-    # - parquet v2 encodings: DELTA_LENGTH_BYTE_ARRAY stores the codes'
-    #   constant 16-byte length once per page instead of a 4-byte
-    #   prefix per value, DELTA_BINARY_PACKED shrinks the sorted ids.
-    # Together: 37.4 -> ~17 B/vector on disk at M=16.
-    # ``files_per_cell`` > 1 is the giant-cell knob: at 10^12 vectors a
-    # cell holds ~4B rows (~60 GB of codes), more than one writing task
-    # should carry — salt the shuffle key to split each cell into
-    # bounded-size files (readers see the same directory either way).
-    if files_per_cell > 1:
-        salt = F.pmod(F.xxhash64("vec_id"), F.lit(files_per_cell))
-        parted = codes.repartition(F.col("centroid"), salt)
-    else:
-        parted = codes.repartition("centroid")
-    (
-        parted.sortWithinPartitions("centroid", "vec_id")
-        .write.mode("overwrite")
-        .option("parquet.writer.version", "v2")
-        .partitionBy("centroid")
-        .parquet(path)
-    )
+    _write_cells(codes, path, "overwrite")
     _write_ivfpq_meta(
         codes.sparkSession,
         path,
@@ -834,7 +832,6 @@ def mean_top1_centroid_sim(e: DataFrame, centroids: np.ndarray) -> float:
 def append_ivfpq_index(
     new_vectors: DataFrame,
     path: str,
-    files_per_cell: int = 1,
     retrain_drift: float = 0.05,
 ) -> dict:
     """Append new vectors to a written index — the maintenance story
@@ -887,18 +884,7 @@ def append_ivfpq_index(
     batch = ivfpq_encode(new_vectors, cents, books, residual=meta["residual"]).persist()
     try:
         n_new = batch.count()
-        if files_per_cell > 1:
-            salt = F.pmod(F.xxhash64("vec_id"), F.lit(files_per_cell))
-            parted = batch.repartition(F.col("centroid"), salt)
-        else:
-            parted = batch.repartition("centroid")
-        (
-            parted.sortWithinPartitions("centroid", "vec_id")
-            .write.mode("append")
-            .option("parquet.writer.version", "v2")
-            .partitionBy("centroid")
-            .parquet(path)
-        )
+        _write_cells(batch, path, "append")
     finally:
         batch.unpersist()
     baseline = meta["baseline_top1_sim"]
@@ -927,7 +913,6 @@ def rebuild_ivfpq_index(
     path: str,
     n_centroids: int | None = None,
     m: int | None = None,
-    files_per_cell: int = 1,
     kmeans_iter: int = 2,
     pq_sample: int = 20_000,
     pq_iter: int = 10,
@@ -997,7 +982,6 @@ def rebuild_ivfpq_index(
     write_ivfpq_index(
         fused,
         staging,
-        files_per_cell=files_per_cell,
         quantizers=(cents, books),
         baseline_top1_sim=baseline,
     )

@@ -7,11 +7,13 @@ signatures, curation decisions) that cannot be split into per-partition
 lineage units without changing semantics — the complement of
 runtime/lineage.py's day-unit resume for per-doc stages.  Existence
 checks go through the Hadoop FileSystem API so the pattern works on
-hdfs:// and s3a:// outputs, not just the local FS.  Used by
-jobs/run_curation.py and jobs/run_dedup.py.
+hdfs:// and s3a:// outputs, not just the local FS.  ``stage`` owns
+the protocol; jobs/run_curation.py and jobs/run_dedup.py call it.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -118,3 +120,30 @@ def write_stage_manifest(
     spark.createDataFrame(manifest_rows, schema=manifest_schema).write.mode(
         "overwrite"
     ).parquet(manifest_path)
+
+
+def stage(
+    spark: SparkSession,
+    path: str,
+    manifest_rows: list[tuple],
+    manifest_schema: str,
+    build: Callable[[], DataFrame],
+    force: bool = False,
+) -> tuple[DataFrame, bool]:
+    """Return (the stage read back from ``path``, whether it was
+    reused): the committed stage is reused iff its manifest at
+    ``<path>_manifest`` equals ``manifest_rows`` and ``force`` is off;
+    otherwise ``build()`` is written there under the crash order of
+    invalidate_stage_manifest / write_stage_manifest (a ``build`` that
+    raises leaves no manifest).  The steps are called as module globals
+    so a tracer that replaces them sees every call."""
+    path = path.rstrip("/")
+    manifest_path = path + "_manifest"
+    reused = (not force) and stage_is_reusable(
+        spark, path, manifest_path, manifest_rows, manifest_schema
+    )
+    if not reused:
+        invalidate_stage_manifest(spark, manifest_path)
+        build().write.mode("overwrite").parquet(path)
+        write_stage_manifest(spark, manifest_path, manifest_rows, manifest_schema)
+    return spark.read.parquet(path), reused

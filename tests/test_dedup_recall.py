@@ -1082,22 +1082,6 @@ def test_pinned_sketch_reuse_and_refresh(spark, tmp_path):
     assert pins.pinned("minhash").count() == 2
 
 
-def test_verify_without_packed_column(spark, pages_small):
-    """Signature frames checkpointed before r9 lack the ``packed`` bit
-    planes (jobs/run_dedup.py resume); minhash_pairs_from_sigs must
-    consume them by skipping the screen, with identical output."""
-    pages = pages_df(spark, pages_small)
-    sigs = dedup.minhash_signatures(pages, id_col="url", text_col="text")
-    want = sorted(
-        map(tuple, dedup.minhash_pairs_from_sigs(sigs, id_col="url", threshold=0.7).collect())
-    )
-    legacy = dedup.minhash_signatures(pages, id_col="url", text_col="text").drop("packed")
-    got = sorted(
-        map(tuple, dedup.minhash_pairs_from_sigs(legacy, id_col="url", threshold=0.7).collect())
-    )
-    assert got == want and len(got) > 0
-
-
 @pytest.mark.parametrize("threshold", [0.7, 0.8])
 def test_packed_prefilter_bit_identical(spark, pages_small, monkeypatch, threshold):
     """The packed-byte candidate prefilter (r9) must be EXACTLY

@@ -7,6 +7,8 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -118,6 +120,34 @@ def test_batch_job_cli(spark, pages_tiny, tmp_path):
     assert rep["rule_hits"].get("toxicity", 0) > 0
     labels = spark.read.parquet(out)
     assert labels.count() == len(pages_tiny)
+
+    # --mode report over the saved labels re-renders the batch report:
+    # same blocks, integers exact; per_host means are float sums whose
+    # order follows the partitioning, so they match to 1e-9 relative
+    rerendered = str(tmp_path / "rerendered.json")
+    proc = subprocess.run(
+        [
+            sys.executable, "jobs/run_pipeline.py",
+            "--input", out, "--output", str(tmp_path / "unused"),
+            "--mode", "report", "--report", rerendered,
+        ],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=420,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    rep2 = json.load(open(rerendered))
+    assert set(rep2) == set(rep) == {
+        "counters", "rule_hits", "lang_hist", "duplication", "overrepresented",
+        "length_stats", "per_host",
+    }
+    per_host, per_host2 = rep.pop("per_host"), rep2.pop("per_host")
+    assert rep2 == rep
+    assert [h["host"] for h in per_host2] == [h["host"] for h in per_host]
+    for a, b in zip(per_host, per_host2):
+        for k, v in a.items():
+            if isinstance(v, float):
+                assert b[k] == pytest.approx(v, rel=1e-9, abs=1e-12), (a["host"], k)
+            else:
+                assert b[k] == v, (a["host"], k)
 
 
 def test_resumable_job_cli(spark, pages_tiny, tmp_path):
@@ -372,6 +402,21 @@ def test_dedup_job_cli_checkpoints_signatures(spark, tmp_path):
         k: v for k, v in s1.items() if k != "resumed_signatures"
     }
 
+    # a checkpoint whose manifest lacks the bit-plane count (written
+    # before pack_planes joined it, by a sketcher that may not have
+    # emitted the ``packed`` column) fails the match: re-sketch
+    man = out + "_sigs_manifest"
+    legacy = spark.read.parquet(man).drop("pack_planes").toPandas()
+    spark.createDataFrame(
+        legacy,
+        "input string, n_minhash int, lsh_bands int, n_docs long, content_fp string",
+    ).write.mode("overwrite").parquet(man)
+    s_legacy = run("s_legacy.json")
+    assert s_legacy["resumed_signatures"] is False
+    assert {k: v for k, v in s_legacy.items() if k != "resumed_signatures"} == {
+        k: v for k, v in s1.items() if k != "resumed_signatures"
+    }
+
     # threshold change: sketches still reused, edges recomputed
     s3 = run("s3.json", "--threshold", "0.5")
     assert s3["resumed_signatures"] is True and s3["threshold"] == 0.5
@@ -422,6 +467,47 @@ def test_stage_checkpoint_helpers(spark, tmp_path):
     dup = spark.createDataFrame([(1, "x"), (1, "x")], "id long, t string")
     assert content_fingerprint(a, "id", "t") == content_fingerprint(b, "id", "t")
     assert content_fingerprint(a, "id", "t") != content_fingerprint(dup, "id", "t")
+
+
+def test_stage_rebuilds_after_failed_build(spark, tmp_path, monkeypatch):
+    """checkpoint.stage: a committed stage is reused; a build that
+    raises on a later recompute leaves no matching manifest, so the
+    next call rebuilds instead of reusing the old data.  The reuse
+    check and the manifest commit are looked up as module globals, so
+    a tracer that replaces them (perfbench --trace 1) sees the calls."""
+    from sequali_spark.runtime import checkpoint
+
+    path = str(tmp_path / "stage")
+    schema = "k string, v int"
+    rows = [("a", 1)]
+    builds = []
+
+    def build():
+        builds.append(1)
+        return spark.range(3)
+
+    def crash():
+        raise RuntimeError("killed mid-build")
+
+    calls = []
+    for name in ("stage_is_reusable", "write_stage_manifest"):
+        real = getattr(checkpoint, name)
+        monkeypatch.setattr(
+            checkpoint, name,
+            lambda *a, _n=name, _f=real, **k: calls.append(_n) or _f(*a, **k),
+        )
+
+    df, reused = checkpoint.stage(spark, path, rows, schema, build)
+    assert not reused and df.count() == 3 and len(builds) == 1
+    assert calls == ["stage_is_reusable", "write_stage_manifest"]
+    _, reused = checkpoint.stage(spark, path, rows, schema, crash)
+    assert reused  # matching manifest: build is never called
+
+    with pytest.raises(RuntimeError, match="killed mid-build"):
+        checkpoint.stage(spark, path, rows, schema, crash, force=True)
+    assert not checkpoint.stage_is_reusable(spark, path, path + "_manifest", rows, schema)
+    df, reused = checkpoint.stage(spark, path, rows, schema, build)
+    assert not reused and df.count() == 3 and len(builds) == 2
 
 
 def test_probes_fingerprint_sees_duplicated_rows(spark):
@@ -642,10 +728,6 @@ def test_curation_drop_precedence(spark, tmp_path):
 def test_report_mode_rerenders_without_recompute(spark, tmp_path):
     """K4: --mode report reads a SAVED labels table and re-renders the
     JSON report; blocks soft-degrade to the columns present."""
-    import json
-    import subprocess
-    import sys
-
     from sequali_spark.fixtures import generate_pages
     from sequali_spark.pipeline import quality_pipeline
     from tests.test_pipeline import pages_df
@@ -662,8 +744,8 @@ def test_report_mode_rerenders_without_recompute(spark, tmp_path):
         [sys.executable, "jobs/run_pipeline.py", "--input", labels_dir,
          "--output", str(tmp_path / "unused"), "--mode", "report",
          "--report", report_path],
-        capture_output=True, text=True, cwd="/root/repo",
-        env={**__import__("os").environ, "SPARK_GRAFT_CPUS": "4", "PYTHONPATH": "/root/repo"},
+        capture_output=True, text=True, cwd=REPO,
+        env=dict(os.environ, SPARK_GRAFT_CPUS="4", PYTHONPATH=REPO),
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     rep = json.load(open(report_path))
@@ -672,62 +754,12 @@ def test_report_mode_rerenders_without_recompute(spark, tmp_path):
     assert sum(rep["lang_hist"].values()) == 200
 
 
-def test_curation_cli_winnow_decon_path_matches_broadcast(spark, tmp_path):
-    """--decon-path winnow routes contamination through the
-    winnowed-fingerprint equi-join at the JOB level and produces the
-    identical decision table as the broadcast run (probes are over the
-    w+k-1 guarantee length, where the two plans are exactly
-    equivalent)."""
-    import pandas as pd
-
-    marker = "qzj winnowable benchmark probe string qzj"  # 41 chars >= 23
-    rows = [
-        (0, "plenty of plain english words about storage engines " * 6, "s1"),
-        (1, "another long document on compilers and parsing " * 6 + marker, "s1"),
-        (2, "a third long document about networks and routing " * 6, "s2"),
-        (3, "a fourth long document mentioning " + marker + " mid-text " * 20, "s2"),
-    ]
-    pdf = pd.DataFrame(rows, columns=["doc_id", "text", "source"])
-    pdf["n_chars"] = pdf["text"].str.len()
-    d = tmp_path / "docs"
-    spark.createDataFrame(pdf).write.parquet(str(d / "documents.parquet"))
-    probes_path = str(tmp_path / "probes")
-    spark.createDataFrame(
-        [(7, marker)], schema="probe_doc long, probe string"
-    ).write.parquet(probes_path)
-
-    env = dict(os.environ, SPARK_GRAFT_CPUS="4", PYTHONPATH=REPO)
-    stats = {}
-    for path_mode in ("broadcast", "winnow"):
-        out = str(tmp_path / f"curated_{path_mode}")
-        stats_path = str(tmp_path / f"stats_{path_mode}.json")
-        proc = subprocess.run(
-            [
-                sys.executable, "jobs/run_curation.py",
-                "--input", str(d), "--output", out, "--stats", stats_path,
-                "--probes", probes_path, "--decon-path", path_mode,
-                # decision checkpoints are per-OUTPUT path, but be
-                # explicit that each run computes its own table
-                "--force",
-            ],
-            cwd=REPO, env=env, capture_output=True, text=True, timeout=420,
-        )
-        assert proc.returncode == 0, proc.stderr[-2000:]
-        stats[path_mode] = json.load(open(stats_path))
-        for k in ("resumed_from_checkpoint", "phase_walls_sec"):
-            stats[path_mode].pop(k, None)
-    assert stats["broadcast"] == stats["winnow"]
-    assert stats["winnow"]["dropped"].get("contaminated") == 2
-    kept = {r["doc_id"] for r in spark.read.parquet(str(tmp_path / "curated_winnow")).collect()}
-    assert kept == {0, 2}
-
-
 def test_curation_auto_decon_switches_past_broadcast_guard(spark, monkeypatch):
-    """decon_path='auto' picks the broadcast theta-join for small probe
-    sets and the winnow equi-join once the table exceeds the broadcast
-    guard — asserted by recording which operator the router invoked
-    (guard shrunk via monkeypatch; both operators share the hits
-    contract so the routing is the only difference)."""
+    """The decontamination router picks the broadcast theta-join for
+    small probe sets and the winnow equi-join once the table exceeds
+    the broadcast guard — asserted by recording which operator the
+    router invoked (guard shrunk via monkeypatch; both operators share
+    the hits contract so the routing is the only difference)."""
     from jobs.run_curation import _decon_hits
     from sequali_spark.operators import textqc
 
@@ -750,8 +782,8 @@ def test_curation_auto_decon_switches_past_broadcast_guard(spark, monkeypatch):
         lambda *a, **k: calls.append("winnow") or real_wn(*a, **k),
     )
     monkeypatch.setattr(textqc, "MAX_BROADCAST_PROBES", 10)
-    _decon_hits(docs, probes, "auto")
+    _decon_hits(docs, probes)
     assert calls == ["broadcast"]
     monkeypatch.setattr(textqc, "MAX_BROADCAST_PROBES", 3)
-    _decon_hits(docs, probes, "auto")
+    _decon_hits(docs, probes)
     assert calls == ["broadcast", "winnow"]

@@ -1,4 +1,5 @@
-"""No module reaches into another module's private names.
+"""No module reaches into another module's private names, and the
+stage-checkpoint protocol has one owner.
 
 Scans the program sources (``sequali_spark/``, ``jobs/`` and
 ``__spark_entry__.py``) with ``ast`` and flags every
@@ -6,6 +7,12 @@ Scans the program sources (``sequali_spark/``, ``jobs/`` and
 ``mod`` is an imported ``sequali_spark`` module.  Shared state and
 helpers get a public name in the module that owns them (see
 sequali_spark/runtime/pins.py for the persisted-frame registry).
+
+The second scan flags every call of the checkpoint protocol's steps
+(reuse check, manifest invalidation, manifest commit) outside
+sequali_spark/runtime/checkpoint.py: their crash order lives in
+``checkpoint.stage`` and a job that calls the steps itself can get it
+wrong.
 """
 
 from __future__ import annotations
@@ -17,10 +24,10 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "sequali_spark"
 
 
-def _sources() -> list[str]:
-    out = [os.path.join(REPO, "__spark_entry__.py")]
+def _sources(root: str = REPO) -> list[str]:
+    out = [os.path.join(root, "__spark_entry__.py")]
     for top in (PACKAGE, "jobs"):
-        for d, _, files in os.walk(os.path.join(REPO, top)):
+        for d, _, files in os.walk(os.path.join(root, top)):
             out += [os.path.join(d, f) for f in sorted(files) if f.endswith(".py")]
     return out
 
@@ -90,3 +97,28 @@ def violations() -> list[str]:
 
 def test_no_module_imports_another_modules_private_names():
     assert violations() == []
+
+
+STAGE_STEPS = {"stage_is_reusable", "invalidate_stage_manifest", "write_stage_manifest"}
+STAGE_OWNER = os.path.join(PACKAGE, "runtime", "checkpoint.py")
+
+
+def stage_step_calls(root: str = REPO) -> list[str]:
+    """Every call of a STAGE_STEPS function outside STAGE_OWNER, as
+    ``path:line name``; ``root`` lets the scan run on another checkout."""
+    hits = []
+    for path in _sources(root):
+        rel = os.path.relpath(path, root)
+        if rel == STAGE_OWNER:
+            continue
+        for node in ast.walk(ast.parse(open(path, encoding="utf-8").read(), path)):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name in STAGE_STEPS:
+                    hits.append(f"{rel}:{node.lineno} {name}")
+    return sorted(hits)
+
+
+def test_stage_protocol_has_one_owner():
+    assert stage_step_calls() == []
