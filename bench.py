@@ -168,7 +168,9 @@ def ensure_pages_parquet(n_rows: int, path: str | None = None) -> str:
     path = path or f"/tmp/sequali_bench_pages_{n_rows}"
     if os.path.exists(os.path.join(path, "_SUCCESS")):
         return path
-    spark = _spark(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    from sequali_spark.session import default_cpus
+
+    spark = _spark(default_cpus())
     _pages_bench_df(spark, n_rows).write.mode("overwrite").parquet(path)
     spark.stop()
     return path
@@ -477,10 +479,12 @@ kill-and-resume datapoints live in BENCH/ATSCALE.md
 
 
 def main() -> None:
+    from sequali_spark.session import default_cpus
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--scaling", action="store_true")
     ap.add_argument("--throughput-only", action="store_true")
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=default_cpus())
     ap.add_argument("--rows", type=int, default=PIPELINE_BENCH_ROWS)
     ap.add_argument(
         "--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

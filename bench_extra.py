@@ -80,10 +80,11 @@ def main() -> None:
     ap.add_argument(
         "--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
     )
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    args = ap.parse_args()
-
     from bench import _spark
+    from sequali_spark.session import default_cpus
+
+    ap.add_argument("--cpus", type=int, default=default_cpus())
+    args = ap.parse_args()
 
     spark = _spark(args.cpus)
     if args.mode == "minhash":

@@ -236,7 +236,7 @@ def main() -> None:
 
     from sequali_spark.operators import textqc
     from sequali_spark.runtime import checkpoint
-    from sequali_spark.session import get_spark
+    from sequali_spark.session import fit_width, get_spark
 
     t_main0 = time.time()
     spark = get_spark(app_name="sequali_curation")
@@ -270,6 +270,7 @@ def main() -> None:
     # change exists to avoid (measured: the fallback silently re-added
     # the 6-7 s serial pre-stage pass).
     docs = textqc.load(spark, args.input, "documents")
+    fit_width(docs)
 
     manifest_rows = _manifest(args, probes, docs)
     docs = docs.persist()

@@ -62,10 +62,11 @@ def main() -> None:
 
     from sequali_spark.operators import dedup
     from sequali_spark.runtime import checkpoint
-    from sequali_spark.session import get_spark
+    from sequali_spark.session import fit_width, get_spark
 
     spark = get_spark(app_name="sequali_dedup")
     docs = spark.read.parquet(f"{args.input}/documents.parquet")
+    fit_width(docs)
 
     # fingerprint the backing file listing (path, length, mtime): an
     # in-place refresh that keeps ids but changes text rewrites parquet

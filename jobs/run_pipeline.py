@@ -50,7 +50,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from sequali_spark.operators.aggregates import corpus_report
-    from sequali_spark.session import get_spark
+    from sequali_spark.session import fit_width, get_spark
 
     spark = get_spark(app_name=f"sequali_pipeline_{args.mode}")
 
@@ -74,6 +74,7 @@ def main() -> None:
     from sequali_spark.pipeline import quality_pipeline, read_pages
 
     pages = read_pages(spark, args.input)
+    fit_width(pages)
 
     if args.mode == "resumable":
         from sequali_spark.runtime.lineage import lineage_report, run_resumable

@@ -66,10 +66,20 @@ def _docs_from_pages(spark, src: str):
     )
 
 
+def _job_outputs(out: str) -> list[str]:
+    """What a curation job writing ``out`` leaves beside it: the output,
+    the decision checkpoint, and the stage manifest file with its temp
+    name and the local FileSystem's .crc sidecars."""
+    man = out + "_decisions_manifest"
+    d, b = os.path.split(man)
+    return [out, out + "_decisions", man, man + ".tmp",
+            os.path.join(d, f".{b}.crc"), os.path.join(d, f".{b}.tmp.crc")]
+
+
 def run_dedup(rows: int) -> dict:
     from bench import ensure_pages_parquet
     from sequali_spark.operators import dedup
-    from sequali_spark.session import get_spark
+    from sequali_spark.session import fit_width, get_spark
 
     src = ensure_pages_parquet(rows)
     spark = get_spark(
@@ -79,6 +89,7 @@ def run_dedup(rows: int) -> dict:
             "spark.sql.files.maxPartitionBytes": str(16 * 1024 * 1024),
         },
     )
+    fit_width(spark.read.parquet(src))  # the width the jobs would pick
     docs = _docs_from_pages(spark, src).select("doc_id", "text")
     n_docs = docs.count()
 
@@ -132,8 +143,10 @@ def run_curation(rows: int) -> dict:
 
     out = f"/tmp/sequali_atscale_curated_{rows}"
     dec_sentinel = out + "_decisions/_SUCCESS"
-    man_sentinel = out + "_decisions_manifest/_SUCCESS"
-    for p in (out, out + "_decisions", out + "_decisions_manifest"):
+    # the manifest is one file, renamed into place once written
+    # (runtime/checkpoint.py), so its existence marks the commit
+    man_sentinel = out + "_decisions_manifest"
+    for p in _job_outputs(out):
         subprocess.run(["rm", "-rf", p], check=False)
     stats1, stats2 = "/tmp/atscale_cur1.json", "/tmp/atscale_cur2.json"
     env = dict(os.environ, PYTHONPATH=REPO)
@@ -204,8 +217,7 @@ def run_curation(rows: int) -> dict:
     )
     killed = False
     while proc.poll() is None:
-        if os.path.exists(dec_sentinel) and os.path.exists(man_sentinel):
-            time.sleep(0.3)  # let the manifest writer finish its commit
+        if os.path.exists(dec_sentinel) and os.path.isfile(man_sentinel):
             proc.send_signal(signal.SIGKILL)
             killed = True
             break
@@ -289,17 +301,17 @@ def run_curation_scaling(rows: int, ladder: tuple = (2, 8)) -> dict:
             out = f"/tmp/sequali_atscale_curscale_{rows}_{cpus}"
             stats = f"/tmp/atscale_curscale_{rows}_{cpus}.json"
             local_dirs = out + "_local"
-            for p in (out, out + "_decisions", out + "_decisions_manifest",
-                      local_dirs, stats):
+            for p in _job_outputs(out) + [local_dirs, stats]:
                 subprocess.run(["rm", "-rf", p], check=False)
-            # shuffle partitions stay at the job's default (32) for
-            # EVERY leg: partition count is sized by data volume
-            # (bounded partition size), cores only set concurrency —
-            # forcing partitions = cores at 2M rows quadrupled
-            # partition size on the small leg and OOMed the 8 GB heap
-            # (measured r7); identical partitioning also means the legs
-            # differ only in parallelism, which is what the ladder
-            # measures.
+            # shuffle partitions are pinned to 32, the width this
+            # ladder was recorded at, for EVERY leg rather than left to
+            # the session's per-core default: partition count is sized
+            # by data volume (bounded partition size), cores only set
+            # concurrency — forcing partitions = cores at 2M rows
+            # quadrupled partition size on the small leg and OOMed the
+            # 8 GB heap (measured r7); identical partitioning also means
+            # the legs differ only in parallelism, which is what the
+            # ladder measures.
             #
             # Memory is provisioned OUT of the measurement (16 GB on
             # every leg): cores must be the only scaled resource.  Two
@@ -319,8 +331,8 @@ def run_curation_scaling(rows: int, ladder: tuple = (2, 8)) -> dict:
                 SPARK_GRAFT_CPUS=str(cpus),
                 SPARK_GRAFT_DRIVER_MEM="16g",
                 SPARK_LOCAL_DIRS=local_dirs,
+                SPARK_GRAFT_SHUFFLE="32",
             )
-            env.pop("SPARK_GRAFT_SHUFFLE", None)
             t0 = time.time()
             proc = subprocess.run(
                 [
@@ -818,8 +830,9 @@ def run_paragraph(rows: int, ladder: tuple = (2, 8)) -> dict:
                 SPARK_GRAFT_CPUS=str(cpus),
                 SPARK_GRAFT_DRIVER_MEM="16g",
                 SPARK_LOCAL_DIRS=local_dirs,
+                # one width on every leg, as in run_curation_scaling
+                SPARK_GRAFT_SHUFFLE="32",
             )
-            env.pop("SPARK_GRAFT_SHUFFLE", None)
             t0 = time.time()
             proc = subprocess.run(
                 [

@@ -1277,9 +1277,10 @@ def connected_components(
     round a vertex adopts the minimum component id among itself and its
     neighbors; converged when no label changes.  Rounds = graph
     diameter, which for dup clusters is tiny (2-3).  Each round is one
-    join + one groupBy on the edge list — all JVM-side; the driver only
-    checks the convergence counter (an aggregate, not a collect of the
-    data).
+    join + one groupBy on the edge list (round 1 only the groupBy: the
+    starting labels are the ids themselves) — all JVM-side; the driver
+    only checks the convergence counter (an aggregate, not a collect of
+    the data).
 
     Input: (doc_a, doc_b) pairs. Output: (doc_id, component) where
     component = min doc_id reachable.
@@ -1292,6 +1293,8 @@ def connected_components(
     bool} — the rounds-to-convergence evidence an at-scale run records
     (rounds = graph diameter of the dup clusters).
     """
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     # Materialize the INPUT once before the union below embeds it twice.
     # ``pairs`` is typically the expensive LSH-verify chain; the
     # symmetrized edge union contains that subtree in BOTH branches, and
@@ -1311,29 +1314,40 @@ def connected_components(
     )
     changed = 0
     rounds = 0
+    labels = None
     # everything that can RUN (the eager pairs materialization, the
-    # labels checkpoint, the rounds) lives inside the try so a failure
-    # at any point still releases both pins (code-review r6: the eager
-    # writes used to precede the try and an OOM there leaked them for
-    # the session's lifetime)
+    # rounds) lives inside the try so a failure at any point still
+    # releases both pins (code-review r6: the eager writes used to
+    # precede the try and an OOM there leaked them for the session's
+    # lifetime)
     try:
         pairs.write.format("noop").mode("overwrite").save()
-        labels = (
-            edges.select(F.col("src").alias("doc_id"))
-            .distinct()
-            .withColumn("component", F.col("doc_id"))
-            .localCheckpoint(eager=True)
-        )
         for _ in range(max_iter):
             rounds += 1
-            neighbor_min = (
-                edges.join(labels, edges.dst == labels.doc_id)
-                .groupBy("src")
-                .agg(F.min("component").alias("neighbor_component"))
-            )
+            if labels is None:
+                # round 1, folded: every vertex starts as its own
+                # component, so its neighbours' labels are their ids and
+                # the round is min(dst) per src — no identity-label
+                # checkpoint job and no join (a vertex is exactly a src:
+                # the edges are symmetric)
+                current = edges.groupBy("src").agg(
+                    F.min("dst").alias("neighbor_component")
+                ).select(
+                    F.col("src").alias("doc_id"),
+                    F.col("src").alias("component"),
+                    "neighbor_component",
+                )
+            else:
+                neighbor_min = (
+                    edges.join(labels, edges.dst == labels.doc_id)
+                    .groupBy("src")
+                    .agg(F.min("component").alias("neighbor_component"))
+                )
+                current = labels.join(
+                    neighbor_min, labels.doc_id == neighbor_min.src, "left"
+                )
             updated = (
-                labels.join(neighbor_min, labels.doc_id == neighbor_min.src, "left")
-                .select(
+                current.select(
                     "doc_id",
                     F.least(
                         F.col("component"),

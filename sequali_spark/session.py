@@ -1,10 +1,13 @@
 """SparkSession factory tuned for this engine.
 
-Local-mode defaults match the sandbox (one JVM, N threads); on a real
-cluster the same settings apply except memory sizing.  AQE is on so
-skewed hosts (the pages table's Zipf mega-host) get runtime skew-join
-and partition coalescing — the optimizer-level complement to the
-explicit salting in operators (SURVEY.md §4).
+Local-mode defaults are sized to the host (one JVM, one thread and one
+shuffle partition per core the process may use, and at least 32
+partitions once a job's input is large: fit_width); on a real cluster the
+same settings apply except memory sizing and the shuffle width, which
+the deployment sets with --conf.  AQE is on so skewed hosts (the pages
+table's Zipf mega-host) get runtime skew-join and partition coalescing
+— the optimizer-level complement to the explicit salting in operators
+(SURVEY.md §4).
 """
 
 from __future__ import annotations
@@ -12,8 +15,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-
-DEFAULT_SHUFFLE_PARTITIONS = 32
 
 # Scan-split size for Arrow-bound stages; see the inline rationale at the
 # config site in get_spark.  Overridable per-deployment.
@@ -28,20 +29,109 @@ def max_partition_bytes() -> str:
     )
 
 
+def host_cores() -> int:
+    """The cores this process may run on: its CPU affinity, which
+    follows taskset and cpuset limits, else the machine's count."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API on this platform
+        return os.cpu_count() or 1
+
+
+def default_cpus() -> int:
+    """SPARK_GRAFT_CPUS, else host_cores()."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or host_cores())
+
+
+def default_master() -> str:
+    """SPARK_GRAFT_MASTER, else local[default_cpus()]."""
+    return os.environ.get("SPARK_GRAFT_MASTER") or f"local[{default_cpus()}]"
+
+
+def shuffle_width(master: str, shuffle_partitions: int | None = None) -> int | None:
+    """The spark.sql.shuffle.partitions to set: the explicit argument,
+    else SPARK_GRAFT_SHUFFLE, else the core count of a local master
+    (local[N] -> N, local[*] -> host_cores(), local -> 1).  A cluster
+    master gets None: its cores are not visible here, so the width is
+    the deployment's --conf (SCALE.md: ~2-3x total cores).
+
+    Why the core count (measured on a 4-vCPU VM): AQE coalesces
+    shuffle reads, but it cannot narrow persisted or localCheckpointed
+    frames, so the old fixed 32 ran the curation job's dedup tail as
+    32-task stages over kilobytes; sizing the width to the cores cut
+    the forced run of a 1k-document curation from ~836 to ~149 tasks.
+    On the 32-core host the at-scale records (SCALE.md,
+    BENCH/ATSCALE.md) were taken on, the width is 32 as before.  On
+    few cores partition size grows as the width shrinks, so the jobs
+    raise it for large inputs (fit_width)."""
+    if shuffle_partitions:
+        return shuffle_partitions
+    if os.environ.get("SPARK_GRAFT_SHUFFLE"):
+        return int(os.environ["SPARK_GRAFT_SHUFFLE"])
+    if master == "local":
+        return 1
+    if master.startswith("local["):
+        n = master[len("local["):].split(",")[0].rstrip("]")
+        return host_cores() if n == "*" else int(n)
+    return None
+
+
+# Input size (the optimizer's estimate) from which a local job's
+# core-count width is raised to AT_SCALE_WIDTH; see width_for_input.
+WIDE_INPUT_BYTES = 256 * 1024 * 1024
+AT_SCALE_WIDTH = 32
+
+
+def width_for_input(master: str, width: int, input_bytes: int) -> int:
+    """The shuffle width for a job over ``input_bytes`` of input:
+    ``width``, raised to AT_SCALE_WIDTH once the input reaches
+    WIDE_INPUT_BYTES, but only while ``width`` is the core count
+    shuffle_width gave a local master.  A width set through
+    SPARK_GRAFT_SHUFFLE or an explicit shuffle_partitions= other than
+    the core count, and a cluster master's --conf, are left alone.
+
+    Why (4-vCPU VM, default 8 GB heap): the 2M-document curation
+    (~900 MB of documents) at width 4 died mid-job in 1 of 4 runs and
+    was no faster than at 32 when it finished (BENCH/ATSCALE.md); every
+    at-scale record was taken at 32.  At ~180 MB of pages (the
+    200k-row dedup guard) width 4 was correct and its connected
+    components ran faster, so the floor starts above that."""
+    default = shuffle_width(master)
+    if os.environ.get("SPARK_GRAFT_SHUFFLE") or default is None or width != default:
+        return width
+    if input_bytes < WIDE_INPUT_BYTES:
+        return width
+    return max(width, AT_SCALE_WIDTH)
+
+
+def fit_width(df) -> None:
+    """Set ``df``'s session to width_for_input over ``df``'s size.
+    The size is the optimizer's estimate (the file bytes under a scan),
+    so no job runs.  Call it on a job's input before the first
+    shuffle."""
+    if df.isStreaming:
+        return
+    spark = df.sparkSession
+    est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    fitted = width_for_input(spark.sparkContext.master, width, est)
+    if fitted != width:
+        spark.conf.set("spark.sql.shuffle.partitions", str(fitted))
+
+
 def get_spark(
     app_name: str = "sequali_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE", DEFAULT_SHUFFLE_PARTITIONS)
-    )
+    master = master or default_master()
+    builder = SparkSession.builder.master(master).appName(app_name)
+    width = shuffle_width(master, shuffle_partitions)
+    if width is not None:
+        builder = builder.config("spark.sql.shuffle.partitions", str(width))
     builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        builder
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # parallelismFirst stays at its DEFAULT (true).  r5 tried false

@@ -90,6 +90,84 @@ def test_scan_split_default_pins_arrow_sized_splits(monkeypatch):
     assert max_partition_bytes() == "134217728"
 
 
+def test_shuffle_width_follows_the_master_unless_set(monkeypatch):
+    """Shuffle width precedence, resolved without a JVM: an explicit
+    argument beats SPARK_GRAFT_SHUFFLE, which beats the core count of a
+    local[N] master, which beats host_cores() (the default master and
+    local[*]); a cluster master gets no width (its --conf decides)."""
+    import os
+
+    from sequali_spark import session
+
+    assert session.host_cores() == len(os.sched_getaffinity(0))
+    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_MASTER", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(session, "host_cores", lambda: 6)
+    assert not hasattr(session, "DEFAULT_SHUFFLE_PARTITIONS")
+
+    assert session.default_master() == "local[6]"
+    assert session.shuffle_width(session.default_master()) == 6
+    assert session.shuffle_width("local[*]") == 6
+    assert session.shuffle_width("local[3]") == 3
+    assert session.shuffle_width("local[2,4]") == 2  # local[N, maxFailures]
+    assert session.shuffle_width("local") == 1
+    for cluster in ("yarn", "spark://head:7077", "k8s://https://api:6443", "local-cluster[2,1,1024]"):
+        assert session.shuffle_width(cluster) is None
+    assert session.default_cpus() == 6
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
+    assert session.default_cpus() == 5
+    assert session.default_master() == "local[5]"
+    assert session.shuffle_width(session.default_master()) == 5
+    monkeypatch.setenv("SPARK_GRAFT_MASTER", "yarn")
+    assert session.default_master() == "yarn"
+
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", "12")
+    assert session.shuffle_width("local[3]") == 12
+    assert session.shuffle_width("yarn") == 12
+    assert session.shuffle_width("local[3]", shuffle_partitions=7) == 7
+    assert session.shuffle_width("yarn", shuffle_partitions=7) == 7
+
+
+def test_wide_input_raises_only_a_core_count_width(monkeypatch):
+    """A local master's core-count width rises to AT_SCALE_WIDTH once
+    the input reaches WIDE_INPUT_BYTES; a hand-set width, a cluster
+    master and a width already past the floor stay as they are."""
+    from sequali_spark import session
+
+    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE", raising=False)
+    big, small = session.WIDE_INPUT_BYTES, session.WIDE_INPUT_BYTES - 1
+    assert session.AT_SCALE_WIDTH == 32
+    assert session.width_for_input("local[4]", 4, small) == 4
+    assert session.width_for_input("local[4]", 4, big) == 32
+    assert session.width_for_input("local", 1, big) == 32
+    assert session.width_for_input("local[64]", 64, big) == 64
+    assert session.width_for_input("local[4]", 6, big) == 6  # shuffle_partitions=6
+    assert session.width_for_input("yarn", 200, big) == 200
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", "4")
+    assert session.width_for_input("local[4]", 4, big) == 4
+
+
+def test_fit_width_sets_the_live_session(spark, monkeypatch):
+    """fit_width sizes the input with the optimizer's estimate and sets
+    the session's width; a small input leaves it alone."""
+    from sequali_spark import session
+
+    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE", raising=False)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    cores = str(session.shuffle_width(spark.sparkContext.master))
+    df = spark.range(1000)
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", cores)
+        session.fit_width(df)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == cores
+        monkeypatch.setattr(session, "WIDE_INPUT_BYTES", 1)
+        session.fit_width(df)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
 def test_live_session_wires_scan_split_default(spark):
     assert (
         spark.conf.get("spark.sql.files.maxPartitionBytes") == "16777216"

@@ -400,18 +400,26 @@ def test_keeper_election_skewed_neardup_component(spark, skewed_neardup_dir):
 
 
 def test_connected_components_nonconvergence_is_loud(spark):
-    """A 21-node path graph needs 20 propagation rounds; at max_iter=5
-    it raises instead of returning split clusters."""
+    """A 21-node path graph needs 20 propagation rounds plus the one
+    that sees no change; at max_iter=5 or 20 it raises instead of
+    returning split clusters.  The exact round count guards the
+    folded first round against an off-by-one."""
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(20)], schema="doc_a long, doc_b long"
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(chain, max_iter=5)
-    labels = {
-        r["doc_id"]: r["component"]
-        for r in dedup.connected_components(chain, max_iter=25).collect()
-    }
-    assert set(labels.values()) == {0}
+    for short in (5, 20):
+        with pytest.raises(RuntimeError, match="did not converge"):
+            dedup.connected_components(chain, max_iter=short)
+    for max_iter in (21, 25):
+        stats = {}
+        labels = {
+            r["doc_id"]: r["component"]
+            for r in dedup.connected_components(
+                chain, max_iter=max_iter, stats=stats
+            ).collect()
+        }
+        assert stats == {"rounds": 21, "converged": True}
+        assert labels == {i: 0 for i in range(21)}
 
 
 # --- multi-probe LSH recall --------------------------------------------------

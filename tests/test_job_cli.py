@@ -405,12 +405,19 @@ def test_dedup_job_cli_checkpoints_signatures(spark, tmp_path):
     # a checkpoint whose manifest lacks the bit-plane count (written
     # before pack_planes joined it, by a sketcher that may not have
     # emitted the ``packed`` column) fails the match: re-sketch
+    from jobs.run_dedup import SIGS_MANIFEST_SCHEMA
+    from sequali_spark.runtime import checkpoint
+
     man = out + "_sigs_manifest"
-    legacy = spark.read.parquet(man).drop("pack_planes").toPandas()
-    spark.createDataFrame(
-        legacy,
-        "input string, n_minhash int, lsh_bands int, n_docs long, content_fp string",
-    ).write.mode("overwrite").parquet(man)
+    with open(man) as f:
+        current = json.load(f)
+    assert current["schema"] == SIGS_MANIFEST_SCHEMA
+    legacy_rows = [tuple(r[:3] + r[4:]) for r in current["rows"]]  # drop pack_planes
+    legacy_schema = "input string, n_minhash int, lsh_bands int, n_docs long, content_fp string"
+    checkpoint.write_stage_manifest(spark, man, legacy_rows, legacy_schema)
+    # the legacy manifest is readable, so the re-sketch below comes from
+    # the missing column, not from an unreadable file
+    assert checkpoint.stage_is_reusable(spark, out + "_sigs", man, legacy_rows, legacy_schema)
     s_legacy = run("s_legacy.json")
     assert s_legacy["resumed_signatures"] is False
     assert {k: v for k, v in s_legacy.items() if k != "resumed_signatures"} == {
@@ -433,10 +440,10 @@ def test_dedup_job_cli_checkpoints_signatures(spark, tmp_path):
 
 
 def test_stage_checkpoint_helpers(spark, tmp_path):
-    """runtime/checkpoint.py contract: reuse requires data _SUCCESS +
-    manifest _SUCCESS + (order-insensitive) manifest equality;
-    invalidation deletes the manifest so every crash window fails
-    toward recompute."""
+    """runtime/checkpoint.py contract: reuse requires the data's
+    _SUCCESS + a manifest FILE whose schema and (order-insensitive)
+    rows equal this invocation's; invalidation deletes the manifest so
+    every crash window fails toward recompute."""
     from sequali_spark.runtime.checkpoint import (
         content_fingerprint,
         invalidate_stage_manifest,
@@ -448,14 +455,17 @@ def test_stage_checkpoint_helpers(spark, tmp_path):
     man = str(tmp_path / "stage_manifest")
     schema = "k string, v int"
     rows = [("b", 2), ("a", 1)]  # two rows: exercises order-insensitivity
-    spark.range(3).write.parquet(data)
-    assert not stage_is_reusable(spark, data, man, rows, schema)  # no manifest
     write_stage_manifest(spark, man, rows, schema)
+    assert os.path.isfile(man) and not os.path.exists(man + ".tmp")
+    assert json.load(open(man)) == {"schema": schema, "rows": [["a", 1], ["b", 2]]}
+    assert not stage_is_reusable(spark, data, man, rows, schema)  # no data
+    spark.range(3).write.parquet(data)
     assert stage_is_reusable(spark, data, man, rows, schema)
     # same rows, different order: still reusable
     assert stage_is_reusable(spark, data, man, [("a", 1), ("b", 2)], schema)
-    # changed parameter: not reusable
+    # changed parameter or schema: not reusable
     assert not stage_is_reusable(spark, data, man, [("a", 1), ("b", 3)], schema)
+    assert not stage_is_reusable(spark, data, man, rows, "k string, v long")
     # invalidation (the delete-manifest-first crash guard)
     invalidate_stage_manifest(spark, man)
     assert not stage_is_reusable(spark, data, man, rows, schema)
@@ -508,6 +518,60 @@ def test_stage_rebuilds_after_failed_build(spark, tmp_path, monkeypatch):
     assert not checkpoint.stage_is_reusable(spark, path, path + "_manifest", rows, schema)
     df, reused = checkpoint.stage(spark, path, rows, schema, build)
     assert not reused and df.count() == 3 and len(builds) == 2
+
+
+@pytest.mark.parametrize("damage", ["truncated", "truncated_no_crc", "parquet_dir"])
+def test_stage_rebuilds_over_unreadable_manifest(spark, tmp_path, damage):
+    """A manifest that cannot be read as this invocation's — a
+    truncated file (with its local .crc left stale, or without one) or
+    the one-row parquet directory older versions wrote — is not a
+    match: stage() rebuilds and commits a readable manifest over it."""
+    from sequali_spark.runtime import checkpoint
+
+    path = str(tmp_path / "stage")
+    man = path + "_manifest"
+    schema = "k string, v int"
+    rows = [("a", 1)]
+    checkpoint.stage(spark, path, rows, schema, lambda: spark.range(3))
+    if damage == "parquet_dir":
+        os.remove(man)
+        spark.createDataFrame(rows, schema).write.parquet(man)
+    else:
+        with open(man, "r+") as f:
+            f.truncate(os.path.getsize(man) // 2)
+        if damage == "truncated_no_crc":
+            os.remove(str(tmp_path / ".stage_manifest.crc"))
+    assert not checkpoint.stage_is_reusable(spark, path, man, rows, schema)
+    df, reused = checkpoint.stage(spark, path, rows, schema, lambda: spark.range(5))
+    assert not reused and df.count() == 5
+    assert os.path.isfile(man)
+    assert checkpoint.stage_is_reusable(spark, path, man, rows, schema)
+
+
+def test_curation_cli_width_invariance(spark, sf_dir, tmp_path):
+    """The default shuffle width follows the core count, so the same
+    job at SPARK_GRAFT_CPUS=1 and =4 (no SPARK_GRAFT_SHUFFLE) runs at
+    widths 1 and 4: its decisions and curated rows must be equal."""
+    results = []
+    for cpus in ("1", "4"):
+        out = str(tmp_path / f"curated_{cpus}")
+        env = dict(os.environ, SPARK_GRAFT_CPUS=cpus, PYTHONPATH=REPO)
+        env.pop("SPARK_GRAFT_SHUFFLE", None)
+        env.pop("SPARK_GRAFT_MASTER", None)
+        proc = subprocess.run(
+            [
+                sys.executable, "jobs/run_curation.py", "--input", sf_dir,
+                "--output", out, "--paragraph-dedup", "--force",
+            ],
+            cwd=REPO, env=env, capture_output=True, text=True, timeout=420,
+        )
+        assert proc.returncode == 0, proc.stderr[-2000:]
+        results.append(tuple(
+            sorted(map(tuple, spark.read.parquet(p).collect()))
+            for p in (out + "_decisions", out)
+        ))
+    assert results[0][0] and results[0][1]
+    assert results[0] == results[1]
 
 
 def test_probes_fingerprint_sees_duplicated_rows(spark):
