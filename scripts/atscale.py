@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """At-scale empirical datapoints — the companions to SCALE.md's knob math.
 
-Two runs over the deterministic bench corpus (bench.ensure_pages_parquet,
+Runs over the deterministic bench corpus (bench.ensure_pages_parquet,
 the same 64-chunk fixed-grid corpus the scaling ladder uses):
 
 - **dedup**: minhash_near_dup_pairs (exact-collapse-first LSH) +
@@ -13,16 +13,25 @@ the same 64-chunk fixed-grid corpus the scaling ladder uses):
   then re-invoked — records both walls and verifies the resume actually
   reused the checkpoint (resumed_from_checkpoint=true + reconciled
   stats).
+- **curation-scaling**, **paragraph**: the curation job and paragraph
+  dedup on bench.scaling_ladder (local[N] -> local[4N], sized to the
+  host), outputs compared across every leg.  The heap is the caller's
+  SPARK_GRAFT_DRIVER_MEM: provision memory out of the measurement so
+  cores are the only scaled resource.  The 32-vCPU records set 16g on
+  every leg (BENCH/ATSCALE.md r7: a shared 8 GB heap starved the
+  8-core leg, and 1.5 GB per core starved the 2-core leg, whose
+  signature cache is corpus-sized).
 
-Results are appended to BENCH/ATSCALE.md (a separate file because
-`bench.py --scaling` REWRITES BENCH/BASELINE.md).
+Results are appended to BENCH/ATSCALE.md.
 
-Usage: python scripts/atscale.py [--rows 2000000] [--mode dedup|curation|all]
+Usage: python scripts/atscale.py [--rows 2000000]
+    [--mode dedup|curation|curation-scaling|paragraph|ann|ann-disk|ring-recall|all]
 """
 
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import os
 import signal
@@ -33,6 +42,8 @@ import urllib.request
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+from bench import child_json, ensure_pages_parquet, scaling_ladder  # noqa: E402
 
 
 def _shuffle_bytes(spark) -> tuple[int, int]:
@@ -66,6 +77,21 @@ def _docs_from_pages(spark, src: str):
     )
 
 
+def _docs_dir(rows: int) -> str:
+    """The documents table over the --rows bench corpus, written once
+    to ``<dir>/documents.parquet``; returns ``<dir>``."""
+    docs_dir = f"/tmp/sequali_atscale_docs_{rows}"
+    docs = os.path.join(docs_dir, "documents.parquet")
+    if not os.path.exists(os.path.join(docs, "_SUCCESS")):
+        from sequali_spark.session import get_spark
+
+        spark = get_spark(app_name="atscale_prep")
+        src = ensure_pages_parquet(rows)
+        _docs_from_pages(spark, src).write.mode("overwrite").parquet(docs)
+        spark.stop()
+    return docs_dir
+
+
 def _job_outputs(out: str) -> list[str]:
     """What a curation job writing ``out`` leaves beside it: the output,
     the decision checkpoint, and the stage manifest file with its temp
@@ -77,7 +103,6 @@ def _job_outputs(out: str) -> list[str]:
 
 
 def run_dedup(rows: int) -> dict:
-    from bench import ensure_pages_parquet
     from sequali_spark.operators import dedup
     from sequali_spark.session import fit_width, get_spark
 
@@ -129,24 +154,14 @@ def run_dedup(rows: int) -> dict:
 
 
 def run_curation(rows: int) -> dict:
-    from bench import ensure_pages_parquet
-    from sequali_spark.session import get_spark
-
-    src = ensure_pages_parquet(rows)
-    docs_dir = f"/tmp/sequali_atscale_docs_{rows}"
-    if not os.path.exists(os.path.join(docs_dir, "documents.parquet", "_SUCCESS")):
-        spark = get_spark(app_name="atscale_prep")
-        _docs_from_pages(spark, src).write.mode("overwrite").parquet(
-            os.path.join(docs_dir, "documents.parquet")
-        )
-        spark.stop()
-
+    docs_dir = _docs_dir(rows)
     out = f"/tmp/sequali_atscale_curated_{rows}"
     dec_sentinel = out + "_decisions/_SUCCESS"
     # the manifest is one file, renamed into place once written
     # (runtime/checkpoint.py), so its existence marks the commit
     man_sentinel = out + "_decisions_manifest"
-    for p in _job_outputs(out):
+    run1_log = out + "_run1.log"
+    for p in _job_outputs(out) + [run1_log]:
         subprocess.run(["rm", "-rf", p], check=False)
     stats1, stats2 = "/tmp/atscale_cur1.json", "/tmp/atscale_cur2.json"
     env = dict(os.environ, PYTHONPATH=REPO)
@@ -207,22 +222,23 @@ def run_curation(rows: int) -> dict:
     # expensive stage) but before the output join finishes — the
     # mid-run-crash scenario the stage resume exists for
     t0 = time.time()
-    proc = subprocess.Popen(
-        [
-            sys.executable, "jobs/run_curation.py",
-            "--input", docs_dir, "--output", out, "--stats", stats1,
-        ],
-        cwd=REPO, env=dict(env, SPARK_LOCAL_DIRS=run1_local_dirs),
-        stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
-    )
-    killed = False
-    while proc.poll() is None:
-        if os.path.exists(dec_sentinel) and os.path.isfile(man_sentinel):
-            proc.send_signal(signal.SIGKILL)
-            killed = True
-            break
-        time.sleep(0.2)
-    proc.wait()
+    with open(run1_log, "w") as log:
+        proc = subprocess.Popen(
+            [
+                sys.executable, "jobs/run_curation.py",
+                "--input", docs_dir, "--output", out, "--stats", stats1,
+            ],
+            cwd=REPO, env=dict(env, SPARK_LOCAL_DIRS=run1_local_dirs),
+            stdout=log, stderr=subprocess.STDOUT,
+        )
+        killed = False
+        while proc.poll() is None:
+            if os.path.exists(dec_sentinel) and os.path.isfile(man_sentinel):
+                proc.send_signal(signal.SIGKILL)
+                killed = True
+                break
+            time.sleep(0.2)
+        proc.wait()
     t_run1 = time.time() - t0
     # the killed JVM's bulk leak lives in its dedicated local-dirs root:
     # delete by name, unconditionally — it is exclusively run 1's
@@ -238,6 +254,15 @@ def run_curation(rows: int) -> dict:
         if _dir_in_use(leaked):
             continue
         subprocess.run(["rm", "-rf", leaked], check=False)
+
+    # a run 1 that died on its own never exercised the kill-and-resume
+    # case, and its run 2 would recompute the whole job
+    if not killed and proc.returncode != 0:
+        with open(run1_log) as log:
+            tail = log.read()[-3000:]
+        raise RuntimeError(
+            f"run 1 exited {proc.returncode} before the kill ({run1_log}):\n{tail}"
+        )
 
     # run 2: must resume from the checkpoint and finish the cheap tail
     t1 = time.time()
@@ -256,6 +281,7 @@ def run_curation(rows: int) -> dict:
     return {
         "rows": stats["input_docs"],
         "killed_mid_run": killed,
+        "run1_exit_code": proc.returncode,
         "run1_wall_sec_until_kill": round(t_run1, 1),
         "run2_wall_sec_resumed": round(t_run2, 1),
         "resumed_from_checkpoint": stats["resumed_from_checkpoint"],
@@ -265,123 +291,35 @@ def run_curation(rows: int) -> dict:
     }
 
 
-def run_curation_scaling(rows: int, ladder: tuple = (2, 8)) -> dict:
+def _curation_leg(rows: int, docs_dir: str, cpus: int, env: dict) -> dict:
+    """One scaling_ladder leg of the curation job: a fresh --force run
+    (a resumed leg would measure the cheap tail only)."""
+    out = f"/tmp/sequali_atscale_curscale_{rows}_{cpus}"
+    for p in _job_outputs(out):
+        subprocess.run(["rm", "-rf", p], check=False)
+    t0 = time.time()
+    st = child_json(
+        [sys.executable, "jobs/run_curation.py", "--input", docs_dir, "--output", out, "--force"],
+        env,
+    )
+    dt = time.time() - t0
+    return {
+        "seconds": round(dt, 1),
+        "docs_per_sec": round(rows / dt, 1),
+        "kept": st["kept"],
+        "parity": [st["kept"], st["dropped"]],
+    }
+
+
+def run_curation_scaling(rows: int) -> dict:
     """Scaling-efficiency evidence for the CURATION job (VERDICT r6
     #7): the bench ladder covers the embarrassingly-parallel label
     pipeline; this runs the full filter -> dedup -> decontaminate ->
-    write job — whose dedup stages are SHUFFLE-bound — at two
-    parallelism levels in fresh subprocesses on the identical prepared
-    corpus and reports throughput at both plus N->4N efficiency (the
-    in-sandbox mirror of the north rule's two-cluster-size criterion).
-
-    Protocol mirrors bench.py --scaling: attempts interleaved
-    round-robin across configs (hypervisor noise has minutes-long
-    correlation time), best-of per leg (noise only ever adds wall
-    time), every leg recomputes from scratch (--force + cleaned
-    checkpoint dirs — a resumed leg would measure the cheap tail),
-    per-leg dedicated SPARK_LOCAL_DIRS cleaned between attempts, and
-    identical outputs asserted via the stats JSON (kept/dropped must
-    match across every leg)."""
-    from bench import ensure_pages_parquet
-    from sequali_spark.session import get_spark
-
-    src = ensure_pages_parquet(rows)
-    docs_dir = f"/tmp/sequali_atscale_docs_{rows}"
-    if not os.path.exists(os.path.join(docs_dir, "documents.parquet", "_SUCCESS")):
-        spark = get_spark(app_name="atscale_prep")
-        _docs_from_pages(spark, src).write.mode("overwrite").parquet(
-            os.path.join(docs_dir, "documents.parquet")
-        )
-        spark.stop()
-
-    results: dict[int, dict] = {}
-    decisions = {}
-    for attempt in range(2):
-        for cpus in ladder:
-            out = f"/tmp/sequali_atscale_curscale_{rows}_{cpus}"
-            stats = f"/tmp/atscale_curscale_{rows}_{cpus}.json"
-            local_dirs = out + "_local"
-            for p in _job_outputs(out) + [local_dirs, stats]:
-                subprocess.run(["rm", "-rf", p], check=False)
-            # shuffle partitions are pinned to 32, the width this
-            # ladder was recorded at, for EVERY leg rather than left to
-            # the session's per-core default: partition count is sized
-            # by data volume (bounded partition size), cores only set
-            # concurrency — forcing partitions = cores at 2M rows
-            # quadrupled partition size on the small leg and OOMed the
-            # 8 GB heap (measured r7); identical partitioning also means
-            # the legs differ only in parallelism, which is what the
-            # ladder measures.
-            #
-            # Memory is provisioned OUT of the measurement (16 GB on
-            # every leg): cores must be the only scaled resource.  Two
-            # failed protocols document why (BENCH/ATSCALE.md r7):
-            # the default shared 8 GB heap starved the 8-core leg (8
-            # concurrent task sorts + the corpus-sized signature cache
-            # in the heap 2 tasks had to themselves -> GC/spill
-            # pressure, "efficiency" 0.61, an artifact no real 4N
-            # cluster with 4x aggregate memory would see), while
-            # memory-per-core (1.5 GB/core) starved the 2-CORE leg
-            # (UNABLE_TO_ACQUIRE_MEMORY: the cache footprint is
-            # corpus-sized and core-independent, and local mode cannot
-            # shard it across executors the way a real cluster does).
-            env = dict(
-                os.environ,
-                PYTHONPATH=REPO,
-                SPARK_GRAFT_CPUS=str(cpus),
-                SPARK_GRAFT_DRIVER_MEM="16g",
-                SPARK_LOCAL_DIRS=local_dirs,
-                SPARK_GRAFT_SHUFFLE="32",
-            )
-            t0 = time.time()
-            proc = subprocess.run(
-                [
-                    sys.executable, "jobs/run_curation.py",
-                    "--input", docs_dir, "--output", out,
-                    "--stats", stats, "--force",
-                ],
-                cwd=REPO, env=env, capture_output=True, text=True,
-            )
-            dt = time.time() - t0
-            if proc.returncode != 0:
-                raise RuntimeError(
-                    f"curation leg cpus={cpus} failed:\n" + proc.stderr[-3000:]
-                )
-            st = json.load(open(stats))
-            decisions.setdefault(cpus, (st["kept"], st["dropped"]))
-            # explicit raise, not assert: under python -O the parity
-            # gate would vanish and a diverging leg would be reported
-            # as a clean scaling result (ADVICE r7)
-            if decisions[cpus] != (st["kept"], st["dropped"]):
-                raise RuntimeError(
-                    f"cpus={cpus} re-run changed decisions: "
-                    f"{decisions[cpus]} -> {(st['kept'], st['dropped'])}"
-                )
-            dps = round(rows / dt, 1)
-            if cpus not in results or dps > results[cpus]["docs_per_sec"]:
-                results[cpus] = {
-                    "cpus": cpus,
-                    "seconds": round(dt, 1),
-                    "docs_per_sec": dps,
-                    "kept": st["kept"],
-                }
-            subprocess.run(["rm", "-rf", local_dirs], check=False)
-    # identical decisions across parallelism levels (partition-invariance)
-    canon = {json.dumps(d, sort_keys=True) for d in decisions.values()}
-    if len(canon) != 1:
-        raise RuntimeError(f"decisions diverge across configs: {decisions}")
-    lo, hi = min(ladder), max(ladder)
-    eff = results[hi]["docs_per_sec"] / (
-        (hi / lo) * results[lo]["docs_per_sec"]
-    )
-    return {
-        "rows": rows,
-        "ladder": {str(c): results[c] for c in ladder},
-        "scaling_efficiency": round(eff, 3),
-        "from_to": f"local[{lo}] -> local[{hi}]",
-        "target": 0.8,
-        "pass": eff >= 0.8,
-    }
+    write job, whose dedup stages are SHUFFLE-bound, on the identical
+    prepared corpus at every leg, and its decisions (kept/dropped) must
+    match across legs."""
+    leg = functools.partial(_curation_leg, rows, _docs_dir(rows))
+    return {"rows": rows, **scaling_ladder(leg)}
 
 
 def _clustered_embeddings(spark, n_rows: int, dim: int = 64, n_clusters: int = 1000):
@@ -746,7 +684,7 @@ def run_ring_recall(rows: int) -> dict:
     return out
 
 
-def _paragraph_leg(docs_dir: str, stats_path: str) -> None:
+def _paragraph_leg(docs_dir: str) -> dict:
     """One paragraph-dedup leg in a fresh interpreter (subprocess
     target): run the operator end-to-end, reduce the result to
     order-independent invariants (counts + a bit_xor row digest, so
@@ -778,143 +716,45 @@ def _paragraph_leg(docs_dir: str, stats_path: str) -> None:
     wall = time.time() - t0
     shuffle_total, shuffle_peak = _shuffle_bytes(spark)
     spark.stop()
-    with open(stats_path, "w") as f:
-        json.dump(
-            {
-                "wall_sec": round(wall, 1),
-                "docs": agg["docs"],
-                "paras": agg["paras"],
-                "kept_paras": agg["kept"],
-                "modified_docs": agg["modified"],
-                "emptied_docs": agg["emptied"],
-                "xor_digest": agg["xor_digest"],
-                "shuffle_write_bytes_total": shuffle_total,
-                "shuffle_write_bytes_peak_stage": shuffle_peak,
-            },
-            f,
-        )
-
-
-def run_paragraph(rows: int, ladder: tuple = (2, 8)) -> dict:
-    """Paragraph-level dedup + reconstruction at --rows documents, run
-    at two parallelism levels (the in-sandbox mirror of the north
-    rule's two-cluster-size criterion): fresh subprocess per leg,
-    attempts interleaved round-robin across configs (hypervisor noise
-    correlates over minutes), best-of per leg, 16 GB on every leg so
-    cores are the only scaled resource, and the legs' result
-    invariants (counts + xor row digest) must match exactly — an
-    explicit raise, never assert (python -O would erase the gate)."""
-    from bench import ensure_pages_parquet
-
-    from sequali_spark.session import get_spark
-
-    src = ensure_pages_parquet(rows)
-    docs_dir = f"/tmp/sequali_atscale_docs_{rows}"
-    if not os.path.exists(os.path.join(docs_dir, "documents.parquet", "_SUCCESS")):
-        spark = get_spark(app_name="atscale_prep")
-        _docs_from_pages(spark, src).write.mode("overwrite").parquet(
-            os.path.join(docs_dir, "documents.parquet")
-        )
-        spark.stop()
-
-    results: dict[int, dict] = {}
-    parity: dict[int, tuple] = {}
-    for attempt in range(2):
-        for cpus in ladder:
-            stats = f"/tmp/atscale_paragraph_{rows}_{cpus}.json"
-            local_dirs = f"/tmp/atscale_paragraph_local_{rows}_{cpus}"
-            subprocess.run(["rm", "-rf", stats, local_dirs], check=False)
-            env = dict(
-                os.environ,
-                PYTHONPATH=REPO,
-                SPARK_GRAFT_CPUS=str(cpus),
-                SPARK_GRAFT_DRIVER_MEM="16g",
-                SPARK_LOCAL_DIRS=local_dirs,
-                # one width on every leg, as in run_curation_scaling
-                SPARK_GRAFT_SHUFFLE="32",
-            )
-            t0 = time.time()
-            proc = subprocess.run(
-                [
-                    sys.executable,
-                    "-c",
-                    "import sys; sys.path.insert(0, %r); "
-                    "from scripts.atscale import _paragraph_leg; "
-                    "_paragraph_leg(%r, %r)" % (REPO, docs_dir, stats),
-                ],
-                cwd=REPO,
-                env=env,
-                capture_output=True,
-                text=True,
-            )
-            dt = time.time() - t0
-            if proc.returncode != 0:
-                raise RuntimeError(
-                    f"paragraph leg cpus={cpus} failed:\n" + proc.stderr[-3000:]
-                )
-            st = json.load(open(stats))
-            inv = (
-                st["docs"], st["paras"], st["kept_paras"],
-                st["modified_docs"], st["emptied_docs"], st["xor_digest"],
-            )
-            parity.setdefault(cpus, inv)
-            if parity[cpus] != inv:
-                raise RuntimeError(
-                    f"cpus={cpus} re-run changed results: {parity[cpus]} -> {inv}"
-                )
-            dps = round(rows / st["wall_sec"], 1)
-            if cpus not in results or dps > results[cpus]["docs_per_sec"]:
-                results[cpus] = {
-                    "cpus": cpus,
-                    "op_wall_sec": st["wall_sec"],
-                    "leg_wall_sec": round(dt, 1),
-                    "docs_per_sec": dps,
-                    "modified_docs": st["modified_docs"],
-                    "emptied_docs": st["emptied_docs"],
-                    "shuffle_write_bytes_total": st["shuffle_write_bytes_total"],
-                    "shuffle_write_bytes_peak_stage": st["shuffle_write_bytes_peak_stage"],
-                }
-            subprocess.run(["rm", "-rf", local_dirs], check=False)
-    canon = set(parity.values())
-    if len(canon) != 1:
-        raise RuntimeError(f"results diverge across configs: {parity}")
-    lo, hi = min(ladder), max(ladder)
-    eff = results[hi]["docs_per_sec"] / ((hi / lo) * results[lo]["docs_per_sec"])
     return {
-        "rows": rows,
-        "ladder": {str(c): results[c] for c in ladder},
-        "scaling_efficiency": round(eff, 3),
-        "from_to": f"local[{lo}] -> local[{hi}]",
-        "target": 0.8,
-        "pass": eff >= 0.8,
+        "op_wall_sec": round(wall, 1),
+        "docs_per_sec": round(agg["docs"] / wall, 1),
+        "modified_docs": agg["modified"],
+        "emptied_docs": agg["emptied"],
+        "shuffle_write_bytes_total": shuffle_total,
+        "shuffle_write_bytes_peak_stage": shuffle_peak,
+        "parity": [
+            agg["docs"], agg["paras"], agg["kept"],
+            agg["modified"], agg["emptied"], agg["xor_digest"],
+        ],
     }
+
+
+def _paragraph_ladder_leg(docs_dir: str, cpus: int, env: dict) -> dict:
+    """One scaling_ladder leg: _paragraph_leg in a fresh interpreter."""
+    return child_json(
+        [
+            sys.executable,
+            "-c",
+            "import json, sys; sys.path.insert(0, %r); "
+            "from scripts.atscale import _paragraph_leg; "
+            "print(json.dumps(_paragraph_leg(%r)))" % (REPO, docs_dir),
+        ],
+        env,
+    )
+
+
+def run_paragraph(rows: int) -> dict:
+    """Paragraph-level dedup + reconstruction at --rows documents on
+    the scaling ladder; the legs' result invariants (counts + xor row
+    digest) must match exactly."""
+    leg = functools.partial(_paragraph_ladder_leg, _docs_dir(rows))
+    return {"rows": rows, **scaling_ladder(leg)}
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rows", type=int, default=2_000_000)
-    def _ladder(text: str) -> tuple:
-        # r9 (advisor): validate arity + positivity up front instead of
-        # raising a bare int()/IndexError deep inside run_paragraph
-        parts = text.split(",")
-        if len(parts) != 2:
-            raise argparse.ArgumentTypeError(
-                f"--ladder wants exactly two comma-separated ints, got {text!r}"
-            )
-        try:
-            lo, hi = (int(p) for p in parts)
-        except ValueError:
-            raise argparse.ArgumentTypeError(f"--ladder: non-integer in {text!r}")
-        if lo <= 0 or hi <= 0:
-            raise argparse.ArgumentTypeError(f"--ladder: both must be positive, got {text!r}")
-        return (lo, hi)
-
-    ap.add_argument(
-        "--ladder",
-        type=_ladder,
-        default=None,
-        help="comma-separated parallelism pair for --mode paragraph, e.g. 8,32",
-    )
     ap.add_argument(
         "--mode",
         choices=["dedup", "curation", "curation-scaling", "paragraph", "ann",
@@ -934,9 +774,7 @@ def main() -> None:
         results["curation_scaling"] = run_curation_scaling(args.rows)
         print(json.dumps({"curation_scaling": results["curation_scaling"]}))
     if args.mode == "paragraph":  # ladder; not part of "all"
-        results["paragraph_dedup"] = run_paragraph(
-            args.rows, ladder=args.ladder or (2, 8)
-        )
+        results["paragraph_dedup"] = run_paragraph(args.rows)
         print(json.dumps({"paragraph_dedup": results["paragraph_dedup"]}))
     if args.mode == "ann":  # separate corpus; not part of "all"
         results["ann"] = run_ann(args.rows)

@@ -1,50 +1,28 @@
 #!/usr/bin/env python
 """Sweep every judged query for duplicate stage materializations.
 
-Runs each `queries()` entry with the Spark event log enabled, then
-flags stages within one query whose (shuffle-write bytes, rows) pair
-repeats — the signature of a subtree AQE materialized more than once
-(union branches, un-pinned multi-consumer frames; see the r6
-connected_components audit).  Small duplicates are noise (broadcast
-builds, retries); only pairs above --min-mb are reported.
+Runs each `queries()` entry under its own Spark job group with the
+event log enabled, reads the log with perfbench.eventlog, and flags
+stages within one query whose shuffle-write byte count repeats — the
+signature of a subtree AQE materialized more than once (union branches,
+un-pinned multi-consumer frames; see the r6 connected_components
+audit).  Small duplicates are noise (broadcast builds, retries); only
+stages above --min-mb are compared.  `perfbench/run.py --trace 1`
+gives the per-stage table of the benchmark workloads; this sweep
+covers all the queries, which they do not run.
 
 Usage: python scripts/diag_dupe_stages.py [--sf-dir /root/testdata/sf0.01]
 """
 from __future__ import annotations
 
 import argparse
-import json
 import os
-import shutil
 import sys
+import tempfile
 from collections import Counter
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.join(REPO, "scripts"))
-
-from diag_curation_shuffle import _read_lines  # noqa: E402
-
-
-def stage_metrics(evdir: str) -> dict[int, tuple[float, int]]:
-    out = {}
-    logfiles = []
-    for root, _dirs, files in os.walk(evdir):
-        logfiles += [os.path.join(root, f) for f in files if "appstatus" not in f]
-    for fname in logfiles:
-        for line in _read_lines(fname):
-            try:
-                ev = json.loads(line)
-            except json.JSONDecodeError:
-                continue
-            if ev.get("Event") != "SparkListenerStageCompleted":
-                continue
-            si = ev["Stage Info"]
-            acc = {a["Name"]: a.get("Value", 0) for a in si.get("Accumulables", [])}
-            w = int(acc.get("internal.metrics.shuffle.write.bytesWritten", 0))
-            r = int(acc.get("internal.metrics.shuffle.write.recordsWritten", 0))
-            out[si["Stage ID"]] = (round(w / 1e6, 1), r)
-    return out
 
 
 def main() -> None:
@@ -53,42 +31,49 @@ def main() -> None:
     ap.add_argument("--min-mb", type=float, default=5.0)
     args = ap.parse_args()
 
-    evdir = "/tmp/diag_dupe_evlog"
-    shutil.rmtree(evdir, ignore_errors=True)
-    os.makedirs(evdir)
-
     import __spark_entry__ as entry
+    from perfbench import eventlog
     from sequali_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="diag_dupes",
-        master="local[16]",
-        shuffle_partitions=16,
-        extra_conf={"spark.eventLog.enabled": "true", "spark.eventLog.dir": evdir},
-    )
-    queries = entry.queries()
-    seen: dict[int, tuple[float, int]] = {}
+    ran = []
+    with tempfile.TemporaryDirectory(prefix="diag_dupe_evlog_") as evdir:
+        spark = get_spark(
+            app_name="diag_dupes",
+            extra_conf={
+                "spark.eventLog.enabled": "true",
+                "spark.eventLog.dir": "file://" + evdir,
+                # the layout perfbench.eventlog reads
+                "spark.eventLog.compress": "false",
+                "spark.eventLog.rolling.enabled": "false",
+            },
+        )
+        for name, fn in entry.queries().items():
+            spark.sparkContext.setJobGroup(name, name)
+            try:
+                fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
+            except Exception as exc:  # a query that needs absent inputs etc.
+                print(f"{name}: SKIP ({type(exc).__name__}: {str(exc)[:80]})")
+                continue
+            ran.append(name)
+        spark.stop()  # flushes and closes the log
+        stages, _ = eventlog.parse(eventlog.find_log(evdir))
+
+    by_group: dict[str | None, list] = {}
+    for st in stages:
+        by_group.setdefault(st.group, []).append(st)
     flagged = 0
-    for name, fn in queries.items():
-        try:
-            fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
-        except Exception as exc:  # a query that needs absent inputs etc.
-            print(f"{name}: SKIP ({type(exc).__name__}: {str(exc)[:80]})")
-            continue
-        # flush the event log by reading all stages so far and diffing
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-        all_stages = stage_metrics(evdir)
-        new = {k: v for k, v in all_stages.items() if k not in seen}
-        seen = all_stages
-        sizes = Counter(v for v in new.values() if v[0] >= args.min_mb and v[1] > 0)
-        dupes = {k: c for k, c in sizes.items() if c > 1}
+    for name in ran:
+        group = by_group.get(name, [])
+        sizes = Counter(
+            b for b in (s.shuffle_write_bytes for s in group) if b and b >= args.min_mb * 1e6
+        )
+        dupes = {f"{b / 1e6:.1f}MB": c for b, c in sizes.items() if c > 1}
         if dupes:
             flagged += 1
             print(f"{name}: DUPLICATE stage shapes {dupes}")
         else:
-            print(f"{name}: ok ({len(new)} stages)")
-    spark.stop()
-    print(f"\n{flagged} queries with duplicate heavy stages")
+            print(f"{name}: ok ({len(group)} stages)")
+    print(f"\n{flagged} of {len(ran)} queries with duplicate heavy stages")
 
 
 if __name__ == "__main__":
