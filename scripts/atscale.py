@@ -94,12 +94,13 @@ def _docs_dir(rows: int) -> str:
 
 def _job_outputs(out: str) -> list[str]:
     """What a curation job writing ``out`` leaves beside it: the output,
-    the decision checkpoint, and the stage manifest file with its temp
-    name and the local FileSystem's .crc sidecars."""
+    the decision checkpoint, and the stage manifest file with its
+    ``.<name>.tmp`` temp name and the local FileSystem's .crc
+    sidecars."""
     man = out + "_decisions_manifest"
     d, b = os.path.split(man)
-    return [out, out + "_decisions", man, man + ".tmp",
-            os.path.join(d, f".{b}.crc"), os.path.join(d, f".{b}.tmp.crc")]
+    return [out, out + "_decisions", man, os.path.join(d, f".{b}.tmp"),
+            os.path.join(d, f".{b}.crc"), os.path.join(d, f"..{b}.tmp.crc")]
 
 
 def run_dedup(rows: int) -> dict:
@@ -498,10 +499,9 @@ def run_ann_disk(rows: int) -> dict:
     idx_path = f"/tmp/sequali_atscale_ivfpq_idx_{rows}"
     similarity.write_ivfpq_index(fused, idx_path)
     t_build = time.time() - t0
-    idx_bytes = sum(
+    idx_bytes = sum(  # codes and the metadata file, one directory
         os.path.getsize(os.path.join(dp, f))
-        for root_dir in (idx_path, idx_path + "_meta")  # incl. flag sidecar
-        for dp, _, fs in os.walk(root_dir)
+        for dp, _, fs in os.walk(idx_path)
         for f in fs
     )
 
@@ -646,7 +646,8 @@ def run_ring_recall(rows: int) -> dict:
         .repartition(64)
         .mapInPandas(_gen, schema="doc_id long, text string")
     )
-    sigs = dedup.collapse_exact_reps(dedup.minhash_signatures(docs))
+    # the keepers' exact-rep election (dedup.keepers_from_labeled_sigs)
+    sigs = dedup.exact_rep_labeled_sigs(docs).filter("doc_id = rep")
     sigs = sigs.persist()
     sigs.count()
 

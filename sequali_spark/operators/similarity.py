@@ -8,6 +8,8 @@ the training-data pipeline.  All deterministic (seeded projections).
 
 from __future__ import annotations
 
+import io
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -15,6 +17,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from sequali_spark.operators.textqc import load
+from sequali_spark.runtime import checkpoint
 
 EMB_DIM = 64
 
@@ -596,11 +599,17 @@ def _write_cells(codes: DataFrame, path: str, mode: str) -> None:
     - parquet v2 encodings: DELTA_LENGTH_BYTE_ARRAY stores the codes'
       constant 16-byte length once per page instead of a 4-byte prefix
       per value, DELTA_BINARY_PACKED shrinks the sorted ids.
-    Together: 37.4 -> ~17 B/vector on disk at M=16."""
+    Together: 37.4 -> ~17 B/vector on disk at M=16.
+
+    An overwrite is pinned to STATIC partition overwrite: it deletes
+    the whole index directory, metadata file included, whatever the
+    session's partitionOverwriteMode (dynamic mode would keep every
+    old cell the new frame lacks beside the new metadata)."""
     (
         codes.repartition("centroid")
         .sortWithinPartitions("centroid", "vec_id")
         .write.mode(mode)
+        .option("partitionOverwriteMode", "static")
         .option("parquet.writer.version", "v2")
         .partitionBy("centroid")
         .parquet(path)
@@ -623,10 +632,13 @@ def write_ivfpq_index(
     at 10^12 vectors the index is 16 TB of codes instead of 256 TB of
     floats, and a probe-8-of-256 query scans ~500 GB of it.
 
-    The encoding's residual flag is PERSISTED beside the data
-    (``<path>_meta``, a one-row parquet) so a reader cannot re-stamp
-    the wrong flag and silently defeat the mismatch guard
-    (code-review r5)."""
+    The index is ONE directory: the codes' ``centroid=`` cells plus
+    the metadata file ``IVFPQ_META`` (see _write_ivfpq_meta), so data
+    and metadata always move together.  The residual flag is persisted
+    there so a reader cannot re-stamp the wrong flag and silently
+    defeat the mismatch guard (code-review r5).  The codes are written
+    first: the overwrite deletes the whole directory, old metadata
+    included, so stale metadata never sits beside new codes."""
     meta = codes.schema["codes"].metadata or {}
     if "residual" not in meta:
         raise ValueError(
@@ -641,110 +653,16 @@ def write_ivfpq_index(
         quantizers=quantizers,
         baseline_top1_sim=baseline_top1_sim,
     )
-    token = _quantizer_pair_token(quantizers)
-    if token is not None:
-        _write_pair_marker(codes.sparkSession, path, token)
 
 
-_IVFPQ_META_SCHEMA = (
-    "residual boolean, centroids binary, centroids_shape array<int>, "
-    "codebooks binary, codebooks_shape array<int>, baseline_top1_sim double, "
-    "appended_batches int, pair_token string"
-)
+# underscore prefix: Spark's file index skips it (as it skips
+# _SUCCESS); a name starting with ``_metadata`` would instead be read
+# as a parquet summary file
+IVFPQ_META = "_ivfpq_meta.npz"
 
 
-def _quantizer_pair_token(
-    quantizers: tuple[np.ndarray, np.ndarray] | None,
-) -> str | None:
-    """Content-derived id binding a codes dir to the quantizers that
-    encoded it: digest of the quantizer bytes, stamped both as a
-    ``_pair_token`` marker inside the data dir (write_ivfpq_index) and
-    as a sidecar column (_write_ivfpq_meta).  read_ivfpq_index refuses
-    a mismatched pair — the silent-corruption state a crash inside a
-    rebuild swap could otherwise leave (new codes decoded with stale
-    centroids/codebooks return wrong neighbors with no error)."""
-    if quantizers is None:
-        return None
-    import hashlib
-
-    cents, books = quantizers
-    h = hashlib.blake2b(digest_size=16)
-    h.update(np.ascontiguousarray(cents, dtype=np.float64).tobytes())
-    h.update(np.ascontiguousarray(books, dtype=np.float64).tobytes())
-    return h.hexdigest()
-
-
-def _pair_marker_path(jvm, path: str):
-    return jvm.org.apache.hadoop.fs.Path(path + "/_pair_token")
-
-
-def _write_pair_marker(spark: SparkSession, path: str, token: str) -> None:
-    """Underscore-prefixed marker file inside the parquet dir (ignored
-    by Spark's file index, same convention as _SUCCESS)."""
-    p = _pair_marker_path(spark._jvm, path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(token.encode("ascii")))
-    finally:
-        out.close()
-
-
-def _recover_parked_pair(spark: SparkSession, path: str) -> bool:
-    """Crash-between-phases recovery for the rebuild swap: a previous
-    rebuild parked the live pair under ``<path>__old`` and died,
-    leaving live path(s) absent (readers in that window fail loudly on
-    the missing path — nothing is silently mixed).  Returns True when
-    a restore happened.
-
-    Two distinguishable crash states (r8 review hardening):
-
-    - COMPLETE parked pair: the crash happened after phase 1 (both
-      parked) — possibly mid-phase 2, so a live half may already hold
-      NEW-generation data.  Restore the whole old pair, deleting any
-      live halves first: the parked pair is the last consistent state.
-    - PARTIAL parked pair: the crash happened mid-phase 1 (one half
-      parked, the other still live — both OLD generation by
-      construction, since phase 2 only starts after both parks).
-      Restore just the missing half per-suffix.  Before this case was
-      handled, the next rebuild's pre-swap trash delete destroyed the
-      only copy of the parked half and every subsequent rebuild failed
-      at the park rename — permanently wedged."""
-    jvm = spark._jvm
-    trash = path + "__old"
-
-    def _p(s: str):
-        return jvm.org.apache.hadoop.fs.Path(s)
-
-    fs = _p(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    suffixes = ("", "_meta")
-    if all(fs.exists(_p(path + s)) for s in suffixes):
-        return False
-    if all(fs.exists(_p(trash + s)) for s in suffixes):
-        for s in suffixes:
-            fs.delete(_p(path + s), True)
-            fs.rename(_p(trash + s), _p(path + s))
-        return True
-    restored = False
-    for s in suffixes:
-        if not fs.exists(_p(path + s)) and fs.exists(_p(trash + s)):
-            fs.rename(_p(trash + s), _p(path + s))
-            restored = True
-    return restored
-
-
-def _read_pair_marker(spark: SparkSession, path: str) -> str | None:
-    jvm = spark._jvm
-    p = _pair_marker_path(jvm, path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return None  # pre-r8 index — validation is best-effort
-    stream = fs.open(p)
-    try:
-        data = jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-    finally:
-        stream.close()
-    return bytes(data).decode("ascii")
+def _meta_path(path: str) -> str:
+    return path.rstrip("/") + "/" + IVFPQ_META
 
 
 def _write_ivfpq_meta(
@@ -755,56 +673,53 @@ def _write_ivfpq_meta(
     baseline_top1_sim: float | None,
     appended_batches: int = 0,
 ) -> None:
-    """One-row sidecar beside the index.  With ``quantizers``
-    (centroids, codebooks) the index is SELF-CONTAINED: append jobs
-    re-derive the exact encoder from the sidecar instead of trusting a
-    caller to pass the same numpy arrays (a mismatched codebook would
-    silently corrupt every appended cell).  ``baseline_top1_sim`` is
-    the coarse-quantizer health statistic the drift trigger compares
-    against (see append_ivfpq_index)."""
-    token = _quantizer_pair_token(quantizers)
+    """The index metadata as one ``.npz`` file inside the index
+    directory, written on the driver (no Spark job) and renamed into
+    place (checkpoint.write_file).  With ``quantizers`` (centroids,
+    codebooks) the index is SELF-CONTAINED: append jobs re-derive the
+    exact encoder from it instead of trusting a caller to pass the
+    same numpy arrays (a mismatched codebook would silently corrupt
+    every appended cell).  ``baseline_top1_sim`` is the coarse-
+    quantizer health statistic the drift trigger compares against (see
+    append_ivfpq_index).  A None value is stored as an absent key."""
+    arrays = {
+        "residual": np.bool_(residual),
+        "appended_batches": np.int64(appended_batches),
+    }
+    if baseline_top1_sim is not None:
+        arrays["baseline_top1_sim"] = np.float64(baseline_top1_sim)
     if quantizers is not None:
         cents, books = quantizers
-        row = (
-            residual,
-            np.ascontiguousarray(cents, dtype=np.float64).tobytes(),
-            list(cents.shape),
-            np.ascontiguousarray(books, dtype=np.float64).tobytes(),
-            list(books.shape),
-            baseline_top1_sim,
-            appended_batches,
-            token,
-        )
-    else:
-        row = (
-            residual, None, None, None, None, baseline_top1_sim,
-            appended_batches, None,
-        )
-    spark.createDataFrame([row], _IVFPQ_META_SCHEMA).write.mode("overwrite").parquet(
-        path + "_meta"
-    )
+        arrays["centroids"] = np.ascontiguousarray(cents, dtype=np.float64)
+        arrays["codebooks"] = np.ascontiguousarray(books, dtype=np.float64)
+    buf = io.BytesIO()
+    np.savez(buf, **arrays)
+    checkpoint.write_file(spark, _meta_path(path), buf.getvalue())
 
 
 def read_ivfpq_meta(spark: SparkSession, path: str) -> dict:
-    """Sidecar contents as a dict; tolerates pre-r6 sidecars that carry
-    only the residual flag."""
-    row = spark.read.parquet(path + "_meta").first().asDict()
-    out = {
-        "residual": bool(row["residual"]),
-        "baseline_top1_sim": row.get("baseline_top1_sim"),
-        "appended_batches": int(row.get("appended_batches") or 0),
-        "pair_token": row.get("pair_token"),
-        "centroids": None,
-        "codebooks": None,
-    }
-    if row.get("centroids") is not None:
-        out["centroids"] = np.frombuffer(
-            bytes(row["centroids"]), dtype=np.float64
-        ).reshape(row["centroids_shape"])
-        out["codebooks"] = np.frombuffer(
-            bytes(row["codebooks"]), dtype=np.float64
-        ).reshape(row["codebooks_shape"])
-    return out
+    """The index metadata as a dict (residual, baseline_top1_sim,
+    appended_batches, centroids, codebooks), read on the driver with no
+    Spark job.  An index without the metadata file (one written before
+    the metadata moved inside the index directory) raises: re-encode
+    the embeddings and write it again."""
+    meta_path = _meta_path(path)
+    raw = checkpoint.read_file(spark, meta_path)
+    if raw is None:
+        raise FileNotFoundError(
+            f"IVF-PQ index metadata {meta_path} not found: rebuild the "
+            "index from the embeddings (ivfpq_encode + write_ivfpq_index)"
+        )
+    with np.load(io.BytesIO(raw)) as z:
+        return {
+            "residual": bool(z["residual"]),
+            "baseline_top1_sim": (
+                float(z["baseline_top1_sim"]) if "baseline_top1_sim" in z else None
+            ),
+            "appended_batches": int(z["appended_batches"]),
+            "centroids": z["centroids"] if "centroids" in z else None,
+            "codebooks": z["codebooks"] if "codebooks" in z else None,
+        }
 
 
 def mean_top1_centroid_sim(e: DataFrame, centroids: np.ndarray) -> float:
@@ -839,19 +754,19 @@ def append_ivfpq_index(
     discipline: encode-with-FROZEN-quantizers + partition-aligned
     append + a measured retrain trigger, never a silent re-train.
 
-    Mechanics: the sidecar's persisted (centroids, codebooks) re-derive
+    Mechanics: the metadata's persisted (centroids, codebooks) re-derive
     the exact encoder (an index written without quantizers refuses —
     appending with re-trained codebooks would silently mix encodings),
     the batch is encoded in one fused Arrow pass and appended
     file-per-cell into the same centroid= directories (readers see the
-    union immediately; partition pruning unchanged), and the sidecar is
-    rewritten with an incremented batch counter.
+    union immediately; partition pruning unchanged), and the metadata
+    file is rewritten atomically with an incremented batch counter.
 
     Drift trigger: appended data can migrate away from the frozen
     coarse quantizer (new domains, new languages), degrading both the
     prune ratio and the residual-code fit.  Each append measures the
     batch's mean top-1 centroid similarity (mean_top1_centroid_sim)
-    against the sidecar baseline (recorded at build, or by the first
+    against the metadata's baseline (recorded at build, or by the first
     append if the builder didn't): a drop > ``retrain_drift`` sets
     ``retrain_recommended`` — at which point the owner re-trains and
     rewrites (encode is one pass over the corpus; the index is derived
@@ -866,7 +781,7 @@ def append_ivfpq_index(
     existing id column — a full-index id scan per append is exactly the
     cost append exists to avoid; route true upserts through a MERGE
     table format, the sources/tables.py merge_upsert seam).  Appends
-    are parquet-atomic per run but the sidecar rewrite is not
+    are parquet-atomic per run but the metadata rewrite is not
     transactional with the data append — crash between the two leaves
     a valid index with a stale batch counter (the counter is advisory;
     correctness never reads it)."""
@@ -874,7 +789,7 @@ def append_ivfpq_index(
     meta = read_ivfpq_meta(spark, path)
     if meta["centroids"] is None:
         raise ValueError(
-            "index sidecar carries no frozen quantizers: rewrite it with "
+            "index metadata carries no frozen quantizers: rewrite it with "
             "write_ivfpq_index(..., quantizers=(centroids, codebooks)) before "
             "appending — encoding a batch with re-derived quantizers would "
             "silently mix encodings in the same cells"
@@ -922,7 +837,7 @@ def rebuild_ivfpq_index(
     migrates away from the frozen coarse quantizer; this executes the
     rebuild — retrain quantizers on the CURRENT corpus, re-encode
     everything in one fused Arrow pass, and swap the new index in via
-    write-new + rename, with the sidecar health baseline reset to the
+    write-new + rename, with the health baseline reset to the
     retrained quantizer's own statistic and the append counter cleared.
 
     ``embeddings`` must be the full current vector table (originals +
@@ -930,37 +845,33 @@ def rebuild_ivfpq_index(
     index is derived data, so rebuild is a deterministic function of
     that table, never of the old index's lossy codes.
 
-    Structural parameters default to the OLD sidecar's (same centroid
+    Structural parameters default to the OLD index's (same centroid
     count, same M) so a routine drift rebuild changes fit, not shape;
     pass them explicitly to re-shape.  The residual flag is always
     carried over — flipping the encoding family mid-life would change
     score semantics under every reader.
 
-    Swap discipline (r8, ADVICE r7): the new index and its ``_meta``
-    sidecar are fully written under ``<path>__rebuild`` first, then
-    swapped in TWO PHASES covering the pair — phase 1 renames BOTH live
-    dirs aside to ``<path>__old``, phase 2 renames BOTH staging dirs
-    live — with any failure rolling back every rename already made, in
-    both phases.  Individual renames are atomic on HDFS and local
-    filesystems but the pair swap is not one operation, so the possible
-    crash windows are: a leftover ``__rebuild`` staging dir (harmless —
-    next rebuild overwrites), or one/both live paths momentarily ABSENT
-    with the complete old pair intact under ``__old`` (readers fail
-    LOUDLY on the missing path; the next rebuild auto-restores the
-    ``__old`` pair before proceeding).  No window leaves new codes live
-    beside old quantizers silently: beyond the ordering, the pair is
-    stamped with a content-derived ``pair_token`` (digest of the
-    quantizer bytes) written both as a ``_pair_token`` marker inside
-    the data dir and as a sidecar column, and read_ivfpq_index refuses
-    a mismatched pair.  Object stores without atomic rename should
-    route through the catalog path instead."""
+    Swap discipline: the new index (codes and metadata, one directory)
+    is written in full under ``<path>__rebuild``, then 1. the live
+    directory is renamed to ``<path>__old``, 2. the staging directory
+    is renamed live (on failure the parked one is moved back), 3.
+    ``__old`` is deleted.  Each rename is atomic on HDFS and local
+    filesystems, and data and metadata move together, so the crash
+    windows are a leftover ``__rebuild`` (the next rebuild overwrites
+    it) or, between steps 1 and 2, no live directory with the previous
+    index intact under ``__old`` (readers fail loudly on the missing
+    path; the next rebuild moves it back first).  Object stores
+    without atomic rename should route through the catalog path
+    instead."""
     spark = embeddings.sparkSession
-    _recover_parked_pair(spark, path)
+    trash = path + "__old"
+    if not checkpoint.fs_exists(spark, path) and checkpoint.fs_exists(spark, trash):
+        checkpoint.rename(spark, trash, path)  # crash between steps 1 and 2
     old = read_ivfpq_meta(spark, path)
     if n_centroids is None:
         if old["centroids"] is None:
             raise ValueError(
-                "old sidecar carries no quantizers to inherit the shape "
+                "old index metadata carries no quantizers to inherit the shape "
                 "from: pass n_centroids (and m) explicitly"
             )
         n_centroids = int(old["centroids"].shape[0])
@@ -987,43 +898,16 @@ def rebuild_ivfpq_index(
     )
     n_vectors = spark.read.parquet(staging).count()
 
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
-
-    def _p(s: str):
-        return jvm.org.apache.hadoop.fs.Path(s)
-
-    trash = path + "__old"
-    suffixes = ("", "_meta")
-    done: list[tuple[str, str]] = []  # (src, dst) renames to undo on failure
-
-    def _mv(src: str, dst: str) -> None:
-        if not fs.rename(_p(src), _p(dst)):
-            raise IOError(f"rename {src} -> {dst} failed")
-        done.append((src, dst))
-
+    checkpoint.delete(spark, trash)  # a previous swap's step 3 never ran
+    checkpoint.rename(spark, path, trash)
     try:
-        # phase 1: park BOTH live dirs, then phase 2: promote BOTH
-        # staging dirs — never interleave per-suffix, so a failure can
-        # roll back the whole pair and no state mixes old meta with new
-        # data (ADVICE r7)
-        for s in suffixes:
-            fs.delete(_p(trash + s), True)
-        for s in suffixes:
-            _mv(path + s, trash + s)
-        for s in suffixes:
-            _mv(staging + s, path + s)
+        checkpoint.rename(spark, staging, path)
     except Exception:
-        for src, dst in reversed(done):
-            fs.rename(_p(dst), _p(src))
+        checkpoint.rename(spark, trash, path)
         raise
-    for s in suffixes:
-        fs.delete(_p(trash + s), True)
+    checkpoint.delete(spark, trash)
     # parquet footer/partition caches may still describe the old files
     spark.catalog.refreshByPath(path)
-    spark.catalog.refreshByPath(path + "_meta")
 
     return {
         "n_vectors": int(n_vectors),
@@ -1044,28 +928,10 @@ def read_ivfpq_index(spark: SparkSession, path: str) -> DataFrame:
     """Read a written index back into the fused-frame shape
     ivfpq_topk_for expects.  The partition column comes back
     type-inferred (int) — recast to long — and the residual marker is
-    restored from the index's own ``<path>_meta`` sidecar (never from
-    a caller's guess: a wrong re-stamp would silently pass the
-    mismatch guard and corrupt scores).
-
-    Pair validation (r8): when both the data dir's ``_pair_token``
-    marker and the sidecar's ``pair_token`` are present they must
-    match — a mismatch means the codes were encoded by different
-    quantizers than the sidecar carries (a torn rebuild swap, or a
-    manual half-restore) and decoding would return silently wrong
-    neighbors.  Pre-r8 indexes carry neither and skip the check."""
-    row = spark.read.parquet(path + "_meta").first().asDict()
-    flag = row["residual"]
-    sidecar_token = row.get("pair_token")
-    marker = _read_pair_marker(spark, path)
-    if sidecar_token is not None and marker is not None and sidecar_token != marker:
-        raise IOError(
-            f"index pair mismatch at {path}: data dir was encoded under "
-            f"pair_token {marker} but the sidecar carries {sidecar_token} "
-            "— torn rebuild swap or half-restore; restore the matching "
-            "pair (the rebuild parks the previous one under "
-            f"{path}__old) before reading"
-        )
+    restored from the index's own metadata file (never from a caller's
+    guess: a wrong re-stamp would silently pass the mismatch guard and
+    corrupt scores)."""
+    flag = read_ivfpq_meta(spark, path)["residual"]
     df = spark.read.parquet(path).select(
         "vec_id", F.col("centroid").cast("long").alias("centroid"), "codes"
     )

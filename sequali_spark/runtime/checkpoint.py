@@ -18,10 +18,15 @@ per forced + resumed curation run.  Crash order, each window failing
 toward recompute:
 1. delete the manifest (invalidate_stage_manifest);
 2. overwrite the stage data (its ``_SUCCESS`` marks the commit);
-3. write the manifest to ``<path>_manifest.tmp``, then rename it into
-   place (write_stage_manifest).
+3. write the manifest to ``.<name>_manifest.tmp`` beside it, then
+   rename it into place (write_stage_manifest).
 A missing, truncated or unparsable manifest, or the parquet manifest
 directory an older version wrote, is not a match.
+
+This module is also the one owner of driver-side files: read_file,
+write_file, rename, delete and fs_exists go through the Hadoop
+FileSystem API, and the IVF-PQ index metadata and the lineage rows use
+them as the stage manifest does.
 """
 
 from __future__ import annotations
@@ -47,6 +52,56 @@ def fs_exists(spark: SparkSession, path: str) -> bool:
     os.path.exists only sees the local filesystem)."""
     fs, p = _fs_path(spark, path)
     return fs.exists(p)
+
+
+def rename(spark: SparkSession, src: str, dst: str) -> None:
+    """Rename ``src`` to ``dst``, raising when the FileSystem refuses.
+    ``dst`` must not exist: Hadoop moves a source INTO an existing
+    directory instead of replacing it."""
+    fs, s = _fs_path(spark, src.rstrip("/"))
+    _, d = _fs_path(spark, dst.rstrip("/"))
+    if not fs.rename(s, d):
+        raise OSError(f"could not rename {src} to {dst}")
+
+
+def delete(spark: SparkSession, path: str) -> None:
+    """Delete a file or a directory tree; absent paths are a no-op."""
+    fs, p = _fs_path(spark, path.rstrip("/"))
+    fs.delete(p, True)
+
+
+def read_file(spark: SparkSession, path: str) -> bytes | None:
+    """The bytes of the file at ``path``, or None when no file is there
+    (absent, or a directory).  A checksum mismatch (a file changed
+    behind the local FS's .crc) raises Py4JJavaError."""
+    fs, p = _fs_path(spark, path.rstrip("/"))
+    if not (fs.exists(p) and fs.getFileStatus(p).isFile()):
+        return None
+    stream = fs.open(p)
+    try:
+        return bytes(stream.readAllBytes())
+    finally:
+        stream.close()
+
+
+def write_file(spark: SparkSession, path: str, data: bytes) -> None:
+    """Replace the file at ``path`` with ``data`` so that a reader sees
+    the old file, no file, or the whole new one — never half of it.
+    The bytes go to the dot-prefixed sibling ``.<name>.tmp`` first
+    (Spark's file index skips dot- and underscore-prefixed names, so a
+    reader of the directory never lists it), which is then renamed
+    into place."""
+    path = path.rstrip("/")
+    fs, p = _fs_path(spark, path)
+    tmp = spark._jvm.org.apache.hadoop.fs.Path(p.getParent(), f".{p.getName()}.tmp")
+    out = fs.create(tmp, True)
+    try:
+        out.write(bytearray(data))
+    finally:
+        out.close()
+    fs.delete(p, True)  # rename does not replace on every FileSystem
+    if not fs.rename(tmp, p):
+        raise OSError(f"could not rename {tmp} to {p}")
 
 
 def _manifest_doc(manifest_rows: list[tuple], manifest_schema: str) -> dict:
@@ -104,16 +159,11 @@ def stage_is_reusable(
     silently reusing stale results.  Row order does not matter."""
     if not fs_exists(spark, data_path.rstrip("/") + "/_SUCCESS"):
         return False
-    fs, p = _fs_path(spark, manifest_path.rstrip("/"))
-    if not (fs.exists(p) and fs.getFileStatus(p).isFile()):
-        return False
     try:
-        stream = fs.open(p)
-        try:
-            raw = stream.readAllBytes()
-        finally:
-            stream.close()
-        return json.loads(raw) == _manifest_doc(manifest_rows, manifest_schema)
+        raw = read_file(spark, manifest_path)
+        return raw is not None and json.loads(raw) == _manifest_doc(
+            manifest_rows, manifest_schema
+        )
     except (ValueError, Py4JJavaError):
         # truncated, not UTF-8, not JSON, or a checksum mismatch (a
         # file changed behind the local FS's .crc): recompute
@@ -129,9 +179,7 @@ def invalidate_stage_manifest(spark: SparkSession, manifest_path: str) -> None:
     parameters.  Deleting first makes every crash window fail toward
     recompute.  Deletes a manifest file or an older parquet manifest
     directory alike."""
-    fs, p = _fs_path(spark, manifest_path.rstrip("/"))
-    if fs.exists(p):
-        fs.delete(p, True)
+    delete(spark, manifest_path)
 
 
 def write_stage_manifest(
@@ -143,19 +191,10 @@ def write_stage_manifest(
     """Commit the manifest AFTER the stage data (and after
     invalidate_stage_manifest before it): data without a matching
     manifest is treated as not-reusable, so both halves of the crash
-    window recompute.  The file is written beside its final name and
-    renamed into place, so a reader never sees half a manifest."""
+    window recompute.  write_file renames it into place, so a reader
+    never sees half a manifest."""
     body = json.dumps(_manifest_doc(manifest_rows, manifest_schema)).encode("utf-8")
-    fs, p = _fs_path(spark, manifest_path.rstrip("/"))
-    _, tmp = _fs_path(spark, manifest_path.rstrip("/") + ".tmp")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(body))
-    finally:
-        out.close()
-    fs.delete(p, True)  # rename does not replace on every FileSystem
-    if not fs.rename(tmp, p):
-        raise OSError(f"could not rename {tmp} to {p}")
+    write_file(spark, manifest_path, body)
 
 
 def stage(

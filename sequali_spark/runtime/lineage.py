@@ -25,13 +25,14 @@ lineage dir — append-only, last-writer-wins via max(finished_at).
 from __future__ import annotations
 
 import json
-import os
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
+
+from sequali_spark.runtime import checkpoint
 
 LINEAGE_SCHEMA = (
     "unit string, status string, docs_seen long, docs_kept long, "
@@ -40,7 +41,9 @@ LINEAGE_SCHEMA = (
 
 
 def _lineage_rows(spark: SparkSession, lineage_dir: str) -> DataFrame:
-    if not os.path.isdir(lineage_dir) or not os.listdir(lineage_dir):
+    # the dir may be an hdfs:// or s3a:// URI: checked through the
+    # job's FileSystem, never os.path
+    if not checkpoint.fs_exists(spark, lineage_dir):
         return spark.createDataFrame([], schema=LINEAGE_SCHEMA)
     return spark.read.schema(LINEAGE_SCHEMA).json(lineage_dir)
 
@@ -56,15 +59,12 @@ def completed_units(spark: SparkSession, lineage_dir: str) -> set[str]:
     return {r["unit"] for r in rows}
 
 
-def _append_lineage(lineage_dir: str, row: dict) -> None:
-    """One JSON file per lineage row: atomic (rename), append-only, no
-    coordination needed between concurrently-running drivers."""
-    os.makedirs(lineage_dir, exist_ok=True)
-    tmp = os.path.join(lineage_dir, f".tmp-{uuid.uuid4().hex}")
-    final = os.path.join(lineage_dir, f"part-{row['unit']}-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as f:
-        f.write(json.dumps(row) + "\n")
-    os.rename(tmp, final)
+def _append_lineage(spark: SparkSession, lineage_dir: str, row: dict) -> None:
+    """One JSON file per lineage row: atomic (checkpoint.write_file
+    renames it into place), append-only, no coordination needed between
+    concurrently-running drivers."""
+    final = f"{lineage_dir.rstrip('/')}/part-{row['unit']}-{uuid.uuid4().hex}.json"
+    checkpoint.write_file(spark, final, (json.dumps(row) + "\n").encode("utf-8"))
 
 
 def run_resumable(
@@ -134,6 +134,7 @@ def run_resumable(
         )
         got = obs.get
         _append_lineage(
+            spark,
             lineage_dir,
             {
                 "unit": unit,

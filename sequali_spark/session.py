@@ -104,6 +104,14 @@ def width_for_input(master: str, width: int, input_bytes: int) -> int:
     return max(width, AT_SCALE_WIDTH)
 
 
+def estimated_bytes(df) -> int:
+    """The optimizer's size estimate of ``df`` in bytes — the file
+    bytes under a scan, huge for generated frames — read without
+    running a job.  The estimate is a private API, pinned by
+    tests/test_plans_multimodal.py::test_plan_size_estimate_api."""
+    return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+
+
 def fit_width(df) -> None:
     """Set ``df``'s session to width_for_input over ``df``'s size.
     The size is the optimizer's estimate (the file bytes under a scan),
@@ -112,9 +120,8 @@ def fit_width(df) -> None:
     if df.isStreaming:
         return
     spark = df.sparkSession
-    est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    fitted = width_for_input(spark.sparkContext.master, width, est)
+    fitted = width_for_input(spark.sparkContext.master, width, estimated_bytes(df))
     if fitted != width:
         spark.conf.set("spark.sql.shuffle.partitions", str(fitted))
 
@@ -248,11 +255,8 @@ def spread(df, key: str | None = None, bytes_per_task: int | None = None):
         # the source files, so size the task count to ~bytes_per_task
         # of input each, clamped to session parallelism.  Unknown-size
         # sources (generated frames) estimate huge and clamp to
-        # parallelism, which is the right default for them.  The
-        # estimate is a private API, pinned by
-        # tests/test_plans_multimodal.py::test_plan_size_estimate_api.
-        est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-        target = min(target, max(1, est // bytes_per_task))
+        # parallelism, which is the right default for them.
+        target = min(target, max(1, estimated_bytes(df) // bytes_per_task))
     if df.rdd.getNumPartitions() >= target:
         return df
     if key is not None:

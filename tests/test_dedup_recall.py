@@ -958,103 +958,131 @@ def test_ivfpq_rebuild_restores_recall_after_drift(spark, tmp_path):
 
 
 def test_ivfpq_rebuild_crash_windows(spark, tmp_path):
-    """The rebuild swap's documented crash windows, simulated
-    (VERDICT r7 #6 + ADVICE r7 pair-atomicity):
+    """The rebuild swap's crash windows, simulated.  The index is one
+    directory (codes + metadata file), so the swap has two states to
+    survive:
 
-    1. a stale ``__rebuild`` staging pair from an earlier crash is
+    1. a stale ``__rebuild`` staging dir from an earlier crash is
        overwritten cleanly and the rebuilt index reads back whole;
-    2. a crash BETWEEN swap phases (live pair parked under ``__old``,
-       nothing live) is auto-restored by the next rebuild;
-    3. a torn pair — new codes beside an old sidecar — is REFUSED at
-       read via the content-derived pair token, instead of decoding
-       new codes with stale quantizers and returning wrong neighbors.
+    2. a crash between park and promote (live dir parked under
+       ``__old``, nothing live) is restored by the next rebuild.
+
+    An index without its metadata file (deleted, or written by an older
+    version that kept it in a ``_meta`` sibling) is refused by the
+    reader, append and rebuild alike, naming the missing file.
     """
     import os
+    import re
     import shutil
 
     import numpy as np
 
     from sequali_spark.operators import similarity as sim
 
-    rng = np.random.RandomState(23)
+    r = np.random.RandomState(1)
+    centers = r.randn(4, 64)
+    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
+    rows = []
+    for i in range(160):
+        v = centers[i % 4] + 0.05 * r.randn(64)
+        v /= np.linalg.norm(v)
+        rows.append((i, [float(x) for x in v]))
+    e = spark.createDataFrame(rows, schema="vec_id long, embedding array<float>")
 
-    def _corpus(seed, id_base=0, n=160):
-        r = np.random.RandomState(seed)
-        centers = r.randn(4, 64)
-        centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-        rows = []
-        for i in range(n):
-            v = centers[i % 4] + 0.05 * r.randn(64)
-            v /= np.linalg.norm(v)
-            rows.append((id_base + i, [float(x) for x in v]))
-        return spark.createDataFrame(
-            rows, schema="vec_id long, embedding array<float>"
-        )
-
-    def _build(e, path):
-        cents = sim.kmeans_centroids(e, n_centroids=4, n_iter=2)
-        books = sim.pq_train_residual(e, cents, n_sample=200, n_iter=4)
-        sim.write_ivfpq_index(
-            sim.ivfpq_encode(e, cents, books),
-            path,
-            quantizers=(cents, books),
-            baseline_top1_sim=sim.mean_top1_centroid_sim(e, cents),
-        )
-
-    e = _corpus(1)
     path = str(tmp_path / "idx")
-    _build(e, path)
+    cents = sim.kmeans_centroids(e, n_centroids=4, n_iter=2)
+    books = sim.pq_train_residual(e, cents, n_sample=200, n_iter=4)
+    sim.write_ivfpq_index(
+        sim.ivfpq_encode(e, cents, books),
+        path,
+        quantizers=(cents, books),
+        baseline_top1_sim=sim.mean_top1_centroid_sim(e, cents),
+    )
+
+    def _one_index_dir():
+        assert os.listdir(tmp_path) == ["idx"]
+        assert os.path.isfile(os.path.join(path, sim.IVFPQ_META))
+        assert sim.read_ivfpq_index(spark, path).count() == 160
+
+    _one_index_dir()
+    sim.append_ivfpq_index(e.limit(5), path)  # rewrites the metadata file
+    assert os.listdir(tmp_path) == ["idx"]
+    assert sim.read_ivfpq_index(spark, path).count() == 165
 
     # (1) stale staging leftovers must not derail a rebuild
     os.makedirs(path + "__rebuild/junkdir", exist_ok=True)
     open(path + "__rebuild/garbage", "w").write("stale crash leftovers")
-    os.makedirs(path + "__rebuild_meta", exist_ok=True)
-    open(path + "__rebuild_meta/garbage", "w").write("stale")
     report = sim.rebuild_ivfpq_index(e, path, kmeans_iter=3)
     assert report["n_vectors"] == 160
-    assert sim.read_ivfpq_index(spark, path).count() == 160
-    leftovers = [d for d in os.listdir(tmp_path) if "__" in d]
-    assert leftovers == [], leftovers
+    _one_index_dir()
 
-    # (2) crash between phases: live pair parked, nothing live —
-    # the next rebuild restores the parked pair and completes
+    # (2) crash between park and promote: live dir parked, nothing live
+    # — the next rebuild restores it and completes
     shutil.move(path, path + "__old")
-    shutil.move(path + "_meta", path + "__old_meta")
     report2 = sim.rebuild_ivfpq_index(e, path, kmeans_iter=2)
     assert report2["n_vectors"] == 160
-    assert sim.read_ivfpq_index(spark, path).count() == 160
-    leftovers = [d for d in os.listdir(tmp_path) if "__" in d]
-    assert leftovers == [], leftovers
+    _one_index_dir()
 
-    # (2b) HALF-parked pair (crash mid-phase-1: data parked, meta
-    # still live — both old generation).  Before the r8 per-suffix
-    # recovery, the next rebuild's pre-swap trash delete destroyed the
-    # only copy of the parked half and the swap then failed at the
-    # park rename forever.
-    shutil.move(path, path + "__old")  # data parked, meta live
-    report2b = sim.rebuild_ivfpq_index(e, path, kmeans_iter=2)
-    assert report2b["n_vectors"] == 160
-    assert sim.read_ivfpq_index(spark, path).count() == 160
-    leftovers = [d for d in os.listdir(tmp_path) if "__" in d]
-    assert leftovers == [], leftovers
-
-    # (2c) the mirror half: meta parked, data live
-    shutil.move(path + "_meta", path + "__old_meta")
-    report2c = sim.rebuild_ivfpq_index(e, path, kmeans_iter=2)
-    assert report2c["n_vectors"] == 160
-    assert sim.read_ivfpq_index(spark, path).count() == 160
-    leftovers = [d for d in os.listdir(tmp_path) if "__" in d]
-    assert leftovers == [], leftovers
-
-    # (3) torn pair: codes dir from an index trained on a DIFFERENT
-    # corpus beside this sidecar -> read must refuse, loudly
-    other = str(tmp_path / "other")
-    _build(_corpus(2, id_base=10_000), other)
-    shutil.rmtree(path)
-    shutil.copytree(other, path)
-    spark.catalog.refreshByPath(path)
-    with pytest.raises(Exception, match="pair mismatch"):
+    # an index without its metadata file is refused, naming the file
+    os.remove(os.path.join(path, sim.IVFPQ_META))
+    missing = re.escape(os.path.join(path, sim.IVFPQ_META))
+    with pytest.raises(FileNotFoundError, match=missing):
         sim.read_ivfpq_index(spark, path)
+    with pytest.raises(FileNotFoundError, match=missing):
+        sim.append_ivfpq_index(e.limit(5), path)
+    with pytest.raises(FileNotFoundError, match=missing):
+        sim.rebuild_ivfpq_index(e, path)
+
+
+def test_ivfpq_overwrite_replaces_the_whole_index(spark, clustered_embeddings, tmp_path):
+    """Rewriting an index with fewer cells leaves only the new cells,
+    even when the session defaults to dynamic partition overwrite,
+    which would keep the old cells beside the new metadata."""
+    from sequali_spark.operators import similarity as sim
+
+    e = clustered_embeddings
+    path = str(tmp_path / "idx")
+    key = "spark.sql.sources.partitionOverwriteMode"
+    mode = spark.conf.get(key)
+    spark.conf.set(key, "dynamic")
+    try:
+        for n_cells in (8, 2):
+            cents = sim.kmeans_centroids(e, n_centroids=n_cells, n_iter=1)
+            books = sim.pq_train_residual(e, cents, n_sample=200, n_iter=2)
+            sim.write_ivfpq_index(
+                sim.ivfpq_encode(e, cents, books), path, quantizers=(cents, books)
+            )
+    finally:
+        spark.conf.set(key, mode)
+    back = sim.read_ivfpq_index(spark, path)
+    assert back.count() == e.count()
+    assert back.select("centroid").distinct().count() == 2
+    assert sim.read_ivfpq_meta(spark, path)["centroids"].shape[0] == 2
+
+
+def test_ivfpq_meta_read_runs_no_spark_job(spark, clustered_embeddings, tmp_path):
+    """The index metadata is read on the driver: read_ivfpq_meta starts
+    no Spark job (a parquet sidecar read was one or more per call)."""
+    from sequali_spark.operators import similarity as sim
+
+    e = clustered_embeddings
+    cents = sim.kmeans_centroids(e, n_centroids=4, n_iter=1)
+    books = sim.pq_train_residual(e, cents, n_sample=200, n_iter=2)
+    path = str(tmp_path / "idx")
+    sim.write_ivfpq_index(
+        sim.ivfpq_encode(e, cents, books), path, quantizers=(cents, books)
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("ivfpq-meta", "read_ivfpq_meta must run no job")
+    try:
+        meta = sim.read_ivfpq_meta(spark, path)
+        assert list(sc.statusTracker().getJobIdsForGroup("ivfpq-meta")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert meta["residual"] and meta["appended_batches"] == 0
+    assert meta["baseline_top1_sim"] is None
+    assert meta["centroids"].shape == cents.shape
 
 
 def test_pinned_sketch_reuse_and_refresh(spark, tmp_path):

@@ -456,7 +456,8 @@ def test_stage_checkpoint_helpers(spark, tmp_path):
     schema = "k string, v int"
     rows = [("b", 2), ("a", 1)]  # two rows: exercises order-insensitivity
     write_stage_manifest(spark, man, rows, schema)
-    assert os.path.isfile(man) and not os.path.exists(man + ".tmp")
+    assert os.path.isfile(man)
+    assert not os.path.exists(str(tmp_path / ".stage_manifest.tmp"))
     assert json.load(open(man)) == {"schema": schema, "rows": [["a", 1], ["b", 2]]}
     assert not stage_is_reusable(spark, data, man, rows, schema)  # no data
     spark.range(3).write.parquet(data)

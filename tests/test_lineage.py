@@ -6,6 +6,8 @@ processed twice."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -57,6 +59,25 @@ def test_rerun_is_idempotent(spark, pages, tmp_path):
     # no duplicate rows in output
     total = spark.read.parquet(out).count()
     assert total == pages.count()
+
+
+def test_lineage_dir_may_be_a_uri(spark, pages, tmp_path, monkeypatch):
+    """The lineage dir is read and written through the job's
+    FileSystem, so a URI (``file://`` here; ``hdfs://`` or ``s3a://`` on
+    a cluster) resumes: the second run finds every unit done, and no
+    cwd-relative ``file:`` directory appears."""
+    monkeypatch.chdir(tmp_path)
+    days = sorted(
+        str(r["d"])
+        for r in pages.select(F.to_date("warc_ts").alias("d")).distinct().collect()
+    )[:2]
+    subset = pages.filter(F.to_date("warc_ts").cast("string").isin(days))
+    out = str(tmp_path / "labels")
+    lin = tmp_path.as_uri() + "/lineage"
+    assert lineage.run_resumable(spark, subset, out, lin) == days
+    assert lineage.run_resumable(spark, subset, out, lin) == []
+    assert lineage.completed_units(spark, lin) == set(days)
+    assert not [f for f in os.listdir(tmp_path) if f.startswith("file:")]
 
 
 def test_concurrent_writers_on_disjoint_units(spark, pages, tmp_path):

@@ -13,6 +13,11 @@ The second scan flags every call of the checkpoint protocol's steps
 sequali_spark/runtime/checkpoint.py: their crash order lives in
 ``checkpoint.stage`` and a job that calls the steps itself can get it
 wrong.
+
+The third flags the Hadoop FileSystem API outside its two owners:
+runtime/checkpoint.py for driver-side files and runtime/pins.py for
+the fingerprint listings.  Every other module reads, writes, renames
+and deletes through checkpoint's helpers.
 """
 
 from __future__ import annotations
@@ -122,3 +127,28 @@ def stage_step_calls(root: str = REPO) -> list[str]:
 
 def test_stage_protocol_has_one_owner():
     assert stage_step_calls() == []
+
+
+HADOOP_FS = ("getFileSystem", "org.apache.hadoop.fs.Path")
+HADOOP_FS_OWNERS = {
+    STAGE_OWNER,
+    os.path.join(PACKAGE, "runtime", "pins.py"),
+}
+
+
+def hadoop_fs_uses(root: str = REPO) -> list[str]:
+    """Every source line naming a HADOOP_FS entry outside
+    HADOOP_FS_OWNERS, as ``path:line name``."""
+    hits = []
+    for path in _sources(root):
+        rel = os.path.relpath(path, root)
+        if rel in HADOOP_FS_OWNERS:
+            continue
+        with open(path, encoding="utf-8") as f:
+            for n, line in enumerate(f, 1):
+                hits += [f"{rel}:{n} {name}" for name in HADOOP_FS if name in line]
+    return hits
+
+
+def test_hadoop_filesystem_has_two_owners():
+    assert hadoop_fs_uses() == []

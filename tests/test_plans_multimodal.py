@@ -450,23 +450,23 @@ def test_spread_for_python_is_conditional(spark):
 
 
 def test_plan_size_estimate_api(spark, tmp_path):
-    """spread's size-aware width reads the optimizer's size estimate
-    through a PRIVATE Spark API,
+    """spread's size-aware width and fit_width read the optimizer's
+    size estimate through session.estimated_bytes, which calls a
+    PRIVATE Spark API,
     ``_jdf.queryExecution().optimizedPlan().stats().sizeInBytes()``.
-    Pin both the call and what it returns for a parquet scan (the sum of
-    the data files' bytes), so a Spark upgrade that moves or changes it
-    fails here instead of silently re-sizing every spread Python
-    stage."""
+    Pin what it returns for a parquet scan (the sum of the data files'
+    bytes), so a Spark upgrade that moves or changes it fails here
+    instead of silently re-sizing every spread Python stage."""
     import os
 
-    from sequali_spark.session import spread
+    from sequali_spark.session import estimated_bytes, spread
 
     p = str(tmp_path / "t")
     spark.range(2000).selectExpr("id", "repeat('x', 200) as s").coalesce(
         1
     ).write.parquet(p)
     df = spark.read.parquet(p)
-    est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    est = estimated_bytes(df)
     on_disk = sum(
         os.path.getsize(os.path.join(p, f))
         for f in os.listdir(p)
