@@ -37,12 +37,14 @@ if _REPO not in os.environ.get("PYTHONPATH", "").split(os.pathsep):
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sequali_spark.sources.tables import load
+
 
 def _pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministically lift the driver's documents table into the
     canonical pages shape (url, warc_ts, html, text, lang) so the
     flagship quality pipeline can run on driver-provided data."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load(spark, sf_dir, "documents")
     return docs.select(
         F.concat(
             F.lit("https://"), F.col("source"), F.lit(".example.org/doc-"), F.col("doc_id")
@@ -117,7 +119,7 @@ def _doc_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from sequali_spark.session import spread
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     # conditional small-input CPU spread (no-op when the scan already
     # decomposes — never coalesces a big corpus), width sized to
     # ~128 KB of source bytes per task (r9, see session.spread)
@@ -151,7 +153,7 @@ def _doc_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from sequali_spark.session import spread
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     docs = spread(docs, bytes_per_task=128 * 1024)
 
     def _batches(it):
@@ -213,7 +215,7 @@ def _doc_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from sequali_spark.session import spread
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     docs = spread(docs, bytes_per_task=128 * 1024)
 
     def _batches(it):
@@ -253,7 +255,7 @@ def _media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _doc_corpus_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A13 Summary finalize: one-row corpus rollup, oracle-checked."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = load(spark, sf_dir, "documents")
     return d.agg(
         F.count("*").alias("docs"),
         F.sum("n_chars").cast("long").alias("total_chars"),
@@ -305,7 +307,7 @@ def _emb_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     so this checks plumbing and determinism, not recall."""
     from sequali_spark.operators.similarity import pq_topk_for
 
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    e = load(spark, sf_dir, "embeddings")
     return pq_topk_for(e, n_queries=10, k=5, rerank_factor=10)
 
 
@@ -318,7 +320,7 @@ def _emb_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     structural identity (tests/test_dedup_recall.py)."""
     from sequali_spark.operators.similarity import ivfpq_topk_for
 
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    e = load(spark, sf_dir, "embeddings")
     return ivfpq_topk_for(e, n_queries=10, k=5, n_centroids=16, n_probe=8, rerank_factor=10)
 
 

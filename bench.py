@@ -196,10 +196,11 @@ def pipeline_throughput(cpus: int, n_rows: int) -> dict:
     -> parquet label sink.  Warmup pass first (python workers + models),
     then the timed pass."""
     from sequali_spark.pipeline import quality_pipeline
+    from sequali_spark.sources.tables import read
 
     src = ensure_pages_parquet(n_rows)
     spark = _spark(cpus)
-    pages = spark.read.parquet(src)
+    pages = read(spark, src)
     n = pages.count()
     sink = f"/tmp/sequali_bench_labels_{cpus}"
 
@@ -216,7 +217,7 @@ def pipeline_throughput(cpus: int, n_rows: int) -> dict:
         job()  # best-of-5 estimates true capability
         samples.append(time.time() - t0)
     elapsed = min(samples)
-    kept = spark.read.parquet(sink).filter("keep").count()
+    kept = read(spark, sink).filter("keep").count()
     spark.stop()
     return {
         "cpus": cpus,

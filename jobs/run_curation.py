@@ -94,9 +94,10 @@ def curate(
     even when other members are clean (the 'filter -> dedup' workflow
     implies a surviving representative when one exists)."""
     from sequali_spark.operators import dedup, textqc
+    from sequali_spark.sources.tables import load
 
     if docs is None:
-        docs = textqc.load(spark, sf_dir, "documents")
+        docs = load(spark, sf_dir, "documents")
 
     gates = textqc.quality_score(spark, sf_dir, docs=docs).select(
         "doc_id", "gates_passed"
@@ -234,9 +235,9 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from sequali_spark.operators import textqc
     from sequali_spark.runtime import checkpoint
     from sequali_spark.session import fit_width, get_spark
+    from sequali_spark.sources.tables import load, read
 
     t_main0 = time.time()
     spark = get_spark(app_name="sequali_curation")
@@ -257,7 +258,7 @@ def main() -> None:
         # project + type-pin the external benchmark table: extra columns
         # would make the theta-join's doc_id/text references ambiguous,
         # and a string probe_doc would null out the id comparison
-        probes = spark.read.parquet(args.probes).select(
+        probes = read(spark, args.probes).select(
             F.col("probe_doc").cast("long").alias("probe_doc"),
             F.col("probe").cast("string").alias("probe"),
         )
@@ -269,7 +270,7 @@ def main() -> None:
     # file_fingerprint would fall back to the full content scan the r8
     # change exists to avoid (measured: the fallback silently re-added
     # the 6-7 s serial pre-stage pass).
-    docs = textqc.load(spark, args.input, "documents")
+    docs = load(spark, args.input, "documents")
     fit_width(docs)
 
     manifest_rows = _manifest(args, probes, docs)

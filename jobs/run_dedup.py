@@ -63,9 +63,10 @@ def main() -> None:
     from sequali_spark.operators import dedup
     from sequali_spark.runtime import checkpoint
     from sequali_spark.session import fit_width, get_spark
+    from sequali_spark.sources.tables import load, read
 
     spark = get_spark(app_name="sequali_dedup")
-    docs = spark.read.parquet(f"{args.input}/documents.parquet")
+    docs = load(spark, args.input, "documents")
     fit_width(docs)
 
     # fingerprint the backing file listing (path, length, mtime): an
@@ -98,7 +99,7 @@ def main() -> None:
         out = dedup.minhash_pairs_from_sigs(rep_sigs, threshold=args.threshold)
     out.write.mode("overwrite").parquet(args.output)
 
-    result = spark.read.parquet(args.output)
+    result = read(spark, args.output)
     stats = {
         "input_docs": n_docs,
         "exact_reps": labeled.filter(F.col("doc_id") == F.col("rep")).count(),
@@ -107,11 +108,12 @@ def main() -> None:
         "threshold": args.threshold,
     }
     if args.mode == "keepers":
-        stats["clustered_docs"] = result.count()
-        stats["clusters"] = result.select("component").distinct().count()
-        stats["keepers"] = int(
-            result.agg(F.sum(F.col("keep_doc").cast("long"))).collect()[0][0] or 0
-        )
+        row = result.agg(
+            F.count(F.lit(1)).alias("clustered_docs"),
+            F.count_distinct("component").alias("clusters"),
+            F.sum(F.col("keep_doc").cast("long")).alias("keepers"),
+        ).first()
+        stats.update(row.asDict(), keepers=int(row["keepers"] or 0))
         stats["cc_rounds"] = cc_stats.get("rounds")
         # reconciliation: exactly one keeper per cluster.  A hard raise,
         # not assert — python -O / PYTHONOPTIMIZE strips asserts and

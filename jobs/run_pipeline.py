@@ -51,6 +51,7 @@ def main() -> None:
 
     from sequali_spark.operators.aggregates import corpus_report
     from sequali_spark.session import fit_width, get_spark
+    from sequali_spark.sources.tables import read
 
     spark = get_spark(app_name=f"sequali_pipeline_{args.mode}")
 
@@ -65,15 +66,15 @@ def main() -> None:
     if args.mode == "report":
         if not args.report:
             raise SystemExit("--mode report requires --report <dest.json>")
-        report = corpus_report(spark.read.parquet(args.input))
+        report = corpus_report(read(spark, args.input))
         with open(args.report, "w") as f:
             json.dump(report, f, indent=0, sort_keys=True)
         print(json.dumps({"re_rendered": True, "blocks": sorted(report)}))
         return
 
-    from sequali_spark.pipeline import quality_pipeline, read_pages
+    from sequali_spark.pipeline import quality_pipeline
 
-    pages = read_pages(spark, args.input)
+    pages = read(spark, args.input)
     fit_width(pages)
 
     if args.mode == "resumable":

@@ -44,6 +44,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from bench import child_json, ensure_pages_parquet, scaling_ladder  # noqa: E402
+from sequali_spark.sources.tables import read  # noqa: E402
 
 
 def _shuffle_bytes(spark) -> tuple[int, int]:
@@ -67,7 +68,7 @@ def _docs_from_pages(spark, src: str):
     odds at 2M rows ~1e-7."""
     from pyspark.sql import functions as F
 
-    pages = spark.read.parquet(src)
+    pages = read(spark, src)
     host = F.regexp_extract("url", r"https://([^/]+)/", 1)
     return pages.select(
         F.abs(F.xxhash64("url", "text")).alias("doc_id"),
@@ -115,7 +116,7 @@ def run_dedup(rows: int) -> dict:
             "spark.sql.files.maxPartitionBytes": str(16 * 1024 * 1024),
         },
     )
-    fit_width(spark.read.parquet(src))  # the width the jobs would pick
+    fit_width(read(spark, src))  # the width the jobs would pick
     docs = _docs_from_pages(spark, src).select("doc_id", "text")
     n_docs = docs.count()
 
@@ -373,7 +374,7 @@ def run_ann(rows: int) -> dict:
     path = f"/tmp/sequali_atscale_emb_{rows}"
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         _clustered_embeddings(spark, rows).write.mode("overwrite").parquet(path)
-    e = spark.read.parquet(path)
+    e = read(spark, path)
 
     t0 = time.time()
     centroids = similarity.kmeans_centroids(e, n_centroids=n_centroids, n_iter=2)
@@ -490,7 +491,7 @@ def run_ann_disk(rows: int) -> dict:
     path = f"/tmp/sequali_atscale_emb_{rows}"
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         _clustered_embeddings(spark, rows).write.mode("overwrite").parquet(path)
-    e = spark.read.parquet(path)
+    e = read(spark, path)
 
     t0 = time.time()
     centroids = similarity.kmeans_centroids(e, n_centroids=n_centroids, n_iter=2)
@@ -701,7 +702,7 @@ def _paragraph_leg(docs_dir: str) -> dict:
         app_name="atscale_paragraph",
         extra_conf={"spark.ui.enabled": "true"},
     )
-    docs = spark.read.parquet(os.path.join(docs_dir, "documents.parquet"))
+    docs = read(spark, os.path.join(docs_dir, "documents.parquet"))
     t0 = time.time()
     out = paragraph_dedup(docs, words_per_para=20)
     agg = out.agg(

@@ -16,9 +16,9 @@ from pyspark.sql import functions as F
 
 from pyspark.sql import Window as W
 
-from sequali_spark.operators.textqc import load
 from sequali_spark.runtime import pins
 from sequali_spark.session import spread
+from sequali_spark.sources.tables import load
 
 # --- exact dedup (SQL-expressible) -----------------------------------------
 
@@ -526,7 +526,7 @@ def collapse_exact_reps(sketch: DataFrame, id_col: str = "doc_id") -> DataFrame:
     columns within a digest group.  MinHash does not come here: its
     array columns turn this into a SortAggregate over the full sketch
     frame, so it elects reps on a slim (id, digest) frame instead
-    (exact_rep_labeled_sigs, minhash_pairs_for)."""
+    (exact_rep_labeled_sigs)."""
     others = [c for c in sketch.columns if c not in (id_col, "digest")]
     return (
         sketch.groupBy("digest")
@@ -634,27 +634,14 @@ def minhash_pairs_for(
     exact-dedup representatives only (see exact_rep_labeled_sigs) so the
     cap only ever engages on pathological near-dup clusters.
     """
-    sigs = minhash_signatures(docs, id_col=id_col, text_col=text_col)
     if collapse_exact:
-        # r9: rep election on a SLIM (id, digest) frame from a second
-        # pure-JVM md5 scan + a left-semi join on the unique id — the
-        # same discipline exact_rep_labeled_sigs adopted in r8.  The
-        # previous collapse_exact_reps call here compiled to a
-        # SortAggregate (first(signature)/first(bands) carry array
-        # buffers, which HashAggregate cannot hold), sorting the full
-        # ~0.6 KB/doc sketch frame on both sides of a digest exchange;
-        # the slim path hash-aggregates 50 B rows and exchanges the
-        # sketch frame once, unsorted, by a skewless unique key.
-        reps = (
-            _with_digest(docs, id_col, text_col)
-            .select(id_col, "digest")
-            .groupBy("digest")
-            .agg(F.min(id_col).alias(id_col))
-            .select(id_col)
+        sigs = (
+            exact_rep_labeled_sigs(docs, id_col=id_col, text_col=text_col)
+            .filter(F.col(id_col) == F.col("rep"))
+            .drop("rep", "digest")
         )
-        sigs = sigs.join(
-            reps.hint("shuffle_hash"), id_col, "left_semi"
-        ).drop("digest")
+    else:
+        sigs = minhash_signatures(docs, id_col=id_col, text_col=text_col)
     # fingerprint from the RAW docs frame (see pins.fingerprint) plus
     # every structural parameter that shapes the pinned sketch; threshold
     # and bucket/ring knobs apply downstream of the pin and are excluded

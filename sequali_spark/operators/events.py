@@ -14,7 +14,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from sequali_spark.operators import money
-from sequali_spark.operators.textqc import load
+from sequali_spark.sources.tables import load
 
 
 def hourly_report(spark: SparkSession, sf_dir: str) -> DataFrame:

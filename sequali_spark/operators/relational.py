@@ -19,7 +19,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from sequali_spark.operators import money
-from sequali_spark.operators.textqc import load
+from sequali_spark.sources.tables import load
 
 
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -16,8 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from sequali_spark.operators.textqc import load
 from sequali_spark.runtime import checkpoint
+from sequali_spark.sources.tables import load, read
 
 EMB_DIM = 64
 
@@ -896,7 +896,7 @@ def rebuild_ivfpq_index(
         quantizers=(cents, books),
         baseline_top1_sim=baseline,
     )
-    n_vectors = spark.read.parquet(staging).count()
+    n_vectors = read(spark, staging).count()
 
     checkpoint.delete(spark, trash)  # a previous swap's step 3 never ran
     checkpoint.rename(spark, path, trash)
@@ -932,7 +932,7 @@ def read_ivfpq_index(spark: SparkSession, path: str) -> DataFrame:
     guess: a wrong re-stamp would silently pass the mismatch guard and
     corrupt scores)."""
     flag = read_ivfpq_meta(spark, path)["residual"]
-    df = spark.read.parquet(path).select(
+    df = read(spark, path).select(
         "vec_id", F.col("centroid").cast("long").alias("centroid"), "codes"
     )
     return df.withMetadata("codes", {"residual": bool(flag)})

@@ -132,9 +132,3 @@ def scrubbed(metric_df: DataFrame, pages: DataFrame | None = None) -> DataFrame:
         .join(src, "url")
         .select("url", F.coalesce("scrubbed_text", "_orig").alias("scrubbed_text"))
     )
-
-
-def read_pages(spark: SparkSession, path: str) -> DataFrame:
-    """Scan seam: parquet today; an Iceberg catalog table takes the same
-    shape via sources.tables.TableIO (SURVEY.md §7.4)."""
-    return spark.read.parquet(path)

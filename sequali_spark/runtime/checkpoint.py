@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sequali_spark.runtime import pins
+from sequali_spark.sources.tables import read
 
 
 def _fs_path(spark: SparkSession, path: str):
@@ -221,4 +222,4 @@ def stage(
         invalidate_stage_manifest(spark, manifest_path)
         build().write.mode("overwrite").parquet(path)
         write_stage_manifest(spark, manifest_path, manifest_rows, manifest_schema)
-    return spark.read.parquet(path), reused
+    return read(spark, path), reused

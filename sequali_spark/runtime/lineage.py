@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
 
 from sequali_spark.runtime import checkpoint
+from sequali_spark.sources.tables import TableIO
 
 LINEAGE_SCHEMA = (
     "unit string, status string, docs_seen long, docs_kept long, "
@@ -126,12 +127,7 @@ def run_resumable(
                 "docs_scrubbed"
             ),
         )
-        (
-            observed.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("day")
-            .parquet(out_dir)
-        )
+        TableIO(spark).write_partitioned(observed, out_dir, "day")
         got = obs.get
         _append_lineage(
             spark,

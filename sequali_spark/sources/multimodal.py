@@ -40,6 +40,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sequali_spark.sources.tables import load
+
 MEDIA_SCHEMA = (
     "media_id string, kind string, payload binary, "
     "meta struct<width:int, height:int, duration_ms:int, mime:string>"
@@ -485,7 +487,7 @@ def media_from_documents(spark, sf_dir: str) -> DataFrame:
     bytes of the text (an opaque blob as far as this module is
     concerned), kind cycles image/audio/video, metadata derived from
     n_chars — all pure functions, so oracle SQL can reproduce them."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load(spark, sf_dir, "documents")
     kind = F.element_at(
         F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
         (F.col("doc_id") % 3 + 1).cast("int"),

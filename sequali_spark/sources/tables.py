@@ -1,8 +1,8 @@
 """Table IO seam: parquet today, Iceberg behind the same interface.
 
 The north rule mandates Iceberg tables; the sandbox has no Iceberg
-runtime jar, so every reader/writer in the engine goes through this
-seam (SURVEY.md §7.4 'Iceberg in-sandbox').  The Iceberg
+runtime jar, so every table read and every partitioned overwrite in
+the engine goes through this seam (SURVEY.md §7.4 'Iceberg in-sandbox').  The Iceberg
 implementation differs only in: catalog-name paths instead of file
 paths, MERGE INTO for idempotent label upserts (instead of dynamic
 partition overwrite), and hidden partitioning (days(warc_ts),
@@ -107,7 +107,7 @@ class TableIO:
         from pyspark.errors import AnalysisException
 
         try:
-            existing = self.spark.read.parquet(ref)
+            existing = self.read(ref)
         except AnalysisException:
             df.write.mode("overwrite").parquet(ref)
             return
@@ -126,6 +126,17 @@ class TableIO:
             ") USING iceberg\n"
             "PARTITIONED BY (days(warc_ts), bucket(64, url))"
         )
+
+
+def read(spark: SparkSession, ref: str) -> DataFrame:
+    """Read one table.  Parquet by default: no per-read JVM probe for
+    the Iceberg runtime."""
+    return TableIO(spark).read(ref)
+
+
+def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The ``<name>.parquet`` table under a scale-factor directory."""
+    return read(spark, f"{sf_dir}/{name}.parquet")
 
 
 def get_table_io(spark: SparkSession, prefer_iceberg: bool = True) -> TableIO:

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from sequali_spark.pipeline import PAGES_SCHEMA_DDL as PAGES_SCHEMA, run_metric_stage
 
 
-def read_pages_stream(
+def stream_pages(
     spark: SparkSession, path: str, max_files_per_trigger: int = 4
 ) -> DataFrame:
     """File-source stream: each new parquet drop under ``path`` is a
@@ -100,7 +100,7 @@ def run_stream_once(
     into the labels sink, exactly-once via the streaming checkpoint —
     the streaming twin of runtime.lineage: the checkpoint directory
     plays the lineage table's role and resume-on-restart is free."""
-    stream = read_pages_stream(spark, src_path)
+    stream = stream_pages(spark, src_path)
     labels = streaming_labels(stream, output_columns=output_columns)
     q = (
         labels.writeStream.format("parquet")

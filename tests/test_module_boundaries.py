@@ -18,6 +18,11 @@ The third flags the Hadoop FileSystem API outside its two owners:
 runtime/checkpoint.py for driver-side files and runtime/pins.py for
 the fingerprint listings.  Every other module reads, writes, renames
 and deletes through checkpoint's helpers.
+
+The fourth flags every table read outside sequali_spark/sources/tables.py
+(also in bench.py and scripts/), and the fifth every operator that
+imports ``load`` from another operator module instead of from
+sources.tables.
 """
 
 from __future__ import annotations
@@ -152,3 +157,50 @@ def hadoop_fs_uses(root: str = REPO) -> list[str]:
 
 def test_hadoop_filesystem_has_two_owners():
     assert hadoop_fs_uses() == []
+
+
+TABLE_OWNER = os.path.join(PACKAGE, "sources", "tables.py")
+
+
+def table_reads(root: str = REPO) -> list[str]:
+    """Every ``.read.parquet(`` line outside TABLE_OWNER, in the program
+    sources plus bench.py and scripts/, as ``path:line``."""
+    paths = _sources(root) + [os.path.join(root, "bench.py")]
+    for d, _, files in os.walk(os.path.join(root, "scripts")):
+        paths += [os.path.join(d, f) for f in sorted(files) if f.endswith(".py")]
+    hits = []
+    for path in paths:
+        rel = os.path.relpath(path, root)
+        if rel == TABLE_OWNER:
+            continue
+        with open(path, encoding="utf-8") as f:
+            hits += [f"{rel}:{n}" for n, line in enumerate(f, 1) if ".read.parquet(" in line]
+    return hits
+
+
+def test_table_reads_have_one_owner():
+    assert table_reads() == []
+
+
+def operator_load_imports(root: str = REPO) -> list[str]:
+    """Every ``load`` an operator module imports from another operator
+    module, as ``path:line``."""
+    ops = os.path.join(root, PACKAGE, "operators")
+    hits = []
+    for path in _sources(root):
+        if os.path.dirname(path) != ops:
+            continue
+        rel = os.path.relpath(path, root)
+        current = f"{PACKAGE}.operators.{os.path.basename(path)[:-3]}"
+        for node in ast.walk(ast.parse(open(path, encoding="utf-8").read(), path)):
+            if (
+                isinstance(node, ast.ImportFrom)
+                and _resolve(node, current, False).startswith(f"{PACKAGE}.operators.")
+                and any(a.name == "load" for a in node.names)
+            ):
+                hits.append(f"{rel}:{node.lineno}")
+    return hits
+
+
+def test_operators_load_tables_from_the_seam():
+    assert operator_load_imports() == []

@@ -103,7 +103,7 @@ def test_streaming_host_state(spark, pages_tiny, tmp_path):
     src = str(tmp_path / "drops")
     pages_df(spark, pages_tiny, partitions=4).write.parquet(src)
 
-    pages_stream = st.read_pages_stream(spark, src)
+    pages_stream = st.stream_pages(spark, src)
     labels = st.streaming_labels(
         pages_stream, output_columns=["url", "keep", "n_bytes"]
     )

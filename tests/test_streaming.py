@@ -46,7 +46,7 @@ def test_streaming_exactly_once_restart(spark, pages_tiny, src, tmp_path):
 
 
 def test_streaming_windowed_report(spark, src, tmp_path):
-    stream = st.read_pages_stream(spark, src)
+    stream = st.stream_pages(spark, src)
     rep = st.streaming_time_report(stream, window="1 day")
     q = (
         rep.writeStream.format("memory")
@@ -72,7 +72,7 @@ def test_streaming_dedup_labels(spark, pages_tiny, tmp_path):
     pages_df(spark, pages_tiny, partitions=2).write.parquet(src)
     pages_df(spark, pages_tiny, partitions=2).write.mode("append").parquet(src)
 
-    stream = st.read_pages_stream(spark, src)
+    stream = st.stream_pages(spark, src)
     labels = st.streaming_dedup_labels(stream, output_columns=["url", "keep"])
     q = (
         labels.writeStream.format("memory")
