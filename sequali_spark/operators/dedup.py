@@ -1289,33 +1289,31 @@ def connected_components(
     """
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    # Materialize the INPUT once before the union below embeds it twice.
-    # ``pairs`` is typically the expensive LSH-verify chain; the
-    # symmetrized edge union contains that subtree in BOTH branches, and
-    # AQE materializes the branches as CONCURRENT jobs without exchange
-    # reuse across them — measured r6 (event-log audit at 1M rows): the
-    # 3.9 GB verify re-attach exchange and the 339 MB sketch exchanges
-    # below it each ran 2-4x, ~2x the whole decision pipeline's shuffle
-    # (12.4 GB where ~6 GB is inherent).  One eager noop-sink pass pins
-    # the (small, verified-pairs-only) frame; both union branches then
-    # read the cache.  Same discipline as pins.pin.
-    pairs = pairs.select("doc_a", "doc_b").persist()
+    # Symmetric edge list in ONE pass over ``pairs``: each pair emits
+    # both directions through one explode, so the (typically expensive
+    # LSH-verify) chain under ``pairs`` appears once in the plan.  A
+    # two-branch union would embed it twice, and AQE runs such branches
+    # as concurrent jobs without exchange reuse (r6, 1M rows: the verify
+    # exchanges ran 2-4x).  The first round's count fills the edge cache.
     edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionByName(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
+        pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
+                    F.struct(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")),
+                )
+            ).alias("e")
+        )
+        .select("e.src", "e.dst")
         .distinct()
         .persist()
     )
     changed = 0
     rounds = 0
     labels = None
-    # everything that can RUN (the eager pairs materialization, the
-    # rounds) lives inside the try so a failure at any point still
-    # releases both pins (code-review r6: the eager writes used to
-    # precede the try and an OOM there leaked them for the session's
-    # lifetime)
+    # everything that can RUN (the rounds) lives inside the try so a
+    # failure at any point still releases the edge cache
     try:
-        pairs.write.format("noop").mode("overwrite").save()
         for _ in range(max_iter):
             rounds += 1
             if labels is None:
@@ -1381,7 +1379,6 @@ def connected_components(
         return labels.orderBy("doc_id")
     finally:
         edges.unpersist()
-        pairs.unpersist()
 
 
 def dedup_keepers(
